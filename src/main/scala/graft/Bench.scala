@@ -1,5 +1,5 @@
 package graft
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Locale
 import org.apache.spark.sql.SparkSession
 object Bench {
@@ -106,14 +106,7 @@ object Bench {
     // per-query data. BENCH_LAST_c<cpus>.json survives runs at other core
     // counts, so both the c32 and c8 per-query maps outlive the session
     // (and get committed as round artifacts). Stdout contract unchanged.
-    val detailCopy = {
-      val p = Paths.get(outPath)
-      val name = p.getFileName.toString
-      val base = if (name.endsWith(".json")) name.dropRight(5) else name
-      p.resolveSibling(s"${base}_c$cpus.json")
-    }
-    try Files.writeString(detailCopy, full + "\n")
-    catch { case scala.util.control.NonFatal(_) => () }
+    writeDetailCopy(outPath, cpus, full + "\n")
     spark.stop()
     // The LAST stdout line is a compact summary (~120 chars) that can
     // never outgrow the tail capture; it names the file holding the
@@ -121,6 +114,27 @@ object Bench {
     // unit-tested to stay < 1900 chars even with pathological inputs.
     println(summaryLine(total, results.size, sfDir, outPath, reps, failed.size))
   }
+
+  /** Path of the per-core-count detail copy, `<out>_c<cpus>.json` — or
+    * None when the out name already ends in `_c<cpus>`: that file IS the
+    * per-core copy, and a second one would be a `_c8_c8` duplicate. */
+  private[graft] def detailCopyPath(outPath: String, cpus: String): Option[Path] = {
+    val p = Paths.get(outPath)
+    val name = p.getFileName.toString
+    val base = if (name.endsWith(".json")) name.dropRight(5) else name
+    if (base.endsWith(s"_c$cpus")) None else Some(p.resolveSibling(s"${base}_c$cpus.json"))
+  }
+
+  /** Writes the detail copy. A failed write is reported on stderr and does
+    * not fail the run: the main detail file and the stdout summary line
+    * are already the run's result. */
+  private[graft] def writeDetailCopy(outPath: String, cpus: String, content: String): Unit =
+    detailCopyPath(outPath, cpus).foreach { copy =>
+      try Files.writeString(copy, content)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"bench: detail copy $copy not written: $e")
+      }
+    }
 
   // Millisecond precision: box-level variance is ±30%, finer digits are noise.
   private def fmt(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))

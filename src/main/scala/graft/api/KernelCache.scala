@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The dedup-diagnostic family (`minhash_est_error`,
   * `dedup_method_agreement`, `minhash_containment`,
   * `dedup_threshold_sweep`, `ngram_jaccard`) rebuilds the IDENTICAL
-  * distinct-shingle + MinHash-signature kernel per query — the driver
-  * contract requires per-query self-containment, so at the 10× replica
+  * per-document shingle-set + MinHash-signature kernel per query — each
+  * query must be self-contained, so at the 10× replica
   * the five queries each pay ~20 s rebuilding the same tables. A real
   * deployment running the diagnostic SUITE in one session shouldn't:
   * the kernel result is a pure function of (corpus, grid constants), so

@@ -79,31 +79,37 @@ object Tables {
   private val FanRowsPerSlice = 500L
 
   /** Exact row count from the parquet FOOTERS (driver-side metadata
-    * read, no Spark job), memoized per path — the driver tables are
-    * immutable per session. Handles both single-file tables (the driver
-    * layout) and Spark-written dataset directories. */
-  private val rowCountCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    * read, no Spark job). Handles both single-file tables (as DuckDB
+    * writes them) and Spark-written dataset directories. Memoized per
+    * (path, total file length, newest file mtime): a table rewritten at
+    * the same path — a regenerated replica, a test's temp dir — lists
+    * different file stats and is counted afresh, while an unchanged
+    * table costs one file listing per call. */
+  private val rowCountCache = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
   private def parquetRows(spark: SparkSession, path: String): Long =
-    rowCountCache.computeIfAbsent(path, { p: String =>
-      try {
-        val conf = spark.sessionState.newHadoopConf()
-        val fsPath = new org.apache.hadoop.fs.Path(p)
-        val fs = fsPath.getFileSystem(conf)
-        val files =
-          if (fs.getFileStatus(fsPath).isDirectory)
-            fs.listStatus(fsPath).filter(s => s.isFile &&
-              s.getPath.getName.endsWith(".parquet")).map(_.getPath).toSeq
-          else Seq(fsPath)
+    try {
+      val conf = spark.sessionState.newHadoopConf()
+      val fsPath = new org.apache.hadoop.fs.Path(path)
+      val fs = fsPath.getFileSystem(conf)
+      val status = fs.getFileStatus(fsPath)
+      val files =
+        if (status.isDirectory)
+          fs.listStatus(fsPath).filter(s => s.isFile &&
+            s.getPath.getName.endsWith(".parquet")).toSeq
+        else Seq(status)
+      val key = (path, files.map(_.getLen).sum,
+        files.map(_.getModificationTime).foldLeft(0L)(math.max))
+      rowCountCache.computeIfAbsent(key, { _ =>
         var total = 0L
         files.foreach { f =>
           val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
           try total += reader.getRecordCount
           finally reader.close()
         }
         java.lang.Long.valueOf(total)
-      } catch { case scala.util.control.NonFatal(_) => java.lang.Long.valueOf(0L) }
-    })
+      })
+    } catch { case scala.util.control.NonFatal(_) => 0L }
 
   /** Adaptive post-scan fan-out for CPU-heavy per-row pipelines (r19
     * optimization round, guide §2.5 "one huge unsplittable file →

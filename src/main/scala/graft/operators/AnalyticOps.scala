@@ -644,8 +644,11 @@ object AnalyticOps {
     // project early (guide §2.3): the plain form shuffled every events
     // column (including the JSON props payload) through its window
     // exchange; only these four are ever read downstream
+    // a null ts gets its own bucket below every hour, so its rows rank
+    // first in their type exactly as the plain window's nulls-first order
+    // puts them (a null bucket would never equi-join its offset)
     val ev = events.select(col("event_id"), col("event_type"), col("value"),
-      col("ts"), expr("unix_timestamp(ts) DIV 3600").as("bb"))
+      col("ts"), coalesce(expr("unix_timestamp(ts) DIV 3600"), lit(Long.MinValue)).as("bb"))
     // per-(type, bucket) row counts — metadata-sized (types × hours)
     val counts = ev.groupBy(col("event_type"), col("bb"))
       .agg(count(lit(1)).as("bcnt"))

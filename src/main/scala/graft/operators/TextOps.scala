@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.TextFunctions.{minhash_pieces, word_shingles}
 import graft.model.Tables
 
 /** Training-data text operators over `documents` (north-star extensions —
@@ -69,12 +70,15 @@ object TextOps {
   }
 
   // -------------------------------------------------------------- MinHash
-  /** Word n-gram shingles of the normalized text, exploded — the base of
-    * the MinHash family. Word shingles, not character shingles: with a
-    * small shared vocabulary, character-k-gram SETS of long documents all
-    * converge to the full vocabulary's k-grams (Jaccard → 1 for unrelated
-    * docs) and LSH candidates explode quadratically; word sequences keep
-    * discriminating. Shuffles on doc_id only. */
+  /** Word n-gram shingles of the normalized text, exploded to one row per
+    * shingle with duplicates kept — the base of the counting operators
+    * (bigram counts, repetition ratios, novelty, decontamination). Word
+    * shingles, not character shingles: with a small shared vocabulary,
+    * character-k-gram SETS of long documents all converge to the full
+    * vocabulary's k-grams (Jaccard → 1 for unrelated docs) and LSH
+    * candidates explode quadratically; word sequences keep
+    * discriminating. The n-grams come from [[graft.functions.WordShingles]],
+    * which pins the oracle's split/slice/join semantics. */
   private def shingles(spark: SparkSession, sfDir: String, n: Int): DataFrame =
     shinglesOf(normed(spark, sfDir), n)
 
@@ -82,12 +86,22 @@ object TextOps {
     * multi-stage queries share ONE scan of `documents` across the shingle
     * and token pipelines. */
   private[operators] def shinglesOf(normDf: DataFrame, n: Int): DataFrame =
-    normDf
-      .select(col("doc_id"), split(col("norm"), " ").as("tokens"))
-      .select(col("doc_id"),
-        // tokens is materialized as its own projection so the split runs
-        // once per document, not once per shingle inside the lambda
-        explode(expr(s"transform(sequence(1, greatest(size(tokens) - ${n - 1}, 1)), i -> array_join(slice(tokens, i, $n), ' '))")).as("sh"))
+    normDf.select(col("doc_id"), explode(word_shingles(col("norm"), n)).as("sh"))
+
+  /** The MinHash kernel's per-document frame `(doc_id, sh)`: each
+    * document's DISTINCT word-3-gram set as one array in its own row. A
+    * document's shingles all come from its one input row, so the set, the
+    * signature ([[signatureFrom]]) and the pair overlap ([[overlapOf]])
+    * are all computed row-locally — no explode, no shuffle on doc_id.
+    *
+    * Precondition: one row per doc_id. Every caller feeds a
+    * `documents`-derived frame (the table, a canonical-survivor subset
+    * of it, or a stream of its rows), where doc_id is the key. */
+  private[operators] def docShinglesOf(normDf: DataFrame): DataFrame =
+    normDf.select(col("doc_id"), array_distinct(word_shingles(col("norm"), 3)).as("sh"))
+
+  private def docShingles(spark: SparkSession, sfDir: String): DataFrame =
+    docShinglesOf(normed(spark, sfDir))
 
   /** MinHash grid parameters. [[MinhashPieces]] independent permutations
     * approximated by 8-hex chunks of seeded md5s (4 chunks per hash —
@@ -104,39 +118,25 @@ object TextOps {
   private val MinhashRows = MinhashPieces / MinhashBands
 
   /** MinHash signature via seeded-hash/k-pieces: md5(`i:`shingle) per
-    * hash i, each yielding four 8-hex chunk pieces. The min-aggregate is
-    * associative → map-side partial aggregation, one shuffle on doc_id
-    * regardless of document size. */
+    * hash i, each yielding four 8-hex chunk pieces, minimized over the
+    * document's shingle set inside its own row. */
   def minhashSignature(spark: SparkSession, sfDir: String): DataFrame =
-    signatureFrom(shingles(spark, sfDir, 3)).drop("sz").orderBy("doc_id")
+    signatureFrom(docShingles(spark, sfDir)).drop("sz").orderBy("doc_id")
 
-  /** Signature from an (optionally pre-persisted) shingle DataFrame.
-    * The min-aggregate is duplicate-insensitive, so feeding DISTINCT
-    * shingles yields the identical signature — which lets `ngramJaccard`
-    * reuse one persisted distinct-shingle base for signature, sizes, and
-    * intersection instead of rebuilding the shingle pipeline per stage.
-    *
-    * The string mins compile to SortAggregate (var-length buffers are
-    * not HashAggregate-eligible). Measured round 10 and deliberately
-    * KEPT: a conv(hex,16,10)-to-long variant does get HashAggregate but
-    * interleaved A/B at sf0.1 was a tie (string 0.60-0.75 s vs long
-    * 0.73-0.75 s) — the per-row conv parse costs what the per-partition
-    * sort saves, and the hex pieces feed md5 band concat directly.
-    *
-    * The same groupBy also carries the per-doc shingle count as `sz` —
-    * callers that need set sizes (ngramJaccard's |A|/|B|, fed distinct
-    * shingles) get them from THIS shuffle instead of aggregating the
-    * shingle base a second time; callers that don't, drop the column. */
-  private[operators] def signatureFrom(sh: DataFrame): DataFrame = {
-    // each seeded hash is computed ONCE in the projection; the per-piece
-    // mins slice its chunks
-    val hashed = sh.select(col("doc_id") +:
-      (0 until MinhashHashes).map(i =>
-        md5(concat(lit(s"$i:"), col("sh"))).as(s"h$i")): _*)
-    val aggs = (0 until MinhashPieces).map { k =>
-      min(substring(col(s"h${k / 4}"), (k % 4) * 8 + 1, 8)).as(s"mh${k + 1}")
-    } :+ count(lit(1)).as("sz")
-    hashed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+  /** Signature `(doc_id, mh1..mh8, sz)` from a per-document shingle frame
+    * ([[docShinglesOf]]): [[graft.functions.MinhashPieces]] takes the
+    * per-piece minimums over the row's array, and `sz` is the set size
+    * (a null shingle counts, as the oracle's `count(*)` does). A
+    * projection — no shuffle and no aggregate, whatever the document
+    * sizes. */
+  private[operators] def signatureFrom(ds: DataFrame): DataFrame = {
+    // the pieces array is projected once; the mh columns slice it
+    val pieces = ds.select(col("doc_id"),
+      minhash_pieces(col("sh"), MinhashPieces).as("p"),
+      size(col("sh")).cast("long").as("sz"))
+    pieces.select(col("doc_id") +:
+      (0 until MinhashPieces).map(k => col("p")(k).as(s"mh${k + 1}")) :+
+      col("sz"): _*)
   }
 
   /** Banded signature rows (doc_id, band_no, bh) from a signature frame
@@ -231,13 +231,14 @@ object TextOps {
       .distinct()
   }
 
-  /** LSH band-bucket candidate pairs from a shingle DataFrame (unsorted —
-    * public queries add their own orderBy). The signature is persisted
-    * EAGERLY: the band self-join consumes it twice in one job, and a lazy
-    * cache would let both branches race to compute the full shingle
-    * pipeline before either populates it. */
-  private def candidatePairsFrom(sh: DataFrame): DataFrame = {
-    val sig = signatureFrom(sh).persist().transform(graft.api.Caches.tracked)
+  /** LSH band-bucket candidate pairs from a per-document shingle frame
+    * ([[docShinglesOf]]; unsorted — public queries add their own
+    * orderBy). The signature is persisted EAGERLY: the band self-join
+    * consumes it twice in one job, and a lazy cache would let both
+    * branches race to compute the shingle pipeline before either
+    * populates it. */
+  private def candidatePairsFrom(ds: DataFrame): DataFrame = {
+    val sig = signatureFrom(ds).persist().transform(graft.api.Caches.tracked)
     sig.count()
     candidatePairsFromSig(sig)
   }
@@ -247,13 +248,13 @@ object TextOps {
     * the 100 TB dedup path: candidates come from a hash join on band
     * keys, never a cross join. */
   def dedupMinhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    candidatePairsFrom(shingles(spark, sfDir, 3)).orderBy("doc_a", "doc_b")
+    candidatePairsFrom(docShingles(spark, sfDir)).orderBy("doc_a", "doc_b")
 
   /** Unsorted LSH candidate pairs (doc_a < doc_b) for graph-shaped
     * consumers ([[GraphOps.triangleCount]]) — same kernel as
     * [[dedupMinhashPairs]] without the presentation sort. */
   private[graft] def candidatePairs(spark: SparkSession, sfDir: String): DataFrame =
-    candidatePairsFrom(shingles(spark, sfDir, 3))
+    candidatePairsFrom(docShingles(spark, sfDir))
 
   /** Exact-dedup-first LSH composition — the PRODUCTION pipeline order
     * for a 100 TB dedup run (the reference's own store dedups by uuid at
@@ -275,7 +276,7 @@ object TextOps {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("norm"))
-    candidatePairsFrom(shinglesOf(canon, 3)).orderBy("doc_a", "doc_b")
+    candidatePairsFrom(docShinglesOf(canon)).orderBy("doc_a", "doc_b")
   }
 
   /** Band-bucket size histogram — the OBSERVABILITY table that sizes
@@ -291,7 +292,7 @@ object TextOps {
     * count-of-counts shape); second pass costs one row per distinct
     * bucket; output ≤ max-bucket-size rows — metadata at any scale. */
   def lshBucketProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    val sizes = bandsOf(signatureFrom(shingles(spark, sfDir, 3)))
+    val sizes = bandsOf(signatureFrom(docShingles(spark, sfDir)))
       .groupBy(col("band_no"), col("bh")).agg(count(lit(1)).as("sz"))
     sizes.groupBy(col("sz"))
       .agg(count(lit(1)).as("n_buckets"))
@@ -394,8 +395,8 @@ object TextOps {
     * side of incremental/streaming dedup. MinHash is an associative min,
     * so the index maintains incrementally as batches land. */
   def signatureIndex(docsDf: DataFrame): DataFrame =
-    bandsOf(signatureFrom(shinglesOf(
-      docsDf.select(col("doc_id"), normCol.as("norm")), 3)))
+    bandsOf(signatureFrom(docShinglesOf(
+      docsDf.select(col("doc_id"), normCol.as("norm")))))
 
   /** The shared verdict kernel: new-side bands equi-join old-side bands
     * (only), each new doc reports its min-id old match or a kept
@@ -436,7 +437,7 @@ object TextOps {
     * eagerly: the band join consumes it twice in one job). */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val isNew = col("doc_id") % 10 === 9
-    val sig = signatureFrom(shingles(spark, sfDir, 3)).persist().transform(graft.api.Caches.tracked)
+    val sig = signatureFrom(docShingles(spark, sfDir)).persist().transform(graft.api.Caches.tracked)
     sig.count()
     val bands = bandsOf(sig)
     verdictsFromBands(
@@ -600,15 +601,6 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Exact n-gram Jaccard for the LSH candidate pairs: distinct 3-gram
-    * sets, intersection via shingle equi-join, |A∪B| = |A|+|B|−|A∩B|.
-    * Join-based — no arrays collected to the driver.
-    *
-    * ONE eagerly-persisted distinct-shingle base feeds all three
-    * consumers (signature→candidates, per-doc sizes, intersection join) —
-    * the shingle pipeline runs exactly once per query instead of once per
-    * consumer (round-2 verdict: the per-stage rebuild made this query
-    * 49% of the whole bench). */
   /** Prefix window for the character-level verify tier: full-document
     * Levenshtein is O(len²) per pair — unbounded at 100 TB — so the
     * standard practice is a fixed window (or banded DP); 64 chars keeps
@@ -629,7 +621,7 @@ object TextOps {
     val base = normed(spark, sfDir).persist().transform(graft.api.Caches.tracked)
     base.count()
     val nb = base.select(col("doc_id"), substring(col("norm"), 1, EditPrefix).as("prefix"))
-    val cand = candidatePairsFrom(shinglesOf(base, 3))
+    val cand = candidatePairsFrom(docShinglesOf(base))
     cand
       .join(nb.as("na"), col("na.doc_id") === col("doc_a"))
       .join(nb.as("nb"), col("nb.doc_id") === col("doc_b"))
@@ -638,6 +630,9 @@ object TextOps {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** Exact n-gram Jaccard for the LSH candidate pairs: distinct 3-gram
+    * sets intersected per pair row ([[overlapOf]]),
+    * |A∪B| = |A|+|B|−|A∩B|. */
   def ngramJaccard(spark: SparkSession, sfDir: String): DataFrame =
     pairOverlap(spark, sfDir)
       .select(col("doc_a"), col("doc_b"),
@@ -667,7 +662,7 @@ object TextOps {
     val base = normed(spark, sfDir).persist().transform(graft.api.Caches.tracked)
     base.count()
     val nb = base.select(col("doc_id"), substring(col("norm"), 1, EditPrefix).as("prefix"))
-    val cand = candidatePairsFrom(shinglesOf(base, 3))
+    val cand = candidatePairsFrom(docShinglesOf(base))
     import org.apache.spark.sql.GraftColumnBridge
     cand
       .join(nb.as("na"), col("na.doc_id") === col("doc_a"))
@@ -696,18 +691,17 @@ object TextOps {
     * df ceiling — they contribute Jaccard mass everywhere and decide
     * nothing); at 20 feeds the exact form is the oracle-honest choice.
     *
-    * The per-doc distinct-shingle base routes through the SAME
-    * `shingles3` session kernel as the dedup-diagnostic family
-    * (bit-neutral: doc-level distinct then source-level distinct equals
-    * source-level distinct directly), so with
-    * `spark.graft.kernel.sessionCache=true` this query joins the
-    * suite's one shared shingle build instead of re-exploding the
-    * corpus. */
+    * The per-doc shingle sets are the `shingles3` session kernel of the
+    * MinHash family ([[docShinglesOf]]; exploding each document's
+    * distinct set and taking the source-level distinct equals the
+    * source-level distinct of all shingles), so with
+    * `spark.graft.kernel.sessionCache=true` this query reads the suite's
+    * one shared shingle build instead of re-shingling the corpus. */
   def sourceOverlapJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = graft.api.KernelCache.getOrBuild(spark, s"shingles3:$sfDir",
-        shingles(spark, sfDir, 3).distinct())
+        docShingles(spark, sfDir))
       .join(docs(spark, sfDir).select(col("doc_id"), col("source")), "doc_id")
-      .select(col("source"), col("sh")).distinct()
+      .select(col("source"), explode(col("sh")).as("sh")).distinct()
       .persist().transform(graft.api.Caches.tracked)
     ss.count()
     val sizes = ss.groupBy(col("source")).agg(count(lit(1)).as("sz"))
@@ -787,56 +781,37 @@ object TextOps {
     * against the exact overlap WITHOUT a second shingle/signature pass
     * (the one-base-per-query rule). */
   private def pairOverlapWithSig(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    // the distinct-shingle and signature kernels route through the
+    // the per-document shingle sets and the signature route through the
     // session cache (r15, spark.graft.kernel.sessionCache, default off):
     // five diagnostic queries share these identical tables, and with the
     // flag on the BUILD runs once per session while each query keeps its
     // own per-query persist/track lifecycle over the cached parquet
-    val s3 = graft.api.KernelCache.getOrBuild(spark, s"shingles3:$sfDir",
-        shingles(spark, sfDir, 3).distinct())
-      .persist().transform(graft.api.Caches.tracked)
-    s3.count()
-    // ONE groupBy over the distinct-shingle base yields both the MinHash
-    // signature (candidate generation) and the exact set sizes `sz` — the
-    // previous separate sizes aggregation was a second full shuffle of s3
+    val ds = graft.api.KernelCache.getOrBuild(spark, s"shingles3:$sfDir",
+      docShingles(spark, sfDir))
     val sig = graft.api.KernelCache.getOrBuild(spark, s"sig3:$sfDir",
-        signatureFrom(s3))
+        signatureFrom(ds))
       .persist().transform(graft.api.Caches.tracked)
     sig.count()
-    val sizes = sig.select(col("doc_id"), col("sz"))
-    val cand = candidatePairsFromSig(sig).persist().transform(graft.api.Caches.tracked)
-    val candCount = cand.count()
-    // Candidates ≪ corpus at scale: semi-filter each side of the
-    // intersection join down to the docs that actually appear in a pair
-    // BEFORE the (doc, shingle) shuffle — without this the pair join
-    // shuffles the whole corpus-wide shingle set, which at 100 TB is the
-    // dominant cost. The candidate doc lists are broadcast only under
-    // the shared row gate (round-10 verdict #3: LSH output is
-    // corpus-dependent — a clone-dense 100 TB corpus can push the pair
-    // table toward corpus scale, and a forced broadcast hint bypasses
-    // Spark's own threshold); above the gate the semi-join runs as a
-    // shuffle, correct either way. The pair count from the persisted
-    // cand materialization bounds both doc lists (≤ 2·pairs distinct
-    // ids), so the gate costs no extra job.
-    val gate = graft.api.GraftConfig.broadcastGateRows(spark)
-    def sideFilter(docs: DataFrame): DataFrame =
-      if (candCount <= gate) broadcast(docs) else docs
-    val aDocs = cand.select(col("doc_a").as("doc_id")).distinct()
-    val bDocs = cand.select(col("doc_b").as("doc_id")).distinct()
-    val xs = s3.join(sideFilter(aDocs), Seq("doc_id"), "left_semi")
-    val ys = s3.join(sideFilter(bDocs), Seq("doc_id"), "left_semi")
-    val inter = cand
-      .join(xs.as("x"), col("x.doc_id") === col("doc_a"))
-      .join(ys.as("y"), col("y.doc_id") === col("doc_b") && col("y.sh") === col("x.sh"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("i"))
-    val overlap = inter
-      .join(sizes.as("sa"), col("sa.doc_id") === col("doc_a"))
-      .join(sizes.as("sb"), col("sb.doc_id") === col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("i"),
-        col("sa.sz").as("sa"), col("sb.sz").as("sb"))
-    (sig, overlap)
+    (sig, overlapOf(candidatePairsFromSig(sig), ds))
   }
+
+  /** Exact overlap of candidate pairs `(doc_a, doc_b)` over a per-document
+    * shingle frame ([[docShinglesOf]]): each pair row picks up both
+    * documents' sets and intersects them in place — `i` counts the shared
+    * non-null shingles (a null shingle never equi-joins in the oracle),
+    * `sa`/`sb` are the set sizes. Pairs that share nothing are dropped,
+    * the oracle's inner-join semantics. The joins move one row per
+    * document, never one row per (doc, shingle). */
+  private[operators] def overlapOf(cand: DataFrame, ds: DataFrame): DataFrame =
+    cand
+      .join(ds.as("a"), col("a.doc_id") === col("doc_a"))
+      .join(ds.as("b"), col("b.doc_id") === col("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(array_compact(col("a.sh")), array_compact(col("b.sh"))))
+          .cast("long").as("i"),
+        size(col("a.sh")).cast("long").as("sa"),
+        size(col("b.sh")).cast("long").as("sb"))
+      .filter(col("i") > 0)
 
   /** Dedup threshold-tuning curve: candidate pairs bucketed by exact
     * Jaccard decile — the histogram a dedup operator reads to PLACE the
@@ -893,7 +868,7 @@ object TextOps {
     * they are the vast majority — and the untouched docs join back as
     * themselves here. */
   private def dedupGroupsUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
-    val cand = candidatePairsFrom(shingles(spark, sfDir, 3))
+    val cand = candidatePairsFrom(docShingles(spark, sfDir))
     val labels = GraphOps.connectedComponents(cand, "doc_a", "doc_b")
       .withColumnRenamed("node_id", "doc_id")
     docs(spark, sfDir).select(col("doc_id"))
@@ -923,7 +898,7 @@ object TextOps {
     * cand(union) = cand(old,old) ⊎ cand(touching new) exactly. */
   def dedupGroupsIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     def isNew(c: org.apache.spark.sql.Column) = c % 10 === 9
-    val cand = candidatePairsFrom(shingles(spark, sfDir, 3))
+    val cand = candidatePairsFrom(docShingles(spark, sfDir))
       .persist().transform(graft.api.Caches.tracked)
     cand.count()
     val oldPairs = cand.filter(!isNew(col("doc_a")) && !isNew(col("doc_b")))
@@ -1156,13 +1131,12 @@ object TextOps {
     * measures the methods exactly as deployed. */
   def dedupMethodAgreement(spark: SparkSession, sfDir: String): DataFrame = {
     // the MinHash side reuses the session signature kernel when the flag
-    // is on (signatureFrom is duplicate-insensitive, so the distinct-
-    // shingle cached build is bit-identical to the direct path)
+    // is on (the same sig3 table the overlap family builds)
     val mhPairs =
       if (graft.api.KernelCache.enabled(spark))
         candidatePairsFromSig(graft.api.KernelCache.getOrBuild(spark,
-          s"sig3:$sfDir", signatureFrom(shingles(spark, sfDir, 3).distinct())))
-      else candidatePairsFrom(shingles(spark, sfDir, 3))
+          s"sig3:$sfDir", signatureFrom(docShingles(spark, sfDir))))
+      else candidatePairsFrom(docShingles(spark, sfDir))
     val mh = mhPairs
       .select(col("doc_a"), col("doc_b"), lit(1).as("in_mh"))
     val sh = simhashNeardup(spark, sfDir)
@@ -1220,14 +1194,14 @@ object TextOps {
     tf.count()
     val norms = tf.groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("tf")).as("n2"))
-    val cand = candidatePairsFrom(shinglesOf(base, 3)).persist().transform(graft.api.Caches.tracked)
+    val cand = candidatePairsFrom(docShinglesOf(base)).persist().transform(graft.api.Caches.tracked)
     val candCount = cand.count()
     // Semi-filter the corpus-wide TF table down to docs that appear in a
-    // candidate pair before the sparse-dim join — same 100 TB argument as
-    // ngramJaccard: never shuffle the full corpus into a join whose left
-    // side is the (bounded) LSH candidate set. Same broadcast row gate
-    // as pairOverlapWithSig: the candidate lists are corpus-dependent,
-    // so the hint only applies under the gate (shuffle semi-join above).
+    // candidate pair before the sparse-dim join: never shuffle the full
+    // corpus into a join whose left side is the (bounded) LSH candidate
+    // set. The candidate lists are corpus-dependent, so the broadcast
+    // hint only applies under the shared row gate (shuffle semi-join
+    // above it).
     val gate = graft.api.GraftConfig.broadcastGateRows(spark)
     def sideFilter(docs: DataFrame): DataFrame =
       if (candCount <= gate) broadcast(docs) else docs

@@ -97,4 +97,27 @@ class BenchSpec extends AnyFunSuite with SparkTest {
     val line = Bench.summaryLine(1.234567e9, 100000, longPath, longPath + "/out.json")
     assert(line.length < 1900, s"summary line is ${line.length} chars")
   }
+
+  test("detail copy skips an already-suffixed name and logs a failed write") {
+    assert(Bench.detailCopyPath("out/BENCH_r19_c8.json", "8").isEmpty,
+      "an out name ending in _c<cpus> must not get a _c8_c8 copy")
+    assert(Bench.detailCopyPath("out/BENCH_LAST.json", "8")
+      .contains(java.nio.file.Paths.get("out/BENCH_LAST_c8.json")))
+    assert(Bench.detailCopyPath("out/BENCH_r19_c8.json", "32")
+      .contains(java.nio.file.Paths.get("out/BENCH_r19_c8_c32.json")))
+
+    val dir = java.nio.file.Paths.get(tempDir("bench-detail"))
+    val ok = dir.resolve("out.json").toString
+    Bench.writeDetailCopy(ok, "4", "{}\n")
+    assert(java.nio.file.Files.readString(dir.resolve("out_c4.json")) == "{}\n")
+
+    // a copy whose directory does not exist: no exception, one stderr line
+    val missing = dir.resolve("no-such-dir").resolve("out.json").toString
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try Bench.writeDetailCopy(missing, "4", "{}\n")
+    finally System.setErr(saved)
+    assert(err.toString.contains("out_c4.json not written"), s"stderr was: $err")
+  }
 }

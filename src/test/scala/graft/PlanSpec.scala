@@ -307,7 +307,7 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     spark.conf.set(autoKey, "-1")
     try {
       // under the gate (default 1M rows): the hint fires
-      val pOn = plan(TextOps.ngramJaccard(spark, sf))
+      val pOn = plan(TextOps.docEmbedSimilarity(spark, sf))
       assert(pOn.contains("BroadcastExchange"),
         s"candidate lists not broadcast under the gate:\n$pOn")
       val hOn = plan(SimilarityOps.hardNegatives(spark, sf))
@@ -316,7 +316,7 @@ class PlanSpec extends AnyFunSuite with SparkTest {
       // gate forced to 0: no forced broadcast anywhere — the semi-joins
       // shuffle, the anchor cross join distributes both sides
       spark.conf.set(graft.api.GraftConfig.BroadcastGateKey, "0")
-      val pOff = plan(TextOps.ngramJaccard(spark, sf))
+      val pOff = plan(TextOps.docEmbedSimilarity(spark, sf))
       assert(!pOff.contains("BroadcastExchange"),
         s"gate=0 must strip the candidate-list broadcast:\n$pOff")
       val hOff = plan(SimilarityOps.hardNegatives(spark, sf))

@@ -22,7 +22,7 @@ class LshBucketAbSpec extends AnyFunSuite with SparkTest {
     def run(): (Long, Long, Double, org.apache.spark.sql.DataFrame) = {
       val t0 = System.nanoTime()
       val sig = TextOps.signatureFrom(
-        TextOps.shinglesOf(TextOps.normed(spark, dir), 3)).persist()
+        TextOps.docShinglesOf(TextOps.normed(spark, dir))).persist()
       sig.count()
       val pairs = TextOps.candidatePairsFromSig(sig).persist()
       val n = pairs.count()
@@ -66,7 +66,7 @@ class LshBucketAbSpec extends AnyFunSuite with SparkTest {
       c.foreach(b => spark.conf.set(TextOps.LshMaxBucketKey, b.toString))
       try {
         val t0 = System.nanoTime()
-        val sig = TextOps.signatureFrom(TextOps.shinglesOf(normDf, 3)).persist()
+        val sig = TextOps.signatureFrom(TextOps.docShinglesOf(normDf)).persist()
         sig.count()
         val n = TextOps.candidatePairsFromSig(sig).count()
         sig.unpersist()

@@ -27,7 +27,7 @@ class LshBucketBoundSpec extends AnyFunSuite with SparkTest {
       cap: Option[Int]): Set[(Long, Long)] = {
     cap.foreach(b => spark.conf.set(Key, b.toString))
     try {
-      val sig = TextOps.signatureFrom(TextOps.shinglesOf(normDf, 3)).persist()
+      val sig = TextOps.signatureFrom(TextOps.docShinglesOf(normDf)).persist()
       sig.count()
       val got = TextOps.candidatePairsFromSig(sig).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -101,7 +101,7 @@ class LshBucketBoundSpec extends AnyFunSuite with SparkTest {
       raw: String): Set[(Long, Long)] = {
     spark.conf.set(Key, raw)
     try {
-      val sig = TextOps.signatureFrom(TextOps.shinglesOf(normDf, 3)).persist()
+      val sig = TextOps.signatureFrom(TextOps.docShinglesOf(normDf)).persist()
       sig.count()
       val got = TextOps.candidatePairsFromSig(sig).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -165,7 +165,7 @@ class LshBucketBoundSpec extends AnyFunSuite with SparkTest {
       def components(cap: Option[Int]): Map[Long, Long] = {
         cap.foreach(b => spark.conf.set(Key, b.toString))
         try {
-          val sig = TextOps.signatureFrom(TextOps.shinglesOf(normDf, 3)).persist()
+          val sig = TextOps.signatureFrom(TextOps.docShinglesOf(normDf)).persist()
           sig.count()
           val cc = GraphOps
             .connectedComponents(TextOps.candidatePairsFromSig(sig), "doc_a", "doc_b")

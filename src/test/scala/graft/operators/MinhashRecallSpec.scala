@@ -19,7 +19,7 @@ class MinhashRecallSpec extends AnyFunSuite with SparkTest {
 
   test("banded MinHash candidates catch >=90% of true Jaccard>=0.8 pairs") {
     val s3 = TextOps.shinglesOf(TextOps.normed(spark, sf), 3).distinct().persist()
-    val sig = TextOps.signatureFrom(s3).persist()
+    val sig = TextOps.signatureFrom(TextOps.docShinglesOf(TextOps.normed(spark, sf))).persist()
     sig.count()
     val sizes = sig.select(col("doc_id"), col("sz"))
     val truth = s3.as("a")
