@@ -20,10 +20,10 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Optional runtime-conf overrides for A/B experiments
-    // (SPARK_GRAFT_CONF="spark.graft.lsh.maxBucket=64,k2=v2"). The
+    // (SPARK_GRAFT_CONF="spark.graft.fanout.minRows=1,k2=v2"). The
     // driver never sets it, so official artifacts always run defaults;
-    // builder-side it prices a conf-gated path (round-13: the LSH
-    // hot-bucket ceiling) against the default plan on identical data.
+    // locally it prices a conf-gated path against the default plan
+    // on identical data.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
       .filter(_.nonEmpty).foreach { kv =>
         kv.split("=", 2) match {

@@ -43,10 +43,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.size == 2,
           s"jaro_winkler expects exactly 2 arguments, got ${children.size}")
         JaroWinkler(children(0), children(1))
-      }))
-    // Flag-gated automatic skew salting (see graft.plans.AutoSalt): off
-    // until spark.graft.autoSalt.enabled=true AND a key is registered, so
-    // injection alone never changes a plan.
-    ext.injectOptimizerRule(session => graft.plans.AutoSaltRule(session))
-  }
+      }))  }
 }

@@ -31,9 +31,9 @@ object SparkEntry {
       PipelineOps.queries ++ CorpusOps.queries ++ MiningOps.queries ++
       GraphOps.queries).map { case (name, fn) =>
       name -> ((s: SparkSession, dir: String) => {
-        // r19: exclude EliminateLimits/OptimizeOneRowPlan from AQE's
-        // re-optimizer before any query builds — see api.AqeGuards for the
-        // wrong-results hazard this closes (idempotent, once per session).
+        // Tables.load installs api.AqeGuards for every table read; this
+        // covers the keys that build without one (the media-cache readers
+        // in MultimodalOps, lsh_tune's literal grid). Idempotent.
         graft.api.AqeGuards(s)
         graft.api.Caches.scoped(s)(fn(s, dir))
       })

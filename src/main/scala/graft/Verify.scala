@@ -24,39 +24,12 @@ object Verify {
     require(spark.conf.getOption("spark.graft.ann.probeId").forall(_ == "0"),
       "spark.graft.ann.probeId must be unset or 0 for the oracle dump: " +
         "the ann_ivfpq/ann_ivfpq_res/ivfpq_res_recall oracles pin probe 0")
-    // The scale profile (spark.graft.profile=scale) flips output-ADJACENT
-    // knobs (auto LSH ceiling, hashed gram keys, approx-quantile cuts)
-    // through GraftConfig indirection WITHOUT the raw keys being set, so
-    // raw-conf guards alone would not see them (ADVICE round 14) — the
-    // oracle dump must run under the default profile, full stop.
-    require(!spark.conf.getOption(graft.api.GraftConfig.ProfileKey)
-        .exists(_.trim.equalsIgnoreCase("scale")),
-      s"${graft.api.GraftConfig.ProfileKey} must be unset or non-scale for " +
-        "the oracle dump: the profile activates maxBucket=auto/hashGrams/" +
-        "approxQuantileCuts behind the raw-key guards")
-    // Same integrity guard for the LSH hot-bucket ceiling (round 13): the
-    // MinHash-family oracles state the UNGATED all-pairs band join, so a
-    // session-level cap would dump a deliberately-thinner pair table than
-    // the SQL the driver compares against. Resolved through GraftConfig
-    // (profile-aware, env-indirection-aware) so 'auto' and 'env:VAR'
-    // spellings are judged by their EFFECTIVE value, not the raw string
-    // (ADVICE round 14): 'auto' actively gates candidatePairsFromSig and
-    // is rejected explicitly; any positive effective ceiling is rejected.
-    locally {
-      val eff = graft.api.GraftConfig
-        .get(spark, operators.TextOps.LshMaxBucketKey, "0").trim
-      require(!eff.equalsIgnoreCase("auto") &&
-          graft.api.GraftConfig.parseLeadingInt(eff, 0) <= 0,
-        s"${operators.TextOps.LshMaxBucketKey} must resolve to unset/<=0 " +
-          s"for the oracle dump (effective: '$eff'): the dedup-family " +
-          "oracles state the ungated band join")
-    }
     // The JSON-probe oracles state get_json_object STRING-path semantics;
     // the VARIANT payload mode is value-identical on the driver tables
     // (VariantSpec pins it in-engine) but variant typing edge cases have
-    // no DuckDB-exact rendition — dump only under the default mode, same
-    // posture as profile=scale (resolved through GraftConfig so profile/
-    // env indirection is judged by the EFFECTIVE value).
+    // no DuckDB-exact rendition — dump only under the default mode
+    // (resolved through GraftConfig so env indirection is judged by the
+    // EFFECTIVE value).
     locally {
       val eff = graft.api.GraftConfig
         .get(spark, graft.api.Payload.ModeKey, "string").trim
@@ -66,12 +39,6 @@ object Verify {
           "typed_payload/event_decode/include_match oracles state " +
           "get_json_object semantics")
     }
-    // ... and for batched BPE merges: the bpe_train/bpe_encode oracles
-    // unroll the SEQUENTIAL one-merge-per-round trainer.
-    require(spark.conf.getOption(operators.CorpusOps.BpeBatchKey)
-        .forall(v => graft.api.GraftConfig.parseLeadingInt(v, 1) <= 1),
-      s"${operators.CorpusOps.BpeBatchKey} must be unset or 1 for the " +
-        "oracle dump: the BPE oracles state the sequential trainer")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated allowlist for local iteration on a few
     // queries (the driver never sets it → full dump).

@@ -29,9 +29,11 @@ import org.apache.spark.sql.SparkSession
   * optimizer (whose `maxRows` derivation does not involve runtime query
   * stages) still applies both rules normally before AQE takes over.
   *
-  * Applied once per session from the `SparkEntry.queries` wrapper, so
-  * every harness (Bench/Verify) and library consumer gets it without
-  * session-builder cooperation; merges with caller-set exclusions.
+  * Applied by `Tables.load`, the loader every table read passes through,
+  * so harnesses (Bench/Verify) and direct library calls get it with no
+  * session setup of their own; the `SparkEntry.queries` wrapper applies
+  * it too, for the few keys that read no table through it. Merges with
+  * caller-set exclusions.
   */
 object AqeGuards {
   private val Key = "spark.sql.adaptive.optimizer.excludedRules"

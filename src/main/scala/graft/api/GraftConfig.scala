@@ -31,44 +31,9 @@ object GraftConfig {
   private val EnvWithDefault = "env:([^:]+):(.*)".r
   private val EnvOnly = "env:([^:]+)".r
 
-  /** `spark.graft.profile=scale` flips every OUTPUT-PRESERVING
-    * 100 TB-safe knob in one flag (round-13 verdict: "the 100 TB
-    * configuration is documented but must be actively enabled").
-    * Resolution order: an explicitly SET key always wins; an unset key
-    * under the scale profile resolves from [[ScaleDefaults]]; otherwise
-    * the caller's default. Only knobs whose gated path is parity-spec'd
-    * against the default path belong here — the LSH hot-bucket auto
-    * ceiling (CC consumers bit-identical for any B ≥ 1), the hashed-gram
-    * substring shuffle key (hashed ≡ exact spec; probabilistic at
-    * 2⁻⁶⁴), and the approx-quantile rank cuts (bit-equal at test SFs,
-    * rank error ≤ n/accuracy beyond). Deliberately NOT here:
-    * `spark.graft.bpe.batchMerges` — batching changes the learned merge
-    * SEQUENCE, not just the plan, so it stays an explicit choice. */
-  val ProfileKey = "spark.graft.profile"
-
-  private[graft] val ScaleDefaults: Map[String, String] = Map(
-    "spark.graft.lsh.maxBucket" -> "auto",
-    "spark.graft.substr.hashGrams" -> "true",
-    "spark.graft.approxQuantileCuts" -> "true",
-    // r15 additions, both bit-neutral by construction and parity-spec'd:
-    // the shared shingle/signature kernel cache (KernelCacheSpec pins
-    // cross-query output identity) and the auto-skew salting rule
-    // (PlanSpec pins salted ≡ unsalted output; inert anyway until a key
-    // is registered via AutoSalt.analyzeAndRegister)
-    "spark.graft.kernel.sessionCache" -> "true",
-    "spark.graft.autoSalt.enabled" -> "true")
-
-  /** `Config.get/3`: conf value with env indirection, else the scale
-    * profile's default for the key (when the profile is on), else
-    * `default`. */
-  def get(spark: SparkSession, key: String, default: String): String = {
-    val raw = spark.conf.getOption(key).orElse(
-      if (key != ProfileKey &&
-          spark.conf.getOption(ProfileKey).exists(_.trim.equalsIgnoreCase("scale")))
-        ScaleDefaults.get(key)
-      else None)
-    get(raw, default, sys.env.get(_))
-  }
+  /** `Config.get/3`: conf value with env indirection, else `default`. */
+  def get(spark: SparkSession, key: String, default: String): String =
+    get(spark.conf.getOption(key), default, sys.env.get(_))
 
   /** Resolution core, env lookup injectable (spec uses a fixed map). */
   private[graft] def get(raw: Option[String], default: String,

@@ -19,12 +19,11 @@ import org.apache.spark.sql.SparkSession
   * query-side half of that migration on identical data via
   * `SPARK_GRAFT_CONF=spark.graft.payload=variant`).
   *
-  * Flag-gated and oracle-default-off like every profile knob: the
+  * Flag-gated and oracle-default-off: the
   * DuckDB oracles state `get_json_object` string semantics, and variant
   * null/typing edge cases (absent path vs typed null, number rendering)
   * are not guaranteed to round-trip identically through a DIFFERENT
-  * engine — Verify refuses to dump under `variant` (same posture as
-  * `profile=scale`), while the in-engine A/B and VariantSpec pin that
+  * engine — Verify refuses to dump under `variant`, while the in-engine A/B and VariantSpec pin that
   * both modes return identical values on the driver tables. */
 object Payload {
   val ModeKey = "spark.graft.payload"

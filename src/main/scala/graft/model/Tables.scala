@@ -19,8 +19,14 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  /** Every table read goes through here, so this is where the
+    * session gets its AQE guard ([[graft.api.AqeGuards]]): any operator
+    * that reads a table — through `SparkEntry`, a harness or a direct
+    * library call — runs with the guard installed. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    graft.api.AqeGuards(spark)
     spark.read.parquet(s"$sfDir/$name.parquet")
+  }
 
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark rejects by
     * default. Read it as long nanos (legacy conf) and truncate to
@@ -78,6 +84,17 @@ object Tables {
     * `defaultParallelism` near-empty ones. */
   private val FanRowsPerSlice = 500L
 
+  /** What [[fanned]] knows about one version of a table: the exact row
+    * count from the parquet footers and, once planned, the scan's
+    * partition count. */
+  private final class ScanStats(val rows: Long) {
+    @volatile var partitions: Int = -1
+  }
+
+  /** Scan plannings [[fanned]] has paid (each one builds the scan's
+    * physical plan and RDD); the spec reads it to check the memo. */
+  private[graft] val scanPlans = new java.util.concurrent.atomic.AtomicLong()
+
   /** Exact row count from the parquet FOOTERS (driver-side metadata
     * read, no Spark job). Handles both single-file tables (as DuckDB
     * writes them) and Spark-written dataset directories. Memoized per
@@ -85,8 +102,8 @@ object Tables {
     * the same path — a regenerated replica, a test's temp dir — lists
     * different file stats and is counted afresh, while an unchanged
     * table costs one file listing per call. */
-  private val rowCountCache = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
-  private def parquetRows(spark: SparkSession, path: String): Long =
+  private val rowCountCache = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), ScanStats]()
+  private def scanStats(spark: SparkSession, path: String): ScanStats =
     try {
       val conf = spark.sessionState.newHadoopConf()
       val fsPath = new org.apache.hadoop.fs.Path(path)
@@ -107,9 +124,9 @@ object Tables {
           try total += reader.getRecordCount
           finally reader.close()
         }
-        java.lang.Long.valueOf(total)
+        new ScanStats(total)
       })
-    } catch { case scala.util.control.NonFatal(_) => 0L }
+    } catch { case scala.util.control.NonFatal(_) => new ScanStats(0L) }
 
   /** Adaptive post-scan fan-out for CPU-heavy per-row pipelines (r19
     * optimization round, guide §2.5 "one huge unsplittable file →
@@ -139,16 +156,26 @@ object Tables {
     * sort-before-repartition, on by default) and every consumer is
     * partitioning-insensitive (hash-keyed aggregates/joins; sampling is
     * md5-seeded, never rand()), so results are bit-identical — the
-    * oracle gate re-proved all 293 after this change. */
+    * oracle gate re-proved all 293 after this change.
+    *
+    * The scan's partition count is planned once per table version and
+    * kept next to its row count: it follows from the file layout and
+    * the session's split settings, which the library never changes.
+    * Count-only consumers read the plain [[load]]: a row count needs no
+    * fan-out, and would pay its exchange for nothing. */
   def fanned(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = load(spark, sfDir, name)
-    val rows = parquetRows(spark, s"$sfDir/$name.parquet")
+    val stats = scanStats(spark, s"$sfDir/$name.parquet")
     val minRows = graft.api.GraftConfig.getLong(spark,
       "spark.graft.fanout.minRows", FanMinRowsDefault)
-    if (rows < math.max(1L, minRows)) return df
+    if (stats.rows < math.max(1L, minRows)) return df
     val target = math.min(spark.sparkContext.defaultParallelism.toLong,
-      rows / FanRowsPerSlice).toInt
-    if (target > df.rdd.getNumPartitions * 2) df.repartition(target) else df
+      stats.rows / FanRowsPerSlice).toInt
+    if (stats.partitions < 0) {
+      scanPlans.incrementAndGet()
+      stats.partitions = df.rdd.getNumPartitions
+    }
+    if (target > stats.partitions * 2) df.repartition(target) else df
   }
 
   /** Typed event-envelope model (reference `lib/hivent/models/event.ex:27-33`).

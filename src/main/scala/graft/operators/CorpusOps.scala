@@ -252,63 +252,31 @@ object CorpusOps {
       .groupBy(col("p.x").as("x"), col("p.y").as("y"))
       .agg(sum(col("cnt")).as("n"))
 
-  /** Merges applied per round (`spark.graft.bpe.batchMerges`, default 1
-    * = the sequential Sennrich trainer the oracles state). At B > 1
-    * each round keeps the top-B mutually NON-CONFLICTING pairs (rank
-    * order n desc / pair text; a candidate is skipped if it shares a
-    * symbol with an already-kept pair's operands OR its produced
-    * concatenation — disjointness over {x, y, x+y} makes the batched
-    * replaces order-independent) and applies them in one
-    * projection — the standard production refinement that cuts the
-    * trainer's round count (each round is one distributed pair count +
-    * one metadata-sized collect, so rounds, not data, dominate at
-    * scale; SCALING.md round-13 prices it on the 10× vocab). Batch
-    * training is the usual approximation: within a round the 2nd..Bth
-    * picks use the round's counts, not post-merge recounts —
-    * CorpusOpsSpec pins batch=1 bit-equal to the sequential chain. */
-  private[graft] val BpeBatchKey = "spark.graft.bpe.batchMerges"
-
   /** The K-round greedy merge loop over an initial symbol frame:
     * returns (merge rows, symbol frames v0..vK). Each round collects
-    * ONLY a batch-sized candidate head (count desc, pair text asc ties)
-    * — K metadata-sized driver reads; a round with no pairs left leaves
-    * the frame unchanged (and records no merge). The merge replace is
+    * ONLY the top pair (count desc, pair text asc ties) — K one-row
+    * collects; a round with no pairs left leaves the
+    * frame unchanged (and records no merge). The merge replace is
     * built with the COLUMN API (`functions.replace` on literal columns),
     * never by interpolating learned pair text into a SQL string — a
     * corpus token containing `'` or `\` would make an interpolated
     * `expr` unparsable or silently wrong (round-13 ADVICE). */
   private[graft] def bpeChainOf(v0in: DataFrame, rounds: Int = BpeTrainMerges)
       : (Seq[(Int, String, String, Long)], Seq[DataFrame]) = {
-    val batch = math.max(1, graft.api.GraftConfig.getInt(
-      v0in.sparkSession, BpeBatchKey, 1))
     val v0 = v0in.persist().transform(graft.api.Caches.tracked)
     v0.count()
     var vocab: DataFrame = v0
     val frames = scala.collection.mutable.ArrayBuffer[DataFrame](v0)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     for (step <- 1 to rounds) {
-      // 4× head room: conflicting candidates are skipped, not replaced,
-      // so the collect stays metadata-sized while usually filling the batch
-      val cands = bpePairCounts(vocab)
-        .orderBy(col("n").desc, col("x"), col("y")).limit(4 * batch).collect()
-      val kept = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-      val used = scala.collection.mutable.Set.empty[String]
-      for (r <- cands if kept.size < batch) {
-        val (x, y, n) = (r.getString(0), r.getString(1), r.getLong(2))
-        // Disjointness must cover the PRODUCED symbol too: keeping
-        // ("a","b") manufactures "ab", so a same-round ("ab","c") — or a
-        // pair whose concatenation collides with a kept operand — would
-        // see tokens the earlier replace just created, making the batch
-        // order-dependent (round-13 ADVICE). Test and reserve {x, y, x+y}.
-        if (kept.isEmpty || (!used(x) && !used(y) && !used(x + y))) {
-          kept += ((x, y, n)); used += x; used += y; used += (x + y)
+      bpePairCounts(vocab)
+        .orderBy(col("n").desc, col("x"), col("y")).limit(1).collect()
+        .foreach { r =>
+          val (x, y) = (r.getString(0), r.getString(1))
+          merges += ((step, x, y, r.getLong(2)))
+          vocab = vocab.withColumn("sym",
+            replace(col("sym"), lit(s"^$x  ^$y  "), lit(s"^$x$y  ")))
         }
-      }
-      for ((x, y, n) <- kept) {
-        merges += ((step, x, y, n))
-        vocab = vocab.withColumn("sym",
-          replace(col("sym"), lit(s"^$x  ^$y  "), lit(s"^$x$y  ")))
-      }
       frames += vocab
     }
     (merges.toSeq, frames.toSeq)
@@ -329,9 +297,7 @@ object CorpusOps {
     * aggregate), pick the most frequent pair (ties on the pair text),
     * apply it with one literal replace. Deterministic end-to-end:
     * exact integer counts, total argmax order. The oracle unrolls the
-    * identical rounds as chained CTEs. At production scale the one
-    * refinement is batching top-k non-conflicting merges per round to
-    * cut the round count — same kernel per round. */
+    * identical rounds as chained CTEs. */
   def bpeTrain(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val (merges, _) = bpeChain(spark, sfDir)
@@ -597,26 +563,12 @@ object CorpusOps {
     * query-term tf is a broadcast semi-join. One wide shuffle over the
     * token stream total, instead of three-plus. Values are identical
     * integers, so every double chain downstream is untouched — the
-    * DuckDB oracles don't change.
-    *
-    * Session-kernel eligible (r17 verdict item 1): tf is a pure function
-    * of (corpus, normalization), and — unlike the raw token stream — is
-    * bounded by distinct (doc, token) pairs, which is the artifact worth
-    * materializing in a 100 TB lake. With
-    * `spark.graft.kernel.sessionCache=true` the four retrieval queries
-    * share ONE build; parquet round-trips (long, string, long) exactly,
-    * so cached and rebuilt bases are bit-identical; flag off (the oracle
-    * default) keeps the per-query self-contained plan. */
+    * DuckDB oracles don't change. */
   private def tfBase(spark: SparkSession, sfDir: String): DataFrame = {
-    // every retrieval query ends in a fused sort+limit over this cached
-    // base — the exact AQE replanning hazard shape; guard even when the
-    // caller bypasses SparkEntry (specs, direct library use)
-    graft.api.AqeGuards(spark)
-    val tf = graft.api.KernelCache.getOrBuild(spark, s"tf:$sfDir",
-        TextOps.normed(spark, sfDir)
-          .select(col("doc_id"), explode(split(col("norm"), " ")).as("token"))
-          .groupBy(col("doc_id"), col("token"))
-          .agg(count(lit(1)).as("tf")))
+    val tf = TextOps.normed(spark, sfDir)
+      .select(col("doc_id"), explode(split(col("norm"), " ")).as("token"))
+      .groupBy(col("doc_id"), col("token"))
+      .agg(count(lit(1)).as("tf"))
       .persist().transform(graft.api.Caches.tracked)
     // NO eager count (r19 job-floor audit, VERDICT r18 item 4): every
     // retrieval entry point immediately builds dfShared, whose OWN eager
@@ -660,7 +612,7 @@ object CorpusOps {
     // exact integer tfs — value-identical to the raw-stream aggregates
     val terms = termsOf(dfv)
     val dl = tfb.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val nDocs = docs(spark, sfDir).agg(count(lit(1)).as("n"))
+    val nDocs = Tables.documents(spark, sfDir).agg(count(lit(1)).as("n"))
     val dlStats = dl.agg(sum(col("dl")).as("sumdl"), count(lit(1)).as("ndl"))
     val tfq = tfb.join(broadcast(terms.select(col("token"))), Seq("token"))
       .select(col("doc_id"), col("token"), col("tf"))
@@ -720,7 +672,7 @@ object CorpusOps {
 
   private def denseFrom(spark: SparkSession, sfDir: String, tfb: DataFrame,
       dfv: DataFrame): DataFrame = {
-    val nDocs = docs(spark, sfDir).agg(count(lit(1)).as("n"))
+    val nDocs = Tables.documents(spark, sfDir).agg(count(lit(1)).as("n"))
     val idf = dfv.crossJoin(broadcast(nDocs))
       .select(col("token"),
         (log((col("n") + 1).cast("double") / (col("df") + 1).cast("double")) + 1.0)
@@ -878,7 +830,7 @@ object CorpusOps {
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(PrfRelDocs)
       .select(col("doc_id"))
-    val nDocs = docs(spark, sfDir).agg(count(lit(1)).as("n"))
+    val nDocs = Tables.documents(spark, sfDir).agg(count(lit(1)).as("n"))
     val idf = dfv.crossJoin(broadcast(nDocs))
       .select(col("token"),
         (log((col("n") + 1).cast("double") / (col("df") + 1).cast("double")) + 1.0)
@@ -1096,84 +1048,24 @@ object CorpusOps {
     *
     * Scale note: the per-lang window ranks each language's docs in one
     * task — fine while per-lang doc COUNTS fit a task's sort budget
-    * (score + id pairs, not text). At 100 TB set
-    * [[ApproxCuts.EnabledKey]]: the rank is replaced by approx-quantile
-    * score cutoffs (two scans, no per-language window) with an exact
-    * boundary tie-split — bit-equal to this path while the sketch's rank
-    * error is under one rank (OperatorSpec), deviating by ≤ n/accuracy
-    * boundary docs beyond that. */
+    * (score + id pairs, not text). */
   def pplBuckets(spark: SparkSession, sfDir: String): DataFrame = {
     val langs = docs(spark, sfDir).select(col("doc_id"), col("lang"))
     val d = docNll(spark, sfDir).join(langs, Seq("doc_id"))
-    val bucketed =
-      if (ApproxCuts.enabled(spark)) pplBucketsApprox(spark, d)
-      else {
-        val w = Window.partitionBy(col("lang"))
-          .orderBy(col("mean_nll").asc, col("doc_id"))
-        val part = Window.partitionBy(col("lang"))
-        d.withColumn("rn", row_number().over(w))
-          .withColumn("n", count(lit(1)).over(part))
-          .withColumn("bucket",
-            when(col("rn") * 3 <= col("n"), lit("head"))
-              .when(col("rn") * 3 <= col("n") * 2, lit("middle"))
-              .otherwise(lit("tail")))
-      }
-    bucketed
+    val w = Window.partitionBy(col("lang"))
+      .orderBy(col("mean_nll").asc, col("doc_id"))
+    val part = Window.partitionBy(col("lang"))
+    d.withColumn("rn", row_number().over(w))
+      .withColumn("n", count(lit(1)).over(part))
+      .withColumn("bucket",
+        when(col("rn") * 3 <= col("n"), lit("head"))
+          .when(col("rn") * 3 <= col("n") * 2, lit("middle"))
+          .otherwise(lit("tail")))
       .groupBy(col("lang"), col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
         round(sum(col("mean_nll").cast(DecimalType(18, 6))).cast("double") /
           count(lit(1)).cast("double"), 6).as("avg_nll"))
       .orderBy("lang", "bucket")
-  }
-
-  /** The 100 TB tertile cut: per-language `percentile_approx` score
-    * cutoffs instead of a per-language rank window.
-    *
-    * Shape: (1) one mergeable-sketch aggregate per language yields the
-    * 1/3 and 2/3 cutoff scores (fully parallel — no language is ever a
-    * single task); (2) per-language boundary stats (n, docs strictly
-    * below each cutoff) ride the same broadcast join; (3) bucket
-    * assignment is a map-side comparison against the cutoffs, with docs
-    * EQUAL to a cutoff split by doc_id rank inside their (lang, score)
-    * tie group — a window over tie groups, whose partitions are
-    * score-collision-sized, not language-sized.
-    *
-    * Exactness: with cutoff rank error < 1 (accuracy > per-language doc
-    * count) the cutoff is the true boundary value, and for either rank
-    * convention (`floor(p·n)` or `ceil(p·n)`) the boundary targets
-    * satisfy `below ≤ target ≤ below + ties`, so the tie-split
-    * reproduces the rank path's `(mean_nll, doc_id)` order bit-exactly —
-    * the OperatorSpec parity test locks this in at sf0.01. */
-  private def pplBucketsApprox(spark: SparkSession, dIn: DataFrame): DataFrame = {
-    val acc = ApproxCuts.accuracy(spark)
-    // three consumers (sketch, boundary stats, assignment) — persist the
-    // scored base or the NLL pipeline (explode + vocab join) runs thrice
-    val d = dIn.persist().transform(graft.api.Caches.tracked)
-    d.count()
-    val cut = d.groupBy(col("lang"))
-      .agg(percentile_approx(col("mean_nll"),
-        array(lit(1.0 / 3.0), lit(2.0 / 3.0)), lit(acc)).as("cs"),
-        count(lit(1)).as("n"))
-      .select(col("lang"), col("cs").getItem(0).as("c1"),
-        col("cs").getItem(1).as("c2"), col("n"))
-    val dc = d.join(broadcast(cut), Seq("lang"))
-    val below = dc.groupBy(col("lang"))
-      .agg(sum(when(col("mean_nll") < col("c1"), 1L).otherwise(0L)).as("b1"),
-        sum(when(col("mean_nll") < col("c2"), 1L).otherwise(0L)).as("b2"))
-    val tieW = Window.partitionBy(col("lang"), col("mean_nll"))
-      .orderBy(col("doc_id"))
-    dc.join(broadcast(below), Seq("lang"))
-      .withColumn("tr", row_number().over(tieW))
-      .withColumn("t1", expr("n div 3"))
-      .withColumn("t2", expr("(2 * n) div 3"))
-      .withColumn("bucket",
-        when(col("mean_nll") < col("c1"), lit("head"))
-          .when(col("mean_nll") === col("c1") &&
-            col("b1") + col("tr") <= col("t1"), lit("head"))
-          .when(col("mean_nll") < col("c2"), lit("middle"))
-          .when(col("mean_nll") === col("c2") &&
-            col("b2") + col("tr") <= col("t2"), lit("middle"))
-          .otherwise(lit("tail")))
   }
 
   // ----------------------------------------------------- CMS heavy hitters

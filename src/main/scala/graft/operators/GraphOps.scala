@@ -272,10 +272,6 @@ object GraphOps {
     * round (same rationale as the CC loop: nested iterative plans
     * otherwise grow exponentially). Top-k is TakeOrderedAndProject. */
   def pagerank(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
-    // the final orderBy().limit() sits over a cached-base multi-join tree
-    // — the AQE replanning hazard shape (ADVICE r18); guard even when the
-    // caller bypasses SparkEntry (specs, direct library use)
-    graft.api.AqeGuards(spark)
     val li = graft.model.Tables.lineitem(spark, sfDir)
     val und = li.select((col("l_partkey") * 2).as("src"),
       (col("l_suppkey") * 2 + 1).as("dst")).distinct()

@@ -427,7 +427,7 @@ object PipelineOps {
     val tf = TextOps.tfUnsorted(spark, sfDir).persist().transform(graft.api.Caches.tracked)
     tf.count()
     val df = tf.groupBy(col("dim")).agg(count(lit(1)).as("df"))
-    val n = docs(spark, sfDir).agg(count(lit(1)).as("n"))
+    val n = Tables.documents(spark, sfDir).agg(count(lit(1)).as("n"))
     tf.join(broadcast(df), Seq("dim"))
       .crossJoin(broadcast(n))
       .select(col("doc_id"), col("dim"),

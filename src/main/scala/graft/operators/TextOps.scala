@@ -153,79 +153,15 @@ object TextOps {
       .select(col("doc_id"), col("band.band_no"), col("band.bh"))
   }
 
-  /** Hot-bucket ceiling for the band self-join
-    * (`spark.graft.lsh.maxBucket`, default 0 = unbounded, bit-identical
-    * to the ungated plan). The unbounded self-join is quadratic in
-    * bucket size: a clone family of m documents lands all m in the same
-    * [[MinhashBands]] buckets and emits O(m²) pairs — at 100 TB one
-    * viral boilerplate page (10⁶⁺ copies) makes a single bucket emit
-    * 10¹²⁺ pairs and the job never finishes (the repo's own 10× replica
-    * grows candidate pairs ~550×, SCALING.md). With the gate at B > 0
-    * only each bucket's B smallest doc_ids serve as LEFT endpoints, so a
-    * bucket of size m emits a star of Σᵢ₌₁..min(m,B) (m−i) ≤ min(m,B)·m
-    * pairs — LINEAR in bucket size. Buckets at or under B are unchanged
-    * (every member has rank ≤ B). Two properties the specs pin down:
-    * (a) connectivity is preserved for ANY B ≥ 1 — every member beyond
-    * rank B still pairs with the bucket's minimum doc_id, so
-    * connected-component consumers ([[dedupGroups]], [[dedupCanonical]],
-    * survivorship, leakage-safe splits) produce bit-identical groups
-    * gated or not; (b) only pair-LEVEL consumers (Jaccard scoring of
-    * individual candidate pairs) lose the intra-family pairs past the
-    * star, and oversized buckets are near-certain duplicate families
-    * where those pairs carry no tuning signal. Production order is
-    * exact-dedup-first anyway ([[dedupPairsCanonical]]): collapse clone
-    * families to canonicals BEFORE banding, and oversized buckets never
-    * form. */
-  private[graft] val LshMaxBucketKey = "spark.graft.lsh.maxBucket"
-
-  /** AUTO ceiling: the smallest B ≥ the p99 bucket size, derived from
-    * the same count-of-counts profile [[lshBucketProfile]] publishes —
-    * `spark.graft.lsh.maxBucket=auto` makes the 100 TB-safe path a
-    * one-flag decision with a principled bound (round-13 VERDICT #4):
-    * ≥ 99% of buckets sit at or under B, so they emit their exact pair
-    * sets (gate provably a no-op there), and only the pathological tail
-    * — the clone families that blow the join quadratic — gets
-    * star-capped. Cost: one extra aggregate pass over the persisted
-    * signature's bands whose RESULT is the bucket-size histogram
-    * (≤ max-bucket-size rows — metadata at any scale; never a
-    * per-bucket list on the driver). Deterministic: exact integer
-    * counts, smallest-s-with-cum≥99% selection. */
-  private[operators] def autoBucketCap(bands: DataFrame): Int = {
-    val hist = bands.groupBy(col("band_no"), col("bh")).agg(count(lit(1)).as("sz"))
-      .groupBy(col("sz")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    if (hist.isEmpty) return 1
-    val total = hist.map(_._2).sum
-    var cum = 0L
-    hist.collectFirst {
-      case (s, n) if { cum += n; cum * 100L >= total * 99L } =>
-        math.max(1L, s).toInt
-    }.getOrElse(math.max(1L, hist.last._1).toInt)
-  }
-
   /** Band-bucket candidate pairs from a (pre-persisted) signature
     * DataFrame — the band self-join consumes the signature twice in one
-    * job, so callers persist it first. Honors [[LshMaxBucketKey]]
-    * (default off → plan identical to the ungated self-join; `auto`
-    * derives the ceiling from the bucket profile — [[autoBucketCap]]). */
+    * job, so callers persist it first. The join is quadratic in bucket
+    * size: a clone family of m documents emits O(m²) pairs, which is why
+    * production runs go exact-dedup-first ([[dedupPairsCanonical]]) so
+    * oversized buckets never form. */
   private[operators] def candidatePairsFromSig(sig: DataFrame): DataFrame = {
     val bands = bandsOf(sig)
-    val raw = graft.api.GraftConfig.get(sig.sparkSession, LshMaxBucketKey, "0").trim
-    val cap =
-      if (raw.equalsIgnoreCase("auto")) autoBucketCap(bands)
-      else graft.api.GraftConfig.getInt(sig.sparkSession, LshMaxBucketKey, 0)
-    val left =
-      if (cap <= 0) bands
-      else {
-        // rank within bucket; the rank window shuffles on the SAME
-        // (band_no, bh) key the join hashes on, so AQE can reuse the
-        // exchange — the gate costs one window, not an extra shuffle
-        // pattern
-        val w = Window.partitionBy(col("band_no"), col("bh")).orderBy(col("doc_id"))
-        bands.withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= cap).drop("rk")
-      }
-    left.as("a").join(bands.as("b"), col("a.band_no") === col("b.band_no") &&
+    bands.as("a").join(bands.as("b"), col("a.band_no") === col("b.band_no") &&
         col("a.bh") === col("b.bh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
@@ -266,9 +202,7 @@ object TextOps {
     * that blow band buckets quadratic — never reach the self-join: a
     * 10⁶-copy boilerplate page contributes ONE canonical row instead of
     * 10⁶ bucket members, so the kernel's cost is governed by the
-    * distinct-content corpus regardless of duplication factor. Composes
-    * with [[LshMaxBucketKey]] as belt-and-braces for near-identical (not
-    * byte-identical) families. */
+    * distinct-content corpus regardless of duplication factor. */
   def dedupPairsCanonical(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("nh")).orderBy(col("doc_id"))
     val canon = normed(spark, sfDir)
@@ -279,15 +213,15 @@ object TextOps {
     candidatePairsFrom(docShinglesOf(canon)).orderBy("doc_a", "doc_b")
   }
 
-  /** Band-bucket size histogram — the OBSERVABILITY table that sizes
-    * [[LshMaxBucketKey]] before a 100 TB dedup run: for each bucket
-    * size s, how many (band, bh) buckets have exactly s members and
-    * the candidate pairs they contribute ungated (s·(s−1)/2 each — the
-    * quadratic mass the ceiling caps). A pipeline owner reads the tail
-    * of this table to decide whether hot buckets exist at all, where
-    * to set B, and how much pair mass the star join will shed —
-    * complements [[lshTune]] (which sizes the GRID) and
-    * `dedup_threshold_sweep` (which places the Jaccard bar). Two
+  /** Band-bucket size histogram — the OBSERVABILITY table for a 100 TB
+    * dedup run: for each bucket size s, how many (band, bh) buckets have
+    * exactly s members and the candidate pairs they contribute
+    * (s·(s−1)/2 each — the quadratic mass of the band self-join). A
+    * pipeline owner reads the tail of this table to decide whether hot
+    * buckets exist at all and whether the corpus needs the
+    * exact-dedup-first order ([[dedupPairsCanonical]]) — complements
+    * [[lshTune]] (which sizes the GRID) and `dedup_threshold_sweep`
+    * (which places the Jaccard bar). Two
     * cascaded map-side-combinable aggregates (the key_skew_profile
     * count-of-counts shape); second pass costs one row per distinct
     * bucket; output ≤ max-bucket-size rows — metadata at any scale. */
@@ -691,15 +625,12 @@ object TextOps {
     * df ceiling — they contribute Jaccard mass everywhere and decide
     * nothing); at 20 feeds the exact form is the oracle-honest choice.
     *
-    * The per-doc shingle sets are the `shingles3` session kernel of the
-    * MinHash family ([[docShinglesOf]]; exploding each document's
-    * distinct set and taking the source-level distinct equals the
-    * source-level distinct of all shingles), so with
-    * `spark.graft.kernel.sessionCache=true` this query reads the suite's
-    * one shared shingle build instead of re-shingling the corpus. */
+    * The per-doc shingle sets are the MinHash family's
+    * ([[docShinglesOf]]; exploding each document's distinct set and
+    * taking the source-level distinct equals the source-level distinct
+    * of all shingles). */
   def sourceOverlapJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    val ss = graft.api.KernelCache.getOrBuild(spark, s"shingles3:$sfDir",
-        docShingles(spark, sfDir))
+    val ss = docShingles(spark, sfDir)
       .join(docs(spark, sfDir).select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), explode(col("sh")).as("sh")).distinct()
       .persist().transform(graft.api.Caches.tracked)
@@ -781,16 +712,8 @@ object TextOps {
     * against the exact overlap WITHOUT a second shingle/signature pass
     * (the one-base-per-query rule). */
   private def pairOverlapWithSig(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    // the per-document shingle sets and the signature route through the
-    // session cache (r15, spark.graft.kernel.sessionCache, default off):
-    // five diagnostic queries share these identical tables, and with the
-    // flag on the BUILD runs once per session while each query keeps its
-    // own per-query persist/track lifecycle over the cached parquet
-    val ds = graft.api.KernelCache.getOrBuild(spark, s"shingles3:$sfDir",
-      docShingles(spark, sfDir))
-    val sig = graft.api.KernelCache.getOrBuild(spark, s"sig3:$sfDir",
-        signatureFrom(ds))
-      .persist().transform(graft.api.Caches.tracked)
+    val ds = docShingles(spark, sfDir)
+    val sig = signatureFrom(ds).persist().transform(graft.api.Caches.tracked)
     sig.count()
     (sig, overlapOf(candidatePairsFromSig(sig), ds))
   }
@@ -1130,14 +1053,7 @@ object TextOps {
     * Jaccard — both pipelines keep their own kernels, so this query
     * measures the methods exactly as deployed. */
   def dedupMethodAgreement(spark: SparkSession, sfDir: String): DataFrame = {
-    // the MinHash side reuses the session signature kernel when the flag
-    // is on (the same sig3 table the overlap family builds)
-    val mhPairs =
-      if (graft.api.KernelCache.enabled(spark))
-        candidatePairsFromSig(graft.api.KernelCache.getOrBuild(spark,
-          s"sig3:$sfDir", signatureFrom(docShingles(spark, sfDir))))
-      else candidatePairsFrom(docShingles(spark, sfDir))
-    val mh = mhPairs
+    val mh = candidatePairsFrom(docShingles(spark, sfDir))
       .select(col("doc_a"), col("doc_b"), lit(1).as("in_mh"))
     val sh = simhashNeardup(spark, sfDir)
       .select(col("doc_a"), col("doc_b"), lit(1).as("in_sh"))
@@ -1439,53 +1355,14 @@ object TextOps {
     * (float division misbuckets past 2^53).
     *
     * Scale note: like [[graft.operators.CorpusOps.pplBuckets]], the
-    * per-language rank is one task per language. At 100 TB set
-    * [[ApproxCuts.EnabledKey]]: the cut switches to a per-language
-    * approx-median score cutoff (mergeable sketches, fully parallel)
-    * with an exact (lang, score)-tie-group split — bit-equal to the rank
-    * path while the sketch's rank error is under one rank (OperatorSpec
-    * parity test), ≤ n/accuracy boundary docs of deviation beyond. */
+    * per-language rank is one task per language. */
   def qualityFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    if (ApproxCuts.enabled(spark))
-      return qualityFilterApprox(spark, sfDir)
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("quality").desc, col("doc_id"))
     qualityScoredUnsorted(spark, sfDir)
       .withColumn("rn", row_number().over(w))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("lang"))))
       .filter(col("rn") <= expr("(n + 1) div 2"))
-      .select(col("doc_id"), col("lang"), col("quality"))
-      .orderBy("doc_id")
-  }
-
-  /** The 100 TB keep-top-half cut: per-language approx-median cutoff +
-    * exact boundary tie-split (see [[ApproxCuts]] and the twin
-    * [[graft.operators.CorpusOps.pplBuckets]] path for the rank-error
-    * argument: for either `percentile_approx` rank convention the keep
-    * target t satisfies `above ≤ t ≤ above + ties`, so splitting the
-    * cutoff-score tie group by doc_id reproduces the
-    * (quality desc, doc_id) rank order bit-exactly while the sketch is
-    * sub-rank accurate). */
-  private def qualityFilterApprox(spark: SparkSession, sfDir: String): DataFrame = {
-    // three consumers (sketch, boundary stats, assignment): persist the
-    // scored base so the scoring scan runs once
-    val d = qualityScoredUnsorted(spark, sfDir)
-      .persist().transform(graft.api.Caches.tracked)
-    d.count()
-    val cut = d.groupBy(col("lang"))
-      .agg(percentile_approx(col("quality"), lit(0.5),
-        lit(ApproxCuts.accuracy(spark))).as("c"),
-        count(lit(1)).as("n"))
-    val dc = d.join(broadcast(cut), Seq("lang"))
-    val above = dc.groupBy(col("lang"))
-      .agg(sum(when(col("quality") > col("c"), 1L).otherwise(0L)).as("b"))
-    val tieW = Window.partitionBy(col("lang"), col("quality"))
-      .orderBy(col("doc_id"))
-    dc.join(broadcast(above), Seq("lang"))
-      .withColumn("tr", row_number().over(tieW))
-      .withColumn("t", expr("(n + 1) div 2"))
-      .filter(col("quality") > col("c") ||
-        (col("quality") === col("c") && col("b") + col("tr") <= col("t")))
       .select(col("doc_id"), col("lang"), col("quality"))
       .orderBy("doc_id")
   }
@@ -1677,39 +1554,9 @@ object TextOps {
     * repeated runs. Window generation is a pure map (one `split` per
     * doc, `slice` per position — no window-function shuffle); the one
     * big shuffle is the gram groupBy, the same key-distribution shape
-    * as the LSH band join. At 100 TB the gram KEY should be a 128-bit
-    * hash of the gram rather than the k-word string — that variant is
-    * implemented behind [[SubstrHashKey]] (round-13 VERDICT #5):
-    * collisions are 2⁻⁶⁴-improbable but nonzero, so the hashed path is
-    * probabilistic; the oracle-checked defaults key on the exact text
-    * so the answer stays provably exact on both engines, and the spec
-    * pins hashed ≡ exact on the driver corpora. */
+    * as the LSH band join. The kernels key on the exact k-word gram
+    * text, so the answer stays provably exact on both engines. */
   private[graft] val SubstrK = 8
-
-  /** `spark.graft.substr.hashGrams=true` swaps the substring kernels'
-    * shuffle key from the k-word gram STRING (~50-100 bytes) to a
-    * 128-bit xxhash64 PAIR (two longs, 16 bytes, independent seeds via
-    * a domain-separation prefix) — the 100 TB move: the gram groupBy
-    * and the repeated-gram joins shuffle and cache fixed-size keys, and
-    * the window frame drops the text BEFORE the persist, so cache bytes
-    * shrink with shuffle bytes. Default OFF for oracle parity (exact
-    * text keys). */
-  private[graft] val SubstrHashKey = "spark.graft.substr.hashGrams"
-
-  private def gramKeyCols(spark: SparkSession): Seq[String] =
-    if (graft.api.GraftConfig.get(spark, SubstrHashKey, "false").trim.toBoolean)
-      Seq("gk1", "gk2")
-    else Seq("gram")
-
-  /** Project the window frame onto its configured shuffle key: identity
-    * in exact mode; in hashed mode the two-seed xxhash64 pair replaces
-    * the gram text entirely (the text never reaches the exchange). */
-  private def withGramKey(wdf: DataFrame, keys: Seq[String]): DataFrame =
-    if (keys == Seq("gram")) wdf
-    else wdf
-      .withColumn("gk1", xxhash64(col("gram")))
-      .withColumn("gk2", xxhash64(lit("graft.substr.seed2"), col("gram")))
-      .drop("gram")
 
   /** (doc_id, n_tokens, i, gram): every k-token window of the normalized
     * text at 1-based position i. Docs shorter than k tokens have no
@@ -1718,31 +1565,15 @@ object TextOps {
     substrWindowsOf(normed(spark, sfDir))
 
   /** The two substring kernels behind [[substringSpans]] /
-    * [[substringDedupStats]] / [[substringDedupApply]], shared through
-    * [[graft.api.KernelCache]] (r15 verdict item 7 — the gram table was
-    * the last per-query rebuild the diagnostic suite paid): the keyed
-    * windows frame and the repeated-gram table (`nd >= 2` with the
-    * keep-first owner). Pure functions of (corpus, k, key mode), so the
-    * session cache is bit-neutral — parquet round-trips longs/ints/
-    * strings exactly; KernelCacheSpec pins per-consumer parity. The
-    * windows kernel materializes ONCE; `rep` builds FROM it, so the
-    * flag-on suite pays one normalization+explode and one gram
-    * aggregate per session instead of one per query. */
-  private def substrWindowsKernel(spark: SparkSession, sfDir: String,
-      keys: Seq[String]): DataFrame =
-    graft.api.KernelCache.getOrBuild(spark,
-      s"substr.windows|$sfDir|$SubstrK|${keys.mkString(",")}",
-      withGramKey(substrWindows(spark, sfDir), keys))
-
-  private def substrKernels(spark: SparkSession, sfDir: String,
-      keys: Seq[String]): (DataFrame, DataFrame) = {
-    val g = substrWindowsKernel(spark, sfDir, keys)
-    val rep = graft.api.KernelCache.getOrBuild(spark,
-      s"substr.rep|$sfDir|$SubstrK|${keys.mkString(",")}",
-      g.groupBy(keys.map(col): _*)
-        .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("fdoc"))
-        .filter(col("nd") >= 2)
-        .select((keys.map(col) :+ col("fdoc")): _*))
+    * [[substringDedupStats]] / [[substringDedupApply]]: the windows frame
+    * and the repeated-gram table (`nd >= 2` with the keep-first owner),
+    * built FROM the windows frame. */
+  private def substrKernels(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val g = substrWindows(spark, sfDir)
+    val rep = g.groupBy(col("gram"))
+      .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("fdoc"))
+      .filter(col("nd") >= 2)
+      .select(col("gram"), col("fdoc"))
     (g, rep)
   }
 
@@ -1757,10 +1588,10 @@ object TextOps {
     * actual split assignment — the number quoted in a dataset card.
     *
     * Scale shape: the same windows kernel as the substring family
-    * (KernelCache-eligible; window generation is a pure map), the split
-    * a pure expression of doc_id; ONE gram semi-join against the
-    * distinct train grams (the corpus-wide shuffle, `substr.hashGrams`
-    * applies), then doc-level distinct + two metadata-sized aggregates.
+    * (window generation is a pure map), the split a pure expression of
+    * doc_id; ONE gram semi-join against the distinct train grams (the
+    * corpus-wide shuffle), then doc-level distinct + two metadata-sized
+    * aggregates.
     * Denominators count ALL split docs (a sub-k doc cannot be flagged
     * but belongs in the rate). */
   /** The split fence shared by both contamination audits: a pure
@@ -1774,30 +1605,21 @@ object TextOps {
     * documents carrying ANY verbatim train k-gram. This is the expensive
     * common base of `ngram_contamination_rate` and
     * `contamination_by_source` — the windows explode, the train-gram
-    * distinct, and the corpus-wide semi-join — which the two audits
-    * otherwise rebuild back to back (SCALING.md priced them at 5.3 s +
-    * 4.1 s at 10× each). Session-cached via [[graft.api.KernelCache]]:
-    * a pure function of (corpus, k, key mode), and the output is
-    * longs/strings only, so the parquet round-trip is bit-neutral
-    * (KernelCacheSpec pins per-consumer parity). `split` is functional
-    * on doc_id, so the (doc_id, split) distinct serves both consumers —
-    * the per-split counter reads it as-is, the per-source audit takes
-    * doc_id alone. */
+    * distinct, and the corpus-wide semi-join. `split` is functional on
+    * doc_id, so the (doc_id, split) distinct serves both consumers — the
+    * per-split counter reads it as-is, the per-source audit takes doc_id
+    * alone. */
   private def contaminatedEvalDocs(spark: SparkSession, sfDir: String): DataFrame = {
-    val keys = gramKeyCols(spark)
-    graft.api.KernelCache.getOrBuild(spark,
-      s"contam.docs|$sfDir|$SubstrK|${keys.mkString(",")}", {
-        val g = substrWindowsKernel(spark, sfDir, keys)
-          .persist().transform(graft.api.Caches.tracked)
-        g.count()
-        val lab = g.select((col("doc_id") +: keys.map(col)): _*)
-          .withColumn("split", contamSplitOf)
-        val trainGrams = lab.filter(col("split") === "train")
-          .select(keys.map(col): _*).distinct()
-        lab.filter(col("split") =!= "train")
-          .join(trainGrams, keys, "left_semi")
-          .select(col("doc_id"), col("split")).distinct()
-      })
+    val g = substrWindows(spark, sfDir)
+      .persist().transform(graft.api.Caches.tracked)
+    g.count()
+    val lab = g.select(col("doc_id"), col("gram"))
+      .withColumn("split", contamSplitOf)
+    val trainGrams = lab.filter(col("split") === "train")
+      .select(col("gram")).distinct()
+    lab.filter(col("split") =!= "train")
+      .join(trainGrams, Seq("gram"), "left_semi")
+      .select(col("doc_id"), col("split")).distinct()
   }
 
   def ngramContaminationRate(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1821,9 +1643,8 @@ object TextOps {
     * content into every split contaminates structurally, and the fix —
     * feed-level dedup or exclusion — is per-source, not per-doc).
     *
-    * Same kernel and scale shape as the rate query (windows kernel is
-    * KernelCache-eligible, one train-gram semi-join, doc-level
-    * distinct); the only addition is a documents join for `source` and
+    * Same kernel and scale shape as the rate query (one windows pass,
+    * one train-gram semi-join, doc-level distinct); the only addition is a documents join for `source` and
     * a |sources|-row aggregate. */
   def contaminationBySource(spark: SparkSession, sfDir: String): DataFrame = {
     val contaminated = contaminatedEvalDocs(spark, sfDir)
@@ -1889,13 +1710,12 @@ object TextOps {
     * spec asserts the identity). The islands window partitions by
     * doc_id — bounded by document length, never global. */
   def substringSpans(spark: SparkSession, sfDir: String): DataFrame = {
-    val keys = gramKeyCols(spark)
-    val (g0, rep0) = substrKernels(spark, sfDir, keys)
+    val (g0, rep0) = substrKernels(spark, sfDir)
     val g = g0.persist().transform(graft.api.Caches.tracked)
     g.count()
-    val rep = rep0.select(keys.map(col): _*)
+    val rep = rep0.select(col("gram"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("i"))
-    g.join(rep, keys, "left_semi")
+    g.join(rep, Seq("gram"), "left_semi")
       .select(col("doc_id"), col("i"))
       .withColumn("grp", col("i") - row_number().over(w))
       .groupBy(col("doc_id"), col("grp"))
@@ -1918,11 +1738,10 @@ object TextOps {
     * [[substringSpans]] (one windows pass, one gram aggregate); the
     * union coverage is the islands sum Σ (max−min+k) per doc. */
   def substringDedupStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val keys = gramKeyCols(spark)
-    val (g0, rep) = substrKernels(spark, sfDir, keys)
+    val (g0, rep) = substrKernels(spark, sfDir)
     val g = g0.persist().transform(graft.api.Caches.tracked)
     g.count()
-    val removable = g.join(rep, keys)
+    val removable = g.join(rep, Seq("gram"))
       .filter(col("doc_id") =!= col("fdoc"))
       .select(col("doc_id"), col("n_tokens"), col("i"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("i"))
@@ -1950,12 +1769,11 @@ object TextOps {
     * on doc_id; the rebuild is one per-doc sort of kept (pos, word)
     * structs — bounded by document length, never global. */
   def substringDedupApply(spark: SparkSession, sfDir: String): DataFrame = {
-    val keys = gramKeyCols(spark)
-    val (g0, rep) = substrKernels(spark, sfDir, keys)
+    val (g0, rep) = substrKernels(spark, sfDir)
     val g = g0.persist().transform(graft.api.Caches.tracked)
     g.count()
     val w = Window.partitionBy(col("doc_id")).orderBy(col("i"))
-    val spans = g.join(rep, keys)
+    val spans = g.join(rep, Seq("gram"))
       .filter(col("doc_id") =!= col("fdoc"))
       .select(col("doc_id"), col("i"))
       .withColumn("grp", col("i") - row_number().over(w))

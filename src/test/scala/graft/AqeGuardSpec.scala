@@ -34,6 +34,24 @@ class AqeGuardSpec extends AnyFunSuite with SparkTest {
     api.AqeGuards.ExcludedRules.foreach(r => assert(excluded.contains(r)))
   }
 
+  test("a direct library call installs the exclusions through the table loaders") {
+    val key = "spark.sql.adaptive.optimizer.excludedRules"
+    val prior = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      // no SparkEntry wrapper: the operator's own table read must guard
+      operators.CorpusOps.approxTopk(spark, sf)
+      val excluded = spark.conf.get(key).split(",").map(_.trim).toSet
+      api.AqeGuards.ExcludedRules.foreach(r =>
+        assert(excluded.contains(r), s"$r not excluded after a direct call"))
+    } finally {
+      prior match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("AqeGuards merges with caller-set exclusions and stays idempotent") {
     val key = "spark.sql.adaptive.optimizer.excludedRules"
     val prior = spark.conf.getOption(key)

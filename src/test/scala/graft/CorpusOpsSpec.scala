@@ -59,56 +59,6 @@ class CorpusOpsSpec extends AnyFunSuite with SparkTest {
     assert(merged == "^a  ^ba  ", "merge leaked across a token boundary")
   }
 
-  test("bpe batch mode: batch=1 bit-equals sequential; batch>1 packs non-conflicting merges") {
-    import spark.implicits._
-    val words = Seq(("aaab", 3L), ("aab", 2L)).toDF("word", "cnt")
-    val seqChain = CorpusOps.bpeChainOf(CorpusOps.bpeSymInit(words))._1
-    spark.conf.set(CorpusOps.BpeBatchKey, "1")
-    val b1 =
-      try CorpusOps.bpeChainOf(CorpusOps.bpeSymInit(words))._1
-      finally spark.conf.unset(CorpusOps.BpeBatchKey)
-    assert(b1 == seqChain, "batch=1 must reproduce the sequential trainer exactly")
-    // a vocab with two disjoint high-count pairs: (a,b) from "ab"×5 and
-    // (c,d) from "cd"×4 — batch=2 learns BOTH in round 1; the
-    // conflicting (b,a) of "abab" must wait (shares a and b)
-    val w2 = Seq(("ab", 5L), ("cd", 4L), ("abab", 3L)).toDF("word", "cnt")
-    spark.conf.set(CorpusOps.BpeBatchKey, "2")
-    val (m2, _) =
-      try CorpusOps.bpeChainOf(CorpusOps.bpeSymInit(w2), rounds = 2)
-      finally spark.conf.unset(CorpusOps.BpeBatchKey)
-    val round1 = m2.filter(_._1 == 1).map { case (_, x, y, _) => (x, y) }
-    assert(round1 == Seq(("a", "b"), ("c", "d")),
-      s"round 1 should batch the two disjoint pairs, got $round1")
-    // within every round, no symbol appears in two DIFFERENT merges
-    m2.groupBy(_._1).values.filter(_.size > 1).foreach { rs =>
-      rs.map { case (_, x, y, _) => Set(x, y) }.combinations(2).foreach {
-        case Seq(s1, s2) =>
-          assert((s1 & s2).isEmpty, s"conflicting merges batched together: $rs")
-      }
-    }
-    // 2 rounds at batch=2 learn as many merges as 4 sequential rounds
-    assert(m2.size >= 3, s"batching did not reduce the round count: $m2")
-    // PRODUCED-symbol conflict (round-13 ADVICE): keeping (a,b)
-    // manufactures "ab", so a same-round (ab,c) would merge tokens the
-    // first replace just created — order-dependent. Hand-built frame
-    // where the symbol "ab" pre-exists next to live (a,b) pairs:
-    //   "^a  ^b  ^c  "×10 → (a,b)=10, (b,c)=10; "^ab  ^c  "×6 → (ab,c)=6
-    // batch=3 round 1 must keep ONLY (a,b): (b,c) shares b, (ab,c)'s
-    // operand equals (a,b)'s concatenation.
-    val v0 = Seq(("^a  ^b  ^c  ", 10L), ("^ab  ^c  ", 6L)).toDF("sym", "cnt")
-    spark.conf.set(CorpusOps.BpeBatchKey, "3")
-    val (m3, f3) =
-      try CorpusOps.bpeChainOf(v0, rounds = 1)
-      finally spark.conf.unset(CorpusOps.BpeBatchKey)
-    assert(m3.map { case (_, x, y, _) => (x, y) } == Seq(("a", "b")),
-      s"produced-symbol conflict not skipped: $m3")
-    // and the 10-count row's fresh "^ab  " was NOT re-merged with ^c
-    val syms = f3.last.orderBy(col("cnt").desc)
-      .collect().map(r => r.getString(r.fieldIndex("sym"))).toSeq
-    assert(syms == Seq("^ab  ^c  ", "^ab  ^c  "),
-      s"a same-round replace consumed a just-created symbol: $syms")
-  }
-
   test("bpe merge replace survives quote and backslash symbols (no SQL interpolation)") {
     import spark.implicits._
     // "''"×4: winning pair is (', ') — an interpolated expr() would

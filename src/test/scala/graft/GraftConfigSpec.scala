@@ -75,41 +75,6 @@ class GraftConfigSpec extends AnyFunSuite with SparkTest {
     assert(GraftConfig.getInt(spark, "spark.graft.test.intkey", 5) == 5)
   }
 
-  // -- scale profile (r14): one flag flips the parity-spec'd 100 TB knobs
-
-  test("profile=scale resolves unset scale knobs; explicit keys always win; off by default") {
-    // off: every scale knob falls through to the caller's default
-    for ((k, _) <- GraftConfig.ScaleDefaults)
-      assert(GraftConfig.get(spark, k, "caller-default") == "caller-default")
-    spark.conf.set(GraftConfig.ProfileKey, "scale")
-    try {
-      assert(GraftConfig.get(spark, "spark.graft.lsh.maxBucket", "0") == "auto")
-      assert(GraftConfig.get(spark, "spark.graft.substr.hashGrams", "false") == "true")
-      assert(GraftConfig.get(spark, "spark.graft.approxQuantileCuts", "false") == "true")
-      // an explicitly SET key beats the profile default
-      spark.conf.set("spark.graft.lsh.maxBucket", "16")
-      try assert(GraftConfig.get(spark, "spark.graft.lsh.maxBucket", "0") == "16")
-      finally spark.conf.unset("spark.graft.lsh.maxBucket")
-      // non-scale keys are untouched by the profile
-      assert(GraftConfig.get(spark, "spark.graft.bpe.batchMerges", "1") == "1")
-    } finally spark.conf.unset(GraftConfig.ProfileKey)
-  }
-
-  test("profile=scale end-to-end: outputs match the default path (the parity contract)") {
-    // the profile only flips OUTPUT-PRESERVING knobs: substring spans are
-    // hashed≡exact, quality_filter cuts bit-equal at test SFs, and LSH CC
-    // consumers bit-identical under any ceiling
-    val spansDefault = operators.TextOps.substringSpans(spark, sf).collect().toSeq
-    val qualDefault = operators.TextOps.qualityFilter(spark, sf).collect().toSeq
-    val groupsDefault = operators.TextOps.dedupGroups(spark, sf).collect().toSeq
-    spark.conf.set(GraftConfig.ProfileKey, "scale")
-    try {
-      assert(operators.TextOps.substringSpans(spark, sf).collect().toSeq == spansDefault)
-      assert(operators.TextOps.qualityFilter(spark, sf).collect().toSeq == qualDefault)
-      assert(operators.TextOps.dedupGroups(spark, sf).collect().toSeq == groupsDefault)
-    } finally spark.conf.unset(GraftConfig.ProfileKey)
-  }
-
   // -- wiring: the reconnect policy resolves through GraftConfig --------
 
   test("BackoffPolicy.fromConf reads typed knobs with defaults") {

@@ -1270,39 +1270,6 @@ class OperatorSpec extends AnyFunSuite with SparkTest {
     assert(gate(0).getDouble(2) >= 0.0 && gate(0).getDouble(2) <= 1.0)
   }
 
-  test("approx-quantile cut path is bit-equal to the exact rank path (round-10 #4)") {
-    // The 100 TB path for ppl_buckets / quality_filter swaps the
-    // per-language rank window for approx-quantile score cutoffs with an
-    // exact boundary tie-split. While the sketch's rank error is under
-    // one rank (accuracy ≫ per-language doc count here), the swap must be
-    // invisible: identical rows, identical order. The corpus contains
-    // exact duplicate documents, so the tie-split is genuinely exercised
-    // (duplicate docs carry identical scores).
-    def snap(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq
-    val exactPpl = snap(operators.CorpusOps.pplBuckets(spark, sf))
-    val exactQf = snap(operators.TextOps.qualityFilter(spark, sf))
-    spark.conf.set(operators.ApproxCuts.EnabledKey, "true")
-    try {
-      val approxPpl = snap(operators.CorpusOps.pplBuckets(spark, sf))
-      assert(approxPpl == exactPpl, "ppl_buckets approx path diverged from the rank path")
-      val approxQf = snap(operators.TextOps.qualityFilter(spark, sf))
-      assert(approxQf == exactQf, "quality_filter approx path diverged from the rank path")
-      // and the scale property itself: no window partitioned by language
-      // alone remains — the only window left partitions by (lang, score)
-      val p = operators.CorpusOps.pplBuckets(spark, sf)
-        .queryExecution.executedPlan.toString
-      val winSpecs = "windowspecdefinition\\(([^)]*)\\)".r
-        .findAllMatchIn(p).map(_.group(1)).toSeq
-      assert(winSpecs.nonEmpty, "expected the tie-split window in the approx plan")
-      assert(winSpecs.forall(s => s.contains("mean_nll")),
-        s"a language-only window survived in the approx plan: $winSpecs")
-    } finally {
-      spark.conf.unset(operators.ApproxCuts.EnabledKey)
-      graft.api.Caches.release(spark)
-    }
-  }
-
   test("dedup_threshold_sweep is monotone non-increasing and endpoint-consistent") {
     val rows = TextOps.dedupThresholdSweep(spark, sf).collect()
     assert(rows.map(_.getAs[Double]("threshold")).toSeq == Seq(0.5, 0.6, 0.7, 0.8, 0.9))

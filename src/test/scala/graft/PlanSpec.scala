@@ -393,272 +393,5 @@ class PlanSpec extends AnyFunSuite with SparkTest {
       s"1-row cuts must broadcast:\n$p")
     assert(p.contains("partial_count") || p.contains("partial"),
       s"per-bin stats must map-side combine:\n$p")
-  }
-
-  test("autoSalt rule: diagnostic registers the hot key, rewrite salts the join, output bit-identical") {
-    import org.apache.spark.sql.functions._
-    import graft.plans.{AutoSalt, AutoSaltRule}
-    // production wiring goes through GraftExtensions.injectOptimizerRule;
-    // the shared test session predates extension install, so inject the
-    // SAME rule instance through experimental.extraOptimizations (both
-    // paths land in the one user-rule optimizer batch)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ AutoSaltRule(spark)
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // constructed hot key: 80% of fact rows carry user_id=7
-      val fact = spark.range(50000).select(
-        when(col("id") % 5 =!= 0, lit(7L)).otherwise(col("id") % 97).as("user_id"),
-        col("id").as("event_id"))
-      val dim = spark.range(97).select(col("id").as("user_id"),
-        (col("id") * 3).as("weight"))
-      // the heavy_hitters-shaped diagnostic measures the share and registers
-      val share = AutoSalt.analyzeAndRegister(spark, fact, "user_id")
-      assert(share > 50.0, s"constructed skew should exceed 50%, got $share")
-      assert(spark.conf.get(AutoSalt.KeyPrefix + "user_id") ==
-        AutoSalt.DefaultBuckets.toString)
-      def q() = fact.join(dim, "user_id")
-        .groupBy("user_id").agg(sum("weight").as("w"), count(lit(1)).as("n"))
-      // flag off: plans untouched even with the key registered
-      val off = q()
-      assert(!off.queryExecution.optimizedPlan.toString.contains("__graft_salt"))
-      val offRows = off.collect().map(_.toString).sorted.toSeq
-      spark.conf.set(AutoSalt.EnabledKey, "true")
-      val on = q()
-      val p = on.queryExecution.optimizedPlan.toString
-      assert(p.contains("__graft_salt_f"), s"fact salt missing:\n$p")
-      assert(p.contains("__graft_salt_d"), s"dim replication missing:\n$p")
-      assert(p.toLowerCase.contains("explode"), s"dim must replicate via explode:\n$p")
-      // the physical join keys must WIDEN to (user_id, salt) — that is
-      // the whole point: the hot key spreads over the salt buckets
-      val phys = on.queryExecution.executedPlan.toString
-      assert("(SortMergeJoin|ShuffledHashJoin) \\[user_id#\\d+L, __graft_salt_f#\\d+L\\]".r
-        .findFirstIn(phys).isDefined, s"join keys not widened:\n$phys")
-      // bit parity: the salted plan is the same query
-      assert(on.collect().map(_.toString).sorted.toSeq == offRows)
-      // an UNregistered key stays untouched even with the flag on
-      val other = fact.withColumnRenamed("user_id", "uid")
-        .join(dim.withColumnRenamed("user_id", "uid"), "uid")
-      assert(!other.queryExecution.optimizedPlan.toString.contains("__graft_salt"))
-      // a broadcast-sized dim never salts: no shuffle exists to skew
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (1L << 30).toString)
-      assert(!q().queryExecution.optimizedPlan.toString.contains("__graft_salt"))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_.isInstanceOf[AutoSaltRule])
-      spark.conf.unset(AutoSalt.EnabledKey)
-      spark.conf.unset(AutoSalt.KeyPrefix + "user_id")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
-    }
-  }
-
-  test("autoSalt aggregate rewrite: two-phase (key, salt) partial + final merge, bit-identical") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    import graft.plans.{AutoSalt, AutoSaltRule}
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ AutoSaltRule(spark)
-    try {
-      // constructed hot key: 80% of rows carry user_id=7
-      val fact = spark.range(50000).select(
-        when(col("id") % 5 =!= 0, lit(7L)).otherwise(col("id") % 97).as("user_id"),
-        col("id").as("event_id"),
-        (col("id") % 1000).cast("decimal(18,2)").as("amount"))
-      spark.conf.set(AutoSalt.KeyPrefix + "user_id", "16")
-      // collect_list is THE case the rewrite exists for: its partial
-      // state is the data itself, so a hot key funnels every element
-      // through one reducer; count/sum/min/max ride along exactly
-      def q() = fact.groupBy("user_id").agg(
-        count(lit(1)).as("n"), sum(col("event_id")).as("s"),
-        min(col("event_id")).as("mn"), max(col("event_id")).as("mx"),
-        sum(col("amount")).as("amt"), collect_list(col("event_id")).as("cl"))
-        .select(col("user_id"), col("n"), col("s"), col("mn"), col("mx"),
-          col("amt"), sort_array(col("cl")).as("cl"))
-      val offRows = q().collect().map(_.toString).sorted.toSeq
-      spark.conf.set(AutoSalt.EnabledKey, "true")
-      val on = q()
-      val optimized = on.queryExecution.optimizedPlan
-      assert(optimized.toString.contains("__graft_salt_a"),
-        s"aggregate not salted:\n$optimized")
-      val aggs = optimized.collect { case a: Aggregate => a }
-      assert(aggs.size == 2, s"expected partial+final Aggregate pair:\n$optimized")
-      assert(aggs.exists(_.groupingExpressions.size == 2),
-        s"partial must group by (user_id, salt):\n$optimized")
-      assert(on.collect().map(_.toString).sorted.toSeq == offRows,
-        "salted two-phase aggregate diverged from the plain group-by")
-      // double sums are excluded (order-sensitive addition) even when a
-      // holistic agg qualifies the node: untouched
-      val dbl = fact.groupBy("user_id")
-        .agg(sum(col("event_id").cast("double")).as("ds"),
-          collect_list(col("event_id")).as("cl"))
-      assert(!dbl.queryExecution.optimizedPlan.toString.contains("__graft_salt"),
-        "sum(double) must not be re-associated by the salted rewrite")
-      // DISTINCT aggregates are excluded: untouched
-      val dst = fact.groupBy("user_id").agg(countDistinct(col("event_id")).as("d"),
-        collect_list(col("event_id")).as("cl"))
-      assert(!dst.queryExecution.optimizedPlan.toString.contains("__graft_salt"))
-      // purely ALGEBRAIC aggregates never rewrite: map-side combine
-      // already collapses the hot key, salting would be pure overhead
-      val alg = fact.groupBy("user_id")
-        .agg(count(lit(1)).as("n"), sum(col("event_id")).as("s"))
-      assert(!alg.queryExecution.optimizedPlan.toString.contains("__graft_salt"),
-        "algebraic-only aggregates must stay untouched")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_.isInstanceOf[AutoSaltRule])
-      spark.conf.unset(AutoSalt.EnabledKey)
-      spark.conf.unset(AutoSalt.KeyPrefix + "user_id")
-    }
-  }
-
-  test("autoSalt outer joins: inner-union-anti decomposition, parity on left/right/full") {
-    import org.apache.spark.sql.functions._
-    import graft.plans.{AutoSalt, AutoSaltRule}
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ AutoSaltRule(spark)
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // hot key 7; fact keys 999xx have NO dim match (left null-extension);
-      // dim key 5000 has NO fact rows (right null-extension)
-      val fact = spark.range(40000).select(
-        when(col("id") % 5 =!= 0, lit(7L))
-          .when(col("id") % 5 === 0 && col("id") % 25 === 0, col("id") % 7 + 99900L)
-          .otherwise(col("id") % 97).as("user_id"),
-        col("id").as("event_id"))
-      val dim = spark.range(98).select(
-        when(col("id") === 97, lit(5000L)).otherwise(col("id")).as("user_id"),
-        (col("id") * 3).as("weight"))
-      spark.conf.set(AutoSalt.KeyPrefix + "user_id", "16")
-      for (jt <- Seq("left_outer", "right_outer", "full_outer")) {
-        def q() = fact.join(dim, fact("user_id") === dim("user_id"), jt)
-          .select(fact("user_id").as("fu"), col("event_id"),
-            dim("user_id").as("du"), col("weight"))
-        spark.conf.set(AutoSalt.EnabledKey, "false")
-        val offRows = q().collect().map(_.toString).sorted.toSeq
-        spark.conf.set(AutoSalt.EnabledKey, "true")
-        val on = q()
-        val p = on.queryExecution.optimizedPlan.toString
-        assert(p.contains("__graft_salt"), s"$jt not salted:\n$p")
-        assert(p.contains("Union"), s"$jt missing the anti-union decomposition:\n$p")
-        assert(p.contains("LeftAnti") || p.contains("left_anti"),
-          s"$jt missing the salted anti branch:\n$p")
-        val onRows = on.collect().map(_.toString).sorted.toSeq
-        assert(onRows == offRows,
-          s"salted $jt diverged: ${onRows.size} vs ${offRows.size} rows")
-      }
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_.isInstanceOf[AutoSaltRule])
-      spark.conf.unset(AutoSalt.EnabledKey)
-      spark.conf.unset(AutoSalt.KeyPrefix + "user_id")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
-    }
-  }
-
-  test("autoSalt sketch registration decides exactly like the exact pass") {
-    import org.apache.spark.sql.functions._
-    import graft.plans.AutoSalt
-    def cleanup(): Unit = Seq("user_id", "event_type", "uid").foreach(k =>
-      spark.conf.unset(AutoSalt.KeyPrefix + k))
-    try {
-      // constructed skew: far above threshold — both must register
-      val hot = spark.range(60000).select(
-        when(col("id") % 5 =!= 0, lit(7L)).otherwise(col("id") % 997).as("uid"))
-      val exactShare = AutoSalt.analyzeAndRegister(spark, hot, "uid")
-      val exactReg = spark.conf.getOption(AutoSalt.KeyPrefix + "uid").isDefined
-      cleanup()
-      val skShare = AutoSalt.analyzeAndRegisterSketch(spark, hot, "uid")
-      val skReg = spark.conf.getOption(AutoSalt.KeyPrefix + "uid").isDefined
-      assert(exactReg && skReg, "hot fixture must register under both passes")
-      // Misra-Gries underestimates by at most N/counters (100/512 pct)
-      assert(skShare <= exactShare + 1e-9 && skShare >= exactShare - 100.0 / 512 - 1e-9,
-        s"sketch share $skShare outside MG bound of exact $exactShare")
-      cleanup()
-      // uniform fixture: far below threshold — neither registers
-      val flat = spark.range(50000).select(col("id").as("uid"))
-      AutoSalt.analyzeAndRegister(spark, flat, "uid")
-      val exactFlat = spark.conf.getOption(AutoSalt.KeyPrefix + "uid").isDefined
-      AutoSalt.analyzeAndRegisterSketch(spark, flat, "uid")
-      val skFlat = spark.conf.getOption(AutoSalt.KeyPrefix + "uid").isDefined
-      assert(!exactFlat && !skFlat, "uniform fixture must register under neither")
-      cleanup()
-      // driver tables: the two passes agree on both event columns
-      val ev = graft.model.Tables.events(spark, sf)
-      for (c <- Seq("user_id", "event_type")) {
-        AutoSalt.analyzeAndRegister(spark, ev, c)
-        val e = spark.conf.getOption(AutoSalt.KeyPrefix + c).isDefined
-        spark.conf.unset(AutoSalt.KeyPrefix + c)
-        AutoSalt.analyzeAndRegisterSketch(spark, ev, c)
-        val s = spark.conf.getOption(AutoSalt.KeyPrefix + c).isDefined
-        assert(e == s, s"sketch and exact disagree on events.$c: exact=$e sketch=$s")
-        spark.conf.unset(AutoSalt.KeyPrefix + c)
-      }
-    } finally cleanup()
-  }
-
-  test("autoSalt registration is RELATION-scoped: a same-named key on another table never salts") {
-    import org.apache.spark.sql.functions._
-    import graft.plans.{AutoSalt, AutoSaltRule}
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ AutoSaltRule(spark)
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val base = java.nio.file.Files.createTempDirectory("autosalt_scope").toString
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // two FILE-backed tables sharing the key name: `hot` is 80% one key,
-      // `flat` is uniform — the skew lives in ONE relation only
-      spark.range(50000).select(
-          when(col("id") % 5 =!= 0, lit(7L)).otherwise(col("id") % 97).as("user_id"),
-          col("id").as("event_id"))
-        .write.parquet(s"$base/hot")
-      spark.range(50000).select((col("id") % 997).as("user_id"),
-          col("id").as("event_id"))
-        .write.parquet(s"$base/flat")
-      val hot = spark.read.parquet(s"$base/hot")
-      val flat = spark.read.parquet(s"$base/flat")
-      val dim = spark.range(997).select(col("id").as("user_id"),
-        (col("id") * 3).as("weight"))
-      val share = AutoSalt.analyzeAndRegister(spark, hot, "user_id")
-      assert(share > 50.0)
-      // the registration must carry the relation fingerprint
-      val reg = spark.conf.get(AutoSalt.KeyPrefix + "user_id")
-      assert(reg.contains("@"), s"file-backed registration must be fingerprinted, got: $reg")
-      spark.conf.set(AutoSalt.EnabledKey, "true")
-      // the MEASURED table's join salts...
-      val pHot = hot.join(dim, "user_id").groupBy("user_id")
-        .agg(sum("weight").as("w")).queryExecution.optimizedPlan.toString
-      assert(pHot.contains("__graft_salt"), s"registered relation must salt:\n$pHot")
-      // ...the other table's same-named join does NOT (the S× dim
-      // replication it would pay was never measured as needed)
-      val pFlat = flat.join(dim, "user_id").groupBy("user_id")
-        .agg(sum("weight").as("w")).queryExecution.optimizedPlan.toString
-      assert(!pFlat.contains("__graft_salt"),
-        s"unmeasured relation with same key name must stay unsalted:\n$pFlat")
-      // a RE-READ of the measured table (new DataFrame, new expr ids)
-      // still matches: the fingerprint is the table identity, not the df
-      val pHot2 = spark.read.parquet(s"$base/hot").join(dim, "user_id")
-        .groupBy("user_id").agg(sum("weight").as("w"))
-        .queryExecution.optimizedPlan.toString
-      assert(pHot2.contains("__graft_salt"), s"re-read of measured table must salt:\n$pHot2")
-      // a manual (fingerprint-less) registration keeps legacy name scope
-      spark.conf.set(AutoSalt.KeyPrefix + "user_id", "16")
-      val pFlatLegacy = flat.join(dim, "user_id").groupBy("user_id")
-        .agg(sum("weight").as("w")).queryExecution.optimizedPlan.toString
-      assert(pFlatLegacy.contains("__graft_salt"),
-        "manual bare-buckets registration must keep name scope")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_.isInstanceOf[AutoSaltRule])
-      spark.conf.unset(AutoSalt.EnabledKey)
-      spark.conf.unset(AutoSalt.KeyPrefix + "user_id")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    }
-  }
+   }
 }

@@ -38,6 +38,35 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"raw control bytes make files grep-invisible:\n${offenders.mkString("\n")}")
   }
 
+  /** Every `spark.graft.*` key the library reads. A new knob is a new
+    * physical path to keep tested, so adding one means adding it here and
+    * to USAGE.md, where review sees it. */
+  private val knobs = Set(
+    "spark.graft.ann.allowExtrapolatedShards",
+    "spark.graft.ann.probeId",
+    "spark.graft.broadcastMaxRows",
+    "spark.graft.cc.localMaxEdges",
+    "spark.graft.decontam.bloom.bits",
+    "spark.graft.decontam.bloom.items",
+    "spark.graft.fanout.minRows",
+    "spark.graft.partition.count",
+    "spark.graft.payload",
+    "spark.graft.reconnect.backoffMillis",
+    "spark.graft.reconnect.maxTries")
+
+  test("spark.graft knob inventory: src/main literals equal the allowlist, all in USAGE.md") {
+    val literal = "\"(spark\\.graft\\.[A-Za-z0-9_.]*[A-Za-z0-9_])".r
+    val found = (for {
+      file <- scalaFiles("src/main")
+      m <- literal.findAllMatchIn(new String(Files.readAllBytes(file), "UTF-8"))
+    } yield m.group(1)).toSet
+    assert(found.nonEmpty, "no spark.graft literals found: is the walk rooted right?")
+    assert(found -- knobs == Set.empty, "knobs missing from the allowlist")
+    assert(knobs -- found == Set.empty, "allowlisted knobs no longer in src/main")
+    val usage = new String(Files.readAllBytes(Paths.get("USAGE.md")), "UTF-8")
+    assert(knobs.filterNot(usage.contains) == Set.empty, "knobs undocumented in USAGE.md")
+  }
+
   test("lint detects a planted NUL (self-check)") {
     // The lint predicate itself, applied to a buffer with a raw NUL —
     // guards against the check rotting into an always-green walk.

@@ -13,6 +13,9 @@ trait SparkTest {
 
   val sf = "/root/testdata/sf0.001"
 
+  /** The same generated test data at another scale factor, e.g. "0.1". */
+  def sfAt(scale: String): String = s"${new java.io.File(sf).getParent}/sf$scale"
+
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -166,27 +165,6 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTest {
         (r.getAs[Int]("n_tokens").toLong - r.getAs[Long]("dup_tokens"))).toMap
     assert(out.keySet == stats.keySet)
     out.foreach { case (id, (kept, _)) => assert(kept == stats(id)) }
-  }
-
-  test("hashed-gram shuffle key: all three kernels bit-equal the exact-text path (r13 verdict #5)") {
-    // spark.graft.substr.hashGrams swaps the gram STRING for a 128-bit
-    // xxhash64 pair as the shuffle key — the 100 TB configuration; the
-    // outputs must be identical (collisions are 2^-64-improbable, and on
-    // the driver corpora absent)
-    def all3(hashed: Boolean): (Seq[Row], Seq[Row], Seq[Row]) = {
-      if (hashed) spark.conf.set(TextOps.SubstrHashKey, "true")
-      try {
-        (TextOps.substringSpans(spark, sf).collect().toSeq,
-          TextOps.substringDedupStats(spark, sf).collect().toSeq,
-          TextOps.substringDedupApply(spark, sf).collect().toSeq)
-      } finally if (hashed) spark.conf.unset(TextOps.SubstrHashKey)
-    }
-    val (s1, t1, a1) = all3(hashed = false)
-    val (s2, t2, a2) = all3(hashed = true)
-    assert(s1 == s2, "substring_spans diverged under hashed gram keys")
-    assert(t1 == t2, "substring_dedup_stats diverged under hashed gram keys")
-    assert(a1 == a2, "substring_dedup_apply diverged under hashed gram keys")
-    assert(s1.nonEmpty && t1.nonEmpty && a1.nonEmpty)
   }
 
   test("substring_dedup_stats equals the brute-force keep-first reference") {
