@@ -79,25 +79,13 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => only.forall(_.contains(n)) },
       reps)
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // Per-query [min,max] across reps (round-14 verdict item 4): with
-    // only the settled value, a +2.6 s pagerank delta round-over-round is
-    // unfalsifiable against this box's ±6% total / ±30% per-key noise —
-    // the spread states each key's OWN within-run variance so a real
-    // regression (new min above old max) separates from a noisy rep.
-    val spread = results.map { case (k, _, lo, hi) =>
-      "\"" + k + "\":[" + fmt(lo) + "," + fmt(hi) + "]" }
-      .mkString("{", ",", "}")
-    val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LAST.json")
     // Full per-query map goes to a FILE only: at 105 queries the map is
     // ~2.4k chars, and the driver captures a 2,000-char stdout tail — a
     // per-query stdout line is unparsable no matter the float precision
     // (that truncation broke the bench artifact seven rounds running).
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,""" +
-      s""""cpus":"$cpus","errors":$errs,"queries":$qs,"spread":$spread,"sf":"$sfDir"}"""
+    val full = detail(total, reps, cpus, results, failed, sfDir)
     Files.writeString(Paths.get(outPath), full + "\n")
     // r19 (PERF_r18 n_common=0 fix): ALSO write a per-core-count copy of
     // the detail file. BENCH_LAST.json is overwritten by every run — the
@@ -113,6 +101,29 @@ object Bench {
     // per-query map so an auditor can recover it. summaryLine is
     // unit-tested to stay < 1900 chars even with pathological inputs.
     println(summaryLine(total, results.size, sfDir, outPath, reps, failed.size))
+  }
+
+  /** The detail file's JSON: the per-query map, the failing keys
+    * (`errors`) and each one's cause (`causes`). */
+  private[graft] def detail(total: Double, reps: Int, cpus: String,
+      results: Seq[(String, Double, Double, Double)], failed: Seq[(String, String)],
+      sfDir: String): String = {
+    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    // Per-query [min,max] across reps (round-14 verdict item 4): with
+    // only the settled value, a +2.6 s pagerank delta round-over-round is
+    // unfalsifiable against this box's ±6% total / ±30% per-key noise —
+    // the spread states each key's OWN within-run variance so a real
+    // regression (new min above old max) separates from a noisy rep.
+    val spread = results.map { case (k, _, lo, hi) =>
+      "\"" + k + "\":[" + fmt(lo) + "," + fmt(hi) + "]" }
+      .mkString("{", ",", "}")
+    val errs = failed.map(f => "\"" + f._1 + "\"").mkString("[", ",", "]")
+    val causes = failed.map { case (k, c) => "\"" + k + "\":" + Verify.jsonString(c) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,""" +
+      s""""cpus":"$cpus","errors":$errs,"causes":$causes,"queries":$qs,"spread":$spread,""" +
+      s""""sf":"$sfDir"}"""
   }
 
   /** Path of the per-core-count detail copy, `<out>_c<cpus>.json` — or
@@ -142,21 +153,24 @@ object Bench {
   /** Timed min-of-`reps` loop over `queries`, with per-query cache sweep.
     * A query that throws must not masquerade as a fast one (round-9
     * verdict item 3): failures are NAMED in the returned error list (the
-    * artifact's "errors" array and the stdout summary's count), and the
-    * failed query's elapsed-to-failure still counts toward the total —
-    * honest cost, visibly marked broken. Per-query settling is adaptive:
-    * see [[settle]]. */
+    * artifact's "errors" array and the stdout summary's count), each with
+    * the cause of its first failing rep ([[cause]]), and the failed
+    * query's elapsed-to-failure still counts toward the total — honest
+    * cost, visibly marked broken. Per-query settling is adaptive: see
+    * [[settle]]. */
   private[graft] def runQueries(
       spark: SparkSession,
       sfDir: String,
       queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-      reps: Int): (Seq[(String, Double, Double, Double)], Seq[String]) = {
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+      reps: Int): (Seq[(String, Double, Double, Double)], Seq[(String, String)]) = {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = queries.map { case (name, fn) =>
       def rep(): Double = {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() }
-        catch { case scala.util.control.NonFatal(_) => failed += name }
+        catch { case scala.util.control.NonFatal(e) =>
+          if (!failed.contains(name)) failed(name) = cause(e)
+        }
         val elapsed = (System.nanoTime() - t0) / 1e9
         cleanup(spark)
         elapsed
@@ -166,6 +180,10 @@ object Bench {
     }
     (results, failed.toSeq)
   }
+
+  /** `"<ExceptionClass>: <message>"`, cut to 500 characters. */
+  private[graft] def cause(e: Throwable): String =
+    s"${e.getClass.getName}: ${e.getMessage}".take(500)
 
   /** Settle one query's reported time from `reps` timed repetitions.
     * Agreeing reps (max ≤ 2× min) report the MIN — the round-8 rationale:

@@ -5,8 +5,9 @@ import java.util.UUID
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Tables.{Event, Meta}
 
@@ -66,14 +67,23 @@ class GraftBus(spark: SparkSession, clientId: String = "graft",
   }
 
   /** The store as a DataFrame (meta struct + payload string + derived
-    * partition), in insertion order via a monotonic seq column. */
+    * partition), in insertion order via a monotonic seq column. The frame
+    * is a snapshot: events emitted after the call are not in it.
+    *
+    * The rows are plain [[Row]]s over a schema computed once in the
+    * companion, so a call pays no encoder construction, and the frame is a
+    * `LocalRelation` the optimizer can fold filters and limits into. */
   def toDF: DataFrame = {
-    import spark.implicits._
-    val rows = lock.synchronized { buffer.toVector }
-    val base = rows.zipWithIndex.map { case (e, i) => (i.toLong, e) }
-      .toDF("seq", "event")
-    base.select(col("seq"), col("event.meta").as("meta"),
-      col("event.payload").as("payload"))
+    val events = lock.synchronized { buffer.toVector }
+    val rows = new java.util.ArrayList[Row](events.size)
+    events.iterator.zipWithIndex.foreach { case (e, i) =>
+      val m = e.meta
+      rows.add(Row(i.toLong, Row(Row(m.name, m.producer, m.version, m.cid,
+        m.uuid, m.created_at, m.key), e.payload)))
+    }
+    spark.createDataFrame(rows, GraftBus.StoreSchema)
+      .select(col("seq"), col("event.meta").as("meta"),
+        col("event.payload").as("payload"))
       .withColumn("partition",
         pmod(hash(coalesce(col("meta.key"), col("meta.uuid"))), lit(partitionCount)))
   }
@@ -97,9 +107,13 @@ class GraftBus(spark: SparkSession, clientId: String = "graft",
   /** `Memory.include?` — partial match on payload and/or meta
     * (documented semantics). Predicates are Spark Columns over the store
     * schema (`meta.*`, `payload`), so the same JSON-path predicates used
-    * in the oracle-checked `include_match` query apply here. */
+    * in the oracle-checked `include_match` query apply here.
+    *
+    * When Catalyst can evaluate `pred` on the driver (no Python UDF, no
+    * subquery), the filter folds into the store's `LocalRelation` and the
+    * answer needs no Spark job. */
   def include(pred: Column): Boolean =
-    toDF.filter(pred).limit(1).count() > 0
+    !toDF.filter(pred).isEmpty
 
   // ------------------------------------------------------------ consumer
   /** Batch consumer: the reference's per-event `process` contract
@@ -187,6 +201,13 @@ class GraftBus(spark: SparkSession, clientId: String = "graft",
 }
 
 object GraftBus {
+  /** `(seq, event)` rows of [[GraftBus.toDF]]: field names, types and
+    * nullability are those of the product encoder for `(Long, Event)`. */
+  private val StoreSchema: StructType = {
+    val Array(seq, event) = Encoders.product[(Long, Event)].schema.fields
+    StructType(Seq(seq.copy(name = "seq"), event.copy(name = "event")))
+  }
+
   /** `@default_timeout` / `@max_timeout` (`channel_client.ex:64-65`). */
   val DefaultReplyTimeoutMillis: Long = 5000L
   val MaxReplyTimeoutMillis: Long = 60000L

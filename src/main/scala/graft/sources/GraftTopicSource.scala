@@ -25,8 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * {{{ <dir>/<topic>/p<partition>.log   // line = key \t tsMicros \t value }}}
   *
   * Offsets are BYTE positions, not record numbers:
-  *  - `latestOffset` is `Files.size` per partition — O(1) metadata, no
-  *    scan, exactly how a real broker serves end offsets;
+  *  - `latestOffset` is the last record boundary per partition — the
+  *    file size, checked against a trailing '\n' (one byte read), no
+  *    scan, the way a real broker serves end offsets;
   *  - a reader seeks straight to its start offset — resuming from a
   *    checkpoint never re-reads the log prefix;
   *  - the emitted `offset` column (the record's start byte) is strictly
@@ -47,9 +48,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * consumer offsets.
   *
   * Single-writer-per-partition is the broker contract (the reference
-  * serializes appends through the server); appends are whole flushed
-  * lines, so a byte offset captured by `latestOffset` always falls on a
-  * record boundary.
+  * serializes appends through the server). An append may be observed
+  * half-written, so `latestOffset` clamps every end offset to the last
+  * record boundary (just after a '\n'); a planned batch never ends
+  * inside a record.
   */
 object GraftTopicLog {
 
@@ -97,12 +99,16 @@ object GraftTopicLog {
         } finally out.close()
     }
 
-  /** End byte offset per assigned partition — O(1) file metadata. */
+  /** End byte offset per assigned partition: the last record boundary at
+    * or below the file's length. A producer's append can be observed
+    * mid-write, so the length alone may fall inside a record; the torn
+    * tail is left for a later batch. Normally one byte is read (a log
+    * ends in '\n'). */
   private[sources] def endOffsets(dir: String, topic: String,
       partitions: Seq[Int]): Map[Int, Long] =
     partitions.map { p =>
       val f = partitionFile(dir, topic, p)
-      p -> (if (f.exists()) f.length() else 0L)
+      p -> (if (f.exists()) recordBoundaryAtMost(f, 0L, f.length()) else 0L)
     }.toMap
 
   /** Offset JSON codec — {"0":123,"7":456}; dependency-free so the
@@ -224,16 +230,18 @@ object GraftTopicLog {
       .map { case (p, vs) => p -> vs.map(_._2).max }
   }
 
-  /** Largest record-boundary byte offset in (start, limit] of a partition
-    * log (a boundary sits just after a '\n'). If no newline lies in that
-    * window — a single record larger than the whole byte budget — returns
-    * the first boundary AFTER limit, so an undersized cap degrades to
-    * one-record batches instead of stalling the stream. Scans only a
-    * bounded window near the cap point (backward in 64 KiB chunks), never
-    * the backlog. */
+  /** Largest record-boundary byte offset in (start, min(limit, size)] of
+    * a partition log (a boundary sits just after a '\n'). If no newline
+    * lies in that window — a single record larger than the whole byte
+    * budget — returns the first boundary AFTER limit, so an undersized
+    * cap degrades to one-record batches instead of stalling the stream.
+    * End of file is not a boundary unless a '\n' ends it: an append can
+    * be observed mid-write, and a batch ending there would read a cut
+    * record. With no whole record after `start`, returns `start`. Scans
+    * only a bounded window near the cap point (backward in 64 KiB
+    * chunks), never the backlog. */
   private[graft] def recordBoundaryAtMost(f: File, start: Long, limit: Long): Long = {
     val size = f.length()
-    if (limit >= size) return size // flushed whole lines: EOF is a boundary
     val chunk = 64 * 1024
     val ch = java.nio.channels.FileChannel.open(f.toPath)
     try {
@@ -243,8 +251,10 @@ object GraftTopicLog {
         while (buf.hasRemaining && ch.read(buf) >= 0) {}
         buf.array()
       }
-      // backward chunked scan for the last '\n' with index in [start, limit)
-      var hi = limit
+      // backward chunked scan for the last '\n' with index in
+      // [start, min(limit, size)); a log's last byte is normally '\n'
+      var hi = math.min(limit, size)
+      if (hi > start && readRange(hi - 1, 1)(0) == '\n') return hi
       while (hi > start) {
         val lo = math.max(start, hi - chunk)
         val arr = readRange(lo, (hi - lo).toInt)
@@ -266,7 +276,7 @@ object GraftTopicLog {
         }
         pos += arr.length
       }
-      size
+      start // no whole record after start yet
     } finally ch.close()
   }
 }

@@ -25,7 +25,7 @@ class BenchSpec extends AnyFunSuite with SparkTest {
       sys.error("boom"): org.apache.spark.sql.DataFrame
     val (results, failed) =
       Bench.runQueries(spark, sf, Seq("ok" -> ok, "boom" -> boom), reps = 1)
-    assert(failed == Seq("boom"))
+    assert(failed.map(_._1) == Seq("boom"))
     assert(results.map(_._1) == Seq("ok", "boom"))
     // and the summary line carries the count without growing unboundedly
     val line = Bench.summaryLine(1.0, 2, sf, "/tmp/out.json", reps = 1, errors = failed.size)
@@ -119,5 +119,25 @@ class BenchSpec extends AnyFunSuite with SparkTest {
     try Bench.writeDetailCopy(missing, "4", "{}\n")
     finally System.setErr(saved)
     assert(err.toString.contains("out_c4.json not written"), s"stderr was: $err")
+  }
+
+  test("a failing key's exception class and message reach the detail file") {
+    val ok = (s: org.apache.spark.sql.SparkSession, _: String) => s.range(5).toDF("id")
+    val message = "table \"x\" is missing\n\tat line 2"
+    val boom = (_: org.apache.spark.sql.SparkSession, _: String) =>
+      (throw new IllegalStateException(message)): org.apache.spark.sql.DataFrame
+    val (results, failed) =
+      Bench.runQueries(spark, sf, Seq("ok" -> ok, "boom" -> boom), reps = 2)
+    val cause = s"java.lang.IllegalStateException: $message"
+    assert(failed == Seq("boom" -> cause), "one entry per key, with its first cause")
+
+    val out = java.nio.file.Paths.get(tempDir("bench-causes")).resolve("out.json")
+    java.nio.file.Files.writeString(out, Bench.detail(1.0, 2, "4", results, failed, sf) + "\n")
+    val d = spark.read.json(out.toString).head()
+    assert(d.getAs[org.apache.spark.sql.Row]("causes").getAs[String]("boom") == cause)
+    assert(d.getAs[scala.collection.Seq[String]]("errors") == Seq("boom"))
+    assert(d.getAs[org.apache.spark.sql.Row]("queries").fieldIndex("ok") >= 0)
+    // a long message is cut to 500 characters
+    assert(Bench.cause(new RuntimeException("x" * 2000)).length == 500)
   }
 }

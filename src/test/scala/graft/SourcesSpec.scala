@@ -1,9 +1,16 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.connector.catalog.SupportsRead
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{AvroEventSource, EventSource}
+import graft.sources.{AvroEventSource, EventSource, GraftTopicLog, GraftTopicProvider}
 
 /** Source/sink round-trips over the canonical events schema. */
 class SourcesSpec extends AnyFunSuite with SparkTest {
@@ -220,5 +227,58 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
     val q = graft.streaming.ConsumerPipeline.start(
       stream, tempDir("ok"), tempDir("dlq"), tempDir("ckpt"))
     try q.processAllAvailable() finally q.stop()
+  }
+
+  test("topic log: no planned end offset falls inside a half-written record") {
+    val dir = tempDir("torn")
+    val part = GraftTopicLog.partitionFor("k", graft.model.Tables.DefaultPartitionCount)
+    GraftTopicLog.append(dir, "t", Seq(("k", 1L, """{"n": 1}""")))
+    val f = GraftTopicLog.partitionFile(dir, "t", part)
+    val whole = f.length()
+    // a second append observed mid-write: half a line, no '\n' yet
+    def write(text: String): Unit = {
+      val out = new java.io.FileOutputStream(f, true)
+      try out.write(text.getBytes(UTF_8)) finally out.close()
+    }
+    write("k\t2\t{\"n\"")
+    assert(f.length() > whole)
+
+    // the uncapped source, a cap above the backlog and a cap below one record
+    def open(cap: Option[Long]): MicroBatchStream with SupportsAdmissionControl = {
+      val opts = (Map("path" -> dir, "topic" -> "t", "partitions" -> part.toString) ++
+        cap.map(c => "maxBytesPerTrigger" -> c.toString)).asJava
+      new GraftTopicProvider().getTable(GraftTopicLog.Schema, Array.empty, opts)
+        .asInstanceOf[SupportsRead].newScanBuilder(new CaseInsensitiveStringMap(opts)).build()
+        .toMicroBatchStream(tempDir("torn_ckpt"))
+        .asInstanceOf[MicroBatchStream with SupportsAdmissionControl]
+    }
+    val streams = Seq(open(None), open(Some(1L << 20)), open(Some(3L)))
+    val afterFirst = s"""{"$part":$whole}"""
+    streams.foreach { st =>
+      assert(st.latestOffset().json() == afterFirst)
+      assert(st.latestOffset(st.initialOffset(), ReadLimit.allAvailable()).json() == afterFirst)
+    }
+
+    /** Values of the records in bytes [start, end) of the stream's one partition. */
+    def read(st: MicroBatchStream, start: Offset, end: Offset): Seq[String] =
+      st.planInputPartitions(start, end).toSeq.flatMap { p =>
+        val r = st.createReaderFactory().createReader(p)
+        try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => r.get().getUTF8String(4).toString).toVector
+        finally r.close()
+      }
+    streams.foreach { st =>
+      val end1 = st.latestOffset(st.initialOffset(), ReadLimit.allAvailable())
+      assert(read(st, st.initialOffset(), end1) == Seq("""{"n": 1}"""))
+    }
+    write(": 2}\n") // the append completes
+    streams.foreach { st =>
+      val end1 = st.deserializeOffset(afterFirst)
+      val end2 = st.latestOffset(end1, ReadLimit.allAvailable())
+      assert(end2.json() == s"""{"$part":${f.length()}}""")
+      assert(read(st, end1, end2) == Seq("""{"n": 2}"""), "the completed record is read exactly once")
+      assert(read(st, end2, st.latestOffset(end2, ReadLimit.allAvailable())).isEmpty)
+      st.stop()
+    }
   }
 }

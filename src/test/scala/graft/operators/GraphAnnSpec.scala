@@ -21,6 +21,23 @@ class GraphAnnSpec extends AnyFunSuite with SparkTest {
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
 
+  /** Deterministic clustered corpus: `n` unit vectors in 64-dim around
+    * 100 hash-derived centers with small within-cluster spread — the
+    * geometry real embedding corpora have (and the replica's clone
+    * cliques don't): clear gradients, so beam walk-in cost is real. */
+  private def clustered(n: Int, dim: Int = 64, k: Int = 100): Array[(Long, Array[Double])] = {
+    def h(seed: Long, j: Int): Double = {
+      var x = seed * 6364136223846793005L + j * 1442695040888963407L
+      x ^= (x >>> 33); x *= -7046029254386353131L; x ^= (x >>> 29)
+      (x.toDouble / Long.MaxValue) // [-1, 1), deterministic
+    }
+    (0 until n).map { i =>
+      val c = i % k
+      val v = Array.tabulate(dim)(j => h(c + 1L, j) + 0.15 * h(1000003L * (i + 1), j))
+      i.toLong -> v
+    }.toArray
+  }
+
   private def unitVecs(dir: String): Map[Long, Array[Double]] =
     embeds(dir).collect().map { r =>
       val v = r.getSeq[Double](1).toArray
@@ -267,11 +284,11 @@ class GraphAnnSpec extends AnyFunSuite with SparkTest {
     // here is deterministic: the corpus is a pure function of the id.
     val spark2 = spark
     import spark2.implicits._
-    val all = LadderProbe.clustered(20000).map { case (id, v) =>
+    val all = clustered(20000).map { case (id, v) =>
       val n = math.sqrt(v.map(x => x * x).sum)
       id -> v.map(_ / n)
     }.toMap
-    val vecsDf = LadderProbe.clustered(20000).toSeq.toDF("vec_id", "v")
+    val vecsDf = clustered(20000).toSeq.toDF("vec_id", "v")
     val probes = (0L until NProbes).map(id => id -> all(id))
     def exact(pid: Long, pv: Array[Double]) = all.toSeq.filter(_._1 != pid)
       .map { case (id, v) => (-v.zip(pv).map { case (a, b) => a * b }.sum, id) }
@@ -385,10 +402,10 @@ class GraphAnnSpec extends AnyFunSuite with SparkTest {
     // Measured result lives in SCALING.md r17 either way.
     assume(sys.env.contains("SPARK_GRAFT_ANN100K"), "set SPARK_GRAFT_ANN100K to run")
     import spark.implicits._
-    val all = LadderProbe.clustered(100000).map { case (id, v) =>
+    val all = clustered(100000).map { case (id, v) =>
       val n = math.sqrt(v.map(x => x * x).sum); id -> v.map(_ / n)
     }.toMap
-    val vecsDf = LadderProbe.clustered(100000).toSeq.toDF("vec_id", "v")
+    val vecsDf = clustered(100000).toSeq.toDF("vec_id", "v")
     val probes = (0L until 10L).map(id => id -> all(id))
     def exact(pid: Long, pv: Array[Double]) = all.toSeq.filter(_._1 != pid)
       .map { case (id, v) => (-v.zip(pv).map { case (a, b) => a * b }.sum, id) }
