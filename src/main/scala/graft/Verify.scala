@@ -17,28 +17,6 @@ object Verify {
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // The ANN oracle SQL pins probe vec_id = 0; a session-level
-    // spark.graft.ann.probeId would make the Scala side answer a
-    // DIFFERENT query than the oracle compares against (ADVICE round
-    // 11) — refuse to dump under a non-default probe.
-    require(spark.conf.getOption("spark.graft.ann.probeId").forall(_ == "0"),
-      "spark.graft.ann.probeId must be unset or 0 for the oracle dump: " +
-        "the ann_ivfpq/ann_ivfpq_res/ivfpq_res_recall oracles pin probe 0")
-    // The JSON-probe oracles state get_json_object STRING-path semantics;
-    // the VARIANT payload mode is value-identical on the driver tables
-    // (VariantSpec pins it in-engine) but variant typing edge cases have
-    // no DuckDB-exact rendition — dump only under the default mode
-    // (resolved through GraftConfig so env indirection is judged by the
-    // EFFECTIVE value).
-    locally {
-      val eff = graft.api.GraftConfig
-        .get(spark, graft.api.Payload.ModeKey, "string").trim
-      require(eff.isEmpty || eff.equalsIgnoreCase("string"),
-        s"${graft.api.Payload.ModeKey} must resolve to unset/'string' for " +
-          s"the oracle dump (effective: '$eff'): the json_path_pack/" +
-          "typed_payload/event_decode/include_match oracles state " +
-          "get_json_object semantics")
-    }
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated allowlist for local iteration on a few
     // queries (the driver never sets it → full dump).

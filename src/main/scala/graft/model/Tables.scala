@@ -178,6 +178,12 @@ object Tables {
     if (target > stats.partitions * 2) df.repartition(target) else df
   }
 
+  /** The `documents` table through [[fanned]]: the corpus operators'
+    * tokenize, shingle, md5 and regexp map work would otherwise run on
+    * the one task of a single-row-group scan. */
+  def fannedDocuments(spark: SparkSession, sfDir: String): DataFrame =
+    fanned(spark, sfDir, "documents")
+
   /** Typed event-envelope model (reference `lib/hivent/models/event.ex:27-33`).
     * `payload` stays a JSON string: a fixed StructType would betray the
     * reference's schemaless contract (SURVEY.md §1.3).

@@ -427,26 +427,14 @@ object AnalyticOps {
     * reference's events carry arbitrary JSON (`lib/hivent/event.ex`
     * payload), and payload-predicate queries are the first thing a
     * consumer writes. `get_json_object` is codegen'd; a missing path
-    * yields NULL, never an error. Under `spark.graft.payload=variant`
-    * (see [[graft.api.Payload]]) the payload parses ONCE to a VARIANT
-    * and each field reads the binary encoding instead of re-parsing
-    * the JSON text per probe — same values, flag-gated off the oracle. */
-  def jsonPathPack(spark: SparkSession, sfDir: String): DataFrame = {
-    val base =
-      if (graft.api.Payload.variant(spark))
-        Tables.events(spark, sfDir)
-          .select(col("event_id"), parse_json(col("props")).as("pv"))
-          .select(col("event_id"),
-            try_variant_get(col("pv"), "$.k", "int").as("k_val"),
-            (try_variant_get(col("pv"), "$.k", "int") % 10).as("k_mod"),
-            try_variant_get(col("pv"), "$.missing", "string").as("absent"))
-      else Tables.events(spark, sfDir).select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").cast("int").as("k_val"),
-        (get_json_object(col("props"), "$.k").cast("int") % 10).as("k_mod"),
-        get_json_object(col("props"), "$.missing").as("absent"))
-    base.orderBy("event_id")
-  }
+    * yields NULL, never an error. */
+  def jsonPathPack(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.events(spark, sfDir).select(
+      col("event_id"),
+      get_json_object(col("props"), "$.k").cast("int").as("k_val"),
+      (get_json_object(col("props"), "$.k").cast("int") % 10).as("k_mod"),
+      get_json_object(col("props"), "$.missing").as("absent"))
+      .orderBy("event_id")
 
   /** Typed-payload projection — the schemaless→typed upgrade path
     * (SURVEY.md §1.3). Where [[jsonPathPack]] re-parses `props` once per
@@ -461,18 +449,6 @@ object AnalyticOps {
     * like `props`, the typed struct is strictly better: codegen'd field
     * access, columnar pruning, and an oracle-checkable result. */
   def typedPayload(spark: SparkSession, sfDir: String): DataFrame = {
-    if (graft.api.Payload.variant(spark)) {
-      // the VARIANT rendition of the same single-parse contract: no
-      // fixed schema at parse time, typed access per field (the
-      // shredded-lake query shape — see graft.api.Payload)
-      return Tables.events(spark, sfDir)
-        .select(col("event_id"), parse_json(col("props")).as("pv"))
-        .select(col("event_id"),
-          try_variant_get(col("pv"), "$.k", "int").as("k"),
-          (try_variant_get(col("pv"), "$.k", "int") % 10).as("k_mod"),
-          (try_variant_get(col("pv"), "$.k", "int") > 50).as("k_big"))
-        .orderBy("event_id")
-    }
     val payloadSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.IntegerType)))

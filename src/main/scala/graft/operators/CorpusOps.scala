@@ -25,11 +25,6 @@ import graft.model.Tables
   */
 object CorpusOps {
 
-  // fanned (r19): tokenize/ngram/bpe map work over a one-row-group
-  // scan — see Tables.fanned
-  private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.fanned(spark, sfDir, "documents")
-
   // ------------------------------------------------------------ vocabulary
   /** Top-[[VocabTopK]] corpus vocabulary: occurrence count + document
     * frequency per token. count + count(distinct doc) in one aggregate —
@@ -122,7 +117,7 @@ object CorpusOps {
     * key-space cost — then a vocab-sized join and a sources-sized
     * output. */
   def sourceJsDivergence(spark: SparkSession, sfDir: String): DataFrame = {
-    val st = docs(spark, sfDir)
+    val st = Tables.fannedDocuments(spark, sfDir)
       .select(col("source"),
         explode(split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " "))
           .as("token"))
@@ -329,7 +324,7 @@ object CorpusOps {
     val (_, frames) = bpeChain(spark, sfDir)
     val wordSyms = frames.last.select(col("word"),
       size(expr("filter(split(sym, '  '), t -> t != '')")).as("n_syms"))
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(col("lang"),
         explode(split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " "))
           .as("word"))
@@ -489,7 +484,7 @@ object CorpusOps {
     * partials; everything downstream operates on the contingency table
     * (≈ |langs|·|sources| rows — metadata-sized), margins broadcast. */
   def langSourcePmi(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = docs(spark, sfDir)
+    val cells = Tables.fannedDocuments(spark, sfDir)
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n"))
       .persist().transform(graft.api.Caches.tracked)
     cells.count()
@@ -913,7 +908,8 @@ object CorpusOps {
     val st = TextOps.normed(spark, sfDir)
       .select(col("doc_id"), explode(split(col("norm"), " ")).as("token"))
       .filter(length(col("token")) >= 1)
-      .join(docs(spark, sfDir).select(col("doc_id"), col("source")), Seq("doc_id"))
+      .join(Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("source")),
+        Seq("doc_id"))
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c"))
     st.groupBy(col("source"))
       .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("n_types"),
@@ -940,7 +936,7 @@ object CorpusOps {
     * langs × sources — the corpus reduces in one map-combined
     * aggregate. */
   def langSourceMi(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = docs(spark, sfDir)
+    val cells = Tables.fannedDocuments(spark, sfDir)
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n"))
       .persist().transform(graft.api.Caches.tracked)
     cells.count()
@@ -1050,7 +1046,7 @@ object CorpusOps {
     * task — fine while per-lang doc COUNTS fit a task's sort budget
     * (score + id pairs, not text). */
   def pplBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    val langs = docs(spark, sfDir).select(col("doc_id"), col("lang"))
+    val langs = Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("lang"))
     val d = docNll(spark, sfDir).join(langs, Seq("doc_id"))
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("mean_nll").asc, col("doc_id"))
@@ -1263,7 +1259,7 @@ object CorpusOps {
   def sourceMix(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("source")).orderBy(col("hk"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(col("doc_id"), col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"),
         PipelineOps.keyHash("mix").as("hk"))

@@ -21,9 +21,6 @@ import graft.model.Tables
   */
 object EventOps {
 
-  private def events(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir)
-
   /** Outcome rule mirroring the reference's fixture consumer, which routes
     * on payload content (reference `test/lib/consumer_test.exs:22-31`):
     * an `error`-typed event or a negative value is quarantined.
@@ -38,7 +35,7 @@ object EventOps {
     * deterministic uuid, coalesced cid, created_at, partition key.
     */
   def emitEnrich(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir).select(
+    Tables.events(spark, sfDir).select(
       col("event_id"),
       col("event_type").as("name"),
       lit("graft").as("producer"),
@@ -59,7 +56,7 @@ object EventOps {
     * The physical analog at scale is `repartition(n, key)`.
     */
   def partitionAssign(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir).select(
+    Tables.events(spark, sfDir).select(
       col("event_id"),
       col("user_id"),
       lit(Tables.DefaultPartitionCount).as("partition_count"),
@@ -72,7 +69,7 @@ object EventOps {
     * topic). Catalyst pushes this predicate into the parquet scan.
     */
   def topicFilter(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .orderBy("event_id")
 
@@ -82,7 +79,7 @@ object EventOps {
     * deterministic outcome rule stands in for user code.
     */
   def processOutcomes(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"),
         outcomeCol.as("outcome"))
       .orderBy("event_id")
@@ -94,7 +91,7 @@ object EventOps {
     * column; ok ∪ dlq = input, ok ∩ dlq = ∅.
     */
   def dlqSplit(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = events(spark, sfDir)
+    val base = Tables.events(spark, sfDir)
       .withColumn("outcome", outcomeCol)
       .withColumn("queue", concat(lit("event:"), col("event_type")))
     val ok  = base.filter(col("outcome") === "ok").withColumn("route", lit("ok"))
@@ -111,12 +108,10 @@ object EventOps {
     * fields on demand via JSON-path.
     */
   def eventDecode(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir).select(
+    Tables.events(spark, sfDir).select(
       col("event_id"),
       col("event_type").as("name"),
-      (if (graft.api.Payload.variant(spark))
-        try_variant_get(parse_json(col("props")), "$.k", "int")
-      else get_json_object(col("props"), "$.k").cast("int")).as("k")
+      get_json_object(col("props"), "$.k").cast("int").as("k")
     ).orderBy("event_id")
 
   // ----------------------------------------------------------------- #11
@@ -124,19 +119,19 @@ object EventOps {
     * in insertion order; `event_id` is the insertion-order surrogate.
     */
   def cacheAll(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir).orderBy("event_id")
+    Tables.events(spark, sfDir).orderBy("event_id")
 
   // ----------------------------------------------------------------- #12
   /** Store last (reference `lib/support/memory.ex:58-60` — `List.last`):
     * top-1 by insertion order, i.e. ORDER BY event_id DESC LIMIT 1.
     */
   def cacheLast(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir).orderBy(col("event_id").desc).limit(1)
+    Tables.events(spark, sfDir).orderBy(col("event_id").desc).limit(1)
 
   // ----------------------------------------------------------------- #13
   /** Store emptiness (reference `lib/support/memory.ex:133`). */
   def cacheEmpty(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir).agg((count(lit(1)) === 0).as("is_empty"))
+    Tables.events(spark, sfDir).agg((count(lit(1)) === 0).as("is_empty"))
 
   // ----------------------------------------------------------------- #15
   /** Partial-match existence (reference `lib/support/memory.ex:66-72,
@@ -147,11 +142,8 @@ object EventOps {
     * (SURVEY.md §2.1 #15). Degenerate semi-join / EXISTS.
     */
   def includeMatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val kProbe =
-      if (graft.api.Payload.variant(spark))
-        try_variant_get(parse_json(col("props")), "$.k", "int")
-      else get_json_object(col("props"), "$.k").cast("int")
-    events(spark, sfDir)
+    val kProbe = get_json_object(col("props"), "$.k").cast("int")
+    Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase" && kProbe > 90)
       .agg((count(lit(1)) > 0).as("found"))
   }
@@ -163,7 +155,7 @@ object EventOps {
     * stream, unioned here for a single oracle-checkable result.
     */
   def dispatchFilterMap(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
+    val ev = Tables.events(spark, sfDir)
     val clicks = ev.filter(col("event_type") === "click")
       .select(lit("click_sub").as("sub"), col("event_id"), col("user_id"))
     val bigPurchases = ev
@@ -185,7 +177,7 @@ object EventOps {
     * the same interval via watermarks.
     */
   def requestReplyPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
+    val ev = Tables.events(spark, sfDir)
     val req = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("req_id"), col("ts").as("req_ts"))
     val rep = ev.filter(col("event_type") === "purchase")
@@ -217,7 +209,7 @@ object EventOps {
     * ≤ nBuckets count rows. Identical output to the naive global window.
     */
   def refSequence(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir).select(col("event_id"))
+    val ev = Tables.events(spark, sfDir).select(col("event_id"))
     val bounds = ev.agg(min("event_id"), max("event_id")).head()
     if (bounds.isNullAt(0)) {
       // empty input: no rows, same schema
@@ -255,7 +247,7 @@ object EventOps {
     */
   def versionRoute(spark: SparkSession, sfDir: String): DataFrame = {
     val version = (pmod(col("event_id"), lit(3)) + 1).cast("int")
-    events(spark, sfDir).select(
+    Tables.events(spark, sfDir).select(
       col("event_id"),
       version.as("version"),
       when(version === 1, concat(lit("legacy:"), col("event_type")))
@@ -281,7 +273,7 @@ object EventOps {
   def cdcUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    val changes = events(spark, sfDir)
+    val changes = Tables.events(spark, sfDir)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("user_id").as("key"),
@@ -313,7 +305,7 @@ object EventOps {
     * key is one row. */
   def scd2Intervals(spark: SparkSession, sfDir: String): DataFrame = {
     val ord = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    events(spark, sfDir)
+    Tables.events(spark, sfDir)
       .withColumn("prev_type", lag(col("event_type"), 1).over(ord))
       .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
       .withColumn("version", row_number().over(ord))
@@ -332,7 +324,7 @@ object EventOps {
     * both sides are GENERATED from the same formula
     * ([[graft.sources.DataLayout.zorderSql]]). */
   def zorderKey(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Tables.events(spark, sfDir)
       .select(col("event_id"),
         graft.sources.DataLayout.zorderKey(
           pmod(col("user_id"), lit(256L)),
@@ -346,7 +338,7 @@ object EventOps {
     * what's oracle-checked.
     */
   def jsonRoundtrip(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Tables.events(spark, sfDir)
       .select(col("event_id"),
         to_json(struct(col("event_id"), col("event_type"))).as("wire"))
       .withColumn("decoded_type", get_json_object(col("wire"), "$.event_type"))
@@ -357,7 +349,7 @@ object EventOps {
     * Exercises ops #2-#9 in one plan.
     */
   def flagship(spark: SparkSession, sfDir: String): DataFrame = {
-    val enriched = events(spark, sfDir).select(
+    val enriched = Tables.events(spark, sfDir).select(
       col("event_id"),
       col("event_type").as("name"),
       lit("graft").as("producer"),

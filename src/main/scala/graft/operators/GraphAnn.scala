@@ -31,13 +31,7 @@ import org.apache.spark.sql.functions._
   * is short, and a flat graph with a fixed min-id entry keeps
   * construction fully deterministic — insertion order is vec_id order,
   * every tie breaks by id, so two builds of the same shard are
-  * bit-identical (spec). Since r15 an optional ENTRY LADDER
-  * ([[buildIndexHier]]/[[searchHier]]) adds a deterministic √n upper
-  * layer per shard: on clustered geometry it reaches the flat search's
-  * recall with a 3/4-sized lower beam and strictly fewer visits (spec);
-  * on plateau geometry (the clone-replica corpus) entry choice is
-  * immaterial and the flat default stays the right pick — measured
-  * honestly in SCALING.md r15.
+  * bit-identical (spec).
   *
   * Vectors are unit-normalized at build; all distances are
   * `1 − dot(unit, unit)` (cosine distance), composed of sequential-fold
@@ -47,36 +41,18 @@ object GraphAnn {
 
   /** `m`: out-degree target (neighbor cap is 2m after backlinks);
     * `efConstruction`/`efSearch`: beam widths; `nShards`: independent
-    * sub-graphs (executor-memory sizing knob); `allowExtrapolated`:
-    * permit shards LARGER than the measured parameter envelope
-    * ([[MeasuredMaxShardNodes]]) — off by default, [[buildShard]]
-    * refuses instead of silently running on extrapolated parameters
-    * (r17 verdict item 3; settable via the
-    * `spark.graft.ann.allowExtrapolatedShards` conf at the build
-    * entry points). */
+    * sub-graphs (executor-memory sizing knob). */
   case class Params(
       m: Int = 8,
       efConstruction: Int = 32,
       efSearch: Int = 32,
-      nShards: Int = 4,
-      allowExtrapolated: Boolean = false)
+      nShards: Int = 4)
 
   /** Largest shard node count the adaptive parameter curve has been
     * MEASURED at (SCALING.md: 20k and 100k in r17, 250k in r18, 500k
     * in the r18 saturation sweep); past it m(n) is extrapolation and
-    * [[buildShard]] refuses unless [[Params.allowExtrapolated]] (or
-    * its conf) says otherwise. */
+    * [[buildShard]] refuses. */
   val MeasuredMaxShardNodes = 500000L
-
-  /** Conf override for [[Params.allowExtrapolated]], honored by the
-    * three build entry points. */
-  val AllowExtrapolatedKey = "spark.graft.ann.allowExtrapolatedShards"
-
-  private def resolveExtrapolated(vecs: DataFrame, p: Params): Params =
-    if (p.allowExtrapolated) p
-    else p.copy(allowExtrapolated = graft.api.GraftConfig
-      .get(vecs.sparkSession, AllowExtrapolatedKey, "false")
-      .trim.equalsIgnoreCase("true"))
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.GraphAnn")
 
@@ -109,10 +85,10 @@ object GraphAnn {
     * dilute the fixed-ratio beam instead of extending reach. The curve
     * therefore CAPS at the measured m=33 ([[AdaptiveMCap]]) — growth to
     * 250k is measured, the plateau from 250k to 500k is measured, and
-    * past [[MeasuredMaxShardNodes]] (500k) [[buildShard]] REFUSES
-    * unless explicitly overridden (on geometry whose cluster count
-    * grows with corpus size the demand could resume growing — the
-    * refusal is what keeps that assumption visible). */
+    * past [[MeasuredMaxShardNodes]] (500k) [[buildShard]] REFUSES (on
+    * geometry whose cluster count grows with corpus size the demand
+    * could resume growing — the refusal is what keeps that assumption
+    * visible). */
   def adaptiveM(nodesPerShard: Long): Int = {
     val lg = math.log(math.max(2L, nodesPerShard).toDouble) / math.log(2.0)
     math.min(AdaptiveMCap,
@@ -148,31 +124,21 @@ object GraphAnn {
     if (n == 0.0) a else a.map(_ / n)
   }
 
-  /** Greedy best-first beam over one shard's graph: returns up to `ef`
-    * nearest (dist, id), ascending, deterministic (ties by id).
-    * Single-entry calls behave exactly as the original flat beam;
-    * multi-entry seeding (the r15 ladder) starts the same search from
-    * several diverse footholds at once. */
+  /** Greedy best-first beam over one shard's graph from `entry`: returns
+    * up to `ef` nearest (dist, id), ascending, deterministic (ties by id),
+    * and the number of nodes visited. */
   private def beam(
       q: Array[Double],
       entry: Long,
       vec: collection.Map[Long, Array[Double]],
       adj: collection.Map[Long, mutable.ArrayBuffer[Long]],
-      ef: Int): (List[(Double, Long)], Int) =
-    beamMulti(q, Seq(entry), vec, adj, ef)
-
-  private def beamMulti(
-      q: Array[Double],
-      entries: Seq[Long],
-      vec: collection.Map[Long, Array[Double]],
-      adj: collection.Map[Long, mutable.ArrayBuffer[Long]],
       ef: Int): (List[(Double, Long)], Int) = {
     def d(id: Long) = 1.0 - dotd(q, vec(id))
     val asc = implicitly[Ordering[(Double, Long)]]
-    val seeds = entries.distinct.map(e => (d(e), e))
-    val visited = mutable.Set(entries.distinct: _*)
-    val cand = mutable.PriorityQueue(seeds: _*)(asc.reverse) // nearest-first
-    val res = mutable.PriorityQueue(seeds: _*)(asc)          // farthest-first
+    val seed = (d(entry), entry)
+    val visited = mutable.Set(entry)
+    val cand = mutable.PriorityQueue(seed)(asc.reverse) // nearest-first
+    val res = mutable.PriorityQueue(seed)(asc)          // farthest-first
     while (res.size > ef) res.dequeue()
     var done = false
     while (cand.nonEmpty && !done) {
@@ -206,16 +172,12 @@ object GraphAnn {
     // a 100 TB deployment's memory-budget shard is exactly the regime
     // where m(n) would be running on extrapolation, and the 100k
     // collapse showed what silently-undersized degree does to recall.
-    // An explicit opt-in (Params.allowExtrapolated or the
-    // spark.graft.ann.allowExtrapolatedShards conf) re-enables the old
-    // warn-and-build behavior for callers who accept the risk.
-    if (ordered.size > MeasuredMaxShardNodes && !p.allowExtrapolated)
+    if (ordered.size > MeasuredMaxShardNodes)
       throw new IllegalArgumentException(
         s"GraphAnn shard of ${ordered.size} nodes exceeds the measured " +
           s"parameter envelope ($MeasuredMaxShardNodes nodes/shard — " +
           "SCALING.md adaptive sweeps); raise nShards so shards fit the " +
-          s"measured range, or opt into extrapolated parameters via " +
-          s"$AllowExtrapolatedKey=true / Params(allowExtrapolated = true)")
+          "measured range")
     // warn (inside the envelope the graph still builds and searches,
     // just with measured-degraded recall) when this shard outgrows what
     // its configured degree is sized for: the r16 100k measurement
@@ -249,10 +211,9 @@ object GraphAnn {
     * one in-memory NSW pass per shard. Output rows
     * (shard, vec_id, v_unit, nbrs) are everything a searcher needs —
     * vectors ride WITH the adjacency so search is shuffle-free. */
-  def buildIndex(vecs: DataFrame, p0: Params): DataFrame = {
+  def buildIndex(vecs: DataFrame, p: Params): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val p = resolveExtrapolated(vecs, p0)
     vecs
       .select(pmod(col("vec_id"), lit(p.nShards)).cast("int").as("shard"),
         col("vec_id"), col("v"))
@@ -390,11 +351,10 @@ object GraphAnn {
     * [[trainedSeeds]] (pass the same array to [[searchRouted]]); callers
     * may pass any centroid set — e.g. [[routingSeeds]] for the untrained
     * baseline the spec prices the training against. */
-  def buildIndexRouted(vecs: DataFrame, p0: Params,
+  def buildIndexRouted(vecs: DataFrame, p: Params,
       seedsIn: Array[(Int, Array[Double])] = null): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val p = resolveExtrapolated(vecs, p0)
     val seeds = if (seedsIn == null) trainedSeeds(vecs, p) else seedsIn
     val bSeeds = spark.sparkContext.broadcast(seeds)
     vecs.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
@@ -455,144 +415,6 @@ object GraphAnn {
       .filter(col("rk") <= k)
       .select(col("probe_id"), col("rk"), col("vec_id"), round(col("cos"), 6).as("cos"))
       .orderBy("probe_id", "rk")
-  }
-
-  // ----------------------------------------------------- entry ladder (r15)
-  /** Level-1 sampling stride: every ⌊√n⌋-th node of the id-sorted shard
-    * joins the upper layer, so the ladder has ~√n nodes — the standard
-    * two-level balance (upper walk O(√n·deg), entry for the lower beam
-    * lands near the query). Index-based over the SORTED ids, so the
-    * selection is a pure function of the shard's id set (deterministic,
-    * bit-stable builds — the flat graph's discipline kept). */
-  private[operators] def lvl1Stride(n: Int): Int =
-    math.max(1, math.sqrt(n.toDouble).toInt)
-
-  /** Upper-beam width: the ladder only needs to FIND a good entry, not
-    * enumerate candidates — a beam of a few suffices, and every upper
-    * visit is overhead the lower beam must amortize. */
-  private def efUpper(k: Int, p: Params): Int = math.min(k, 4)
-
-  /** How many upper hits seed the lower beam (measured on the 10×
-    * replica: 1 loses tie-clique recall vs flat, all-ef re-widens the
-    * visited set past flat; a small fan keeps both). */
-  private val SeedFan = 2
-
-  /** [[buildIndex]] plus a per-shard ENTRY LADDER (round-14 verdict
-    * item 6): HNSW's upper layer, deterministic — level-1 nodes are the
-    * id-sorted shard sampled at [[lvl1Stride]], wired into their own NSW
-    * graph (`nbrs1`). [[searchHier]] beams the ~√n-node upper graph
-    * first and starts the full beam AT its best hit instead of the fixed
-    * min-id entry, cutting the walk-in portion of the visited set — the
-    * saving grows with shard size, which is exactly when the flat
-    * graph's fixed entry gets expensive (GraphAnnSpec gates visited
-    * strictly below flat at ≥ recall on the 10× replica). Output schema
-    * is [[buildIndex]]'s plus (`nbrs1`, `lvl1`); the flat columns are
-    * built identically, so layer-0 structure is unchanged. */
-  def buildIndexHier(vecs: DataFrame, p0: Params): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val p = resolveExtrapolated(vecs, p0)
-    vecs
-      .select(pmod(col("vec_id"), lit(p.nShards)).cast("int").as("shard"),
-        col("vec_id"), col("v"))
-      .repartition(p.nShards, col("shard"))
-      .as[(Int, Long, Array[Double])]
-      .mapPartitions { it =>
-        it.toSeq.groupBy(_._1).iterator.flatMap { case (shard, rows) =>
-          val unitRows = rows.map(r => r._2 -> unit(r._3)).sortBy(_._1)
-          val adj = buildShard(unitRows, p)
-          val stride = lvl1Stride(unitRows.size)
-          val lvl1Ids = unitRows.map(_._1).zipWithIndex
-            .collect { case (id, i) if i % stride == 0 => id }.toSet
-          val adj1 = buildShard(unitRows.filter(r => lvl1Ids(r._1)), p)
-          val uv = unitRows.toMap
-          adj.toSeq.sortBy(_._1).map { case (id, nbrs) =>
-            (shard, id, uv(id), nbrs,
-              adj1.getOrElse(id, Array.empty[Long]), lvl1Ids(id))
-          }
-        }
-      }
-      .toDF("shard", "vec_id", "v_unit", "nbrs", "nbrs1", "lvl1")
-  }
-
-  /** Shared ladder-search kernel: per (shard, probe), beam the upper
-    * graph from its min-id entry, then the full graph from the upper
-    * best; emits both the merged hits and the TOTAL visited count
-    * (upper + lower — the honest accounting the spec compares to flat). */
-  private def hierShardSearch(
-      rows: Seq[(Int, Long, Array[Double], Array[Long], Array[Long], Boolean)],
-      pnorm: Seq[(Long, Array[Double])], k: Int, p: Params)
-      : Iterator[(Long, Int, Long, Double, Long, Long)] = {
-    val shard = rows.head._1
-    val vec: Map[Long, Array[Double]] = rows.map(r => r._2 -> r._3).toMap
-    val adj = mutable.Map(rows.map(r => r._2 -> mutable.ArrayBuffer(r._4: _*)): _*)
-    val l1 = rows.filter(_._6)
-    val vec1: Map[Long, Array[Double]] = l1.map(r => r._2 -> r._3).toMap
-    val adj1 = mutable.Map(l1.map(r => r._2 -> mutable.ArrayBuffer(r._5: _*)): _*)
-    val entry1 = vec1.keys.min
-    pnorm.iterator.flatMap { case (pid, pv) =>
-      val (upRes, upVisited) = beam(pv, entry1, vec1, adj1, efUpper(k, p))
-      // seed the full beam with the best FEW upper hits: diverse
-      // footholds keep the funnel wide (recall) without re-widening the
-      // visited set the ladder exists to shrink
-      val (res, loVisited) =
-        beamMulti(pv, upRes.map(_._2).take(SeedFan), vec, adj,
-          math.max(p.efSearch, k))
-      res.take(k).map { case (dist, id) =>
-        (pid, shard, id, 1.0 - dist, (upVisited + loVisited).toLong,
-          rows.size.toLong)
-      }
-    }
-  }
-
-  /** [[search]] over a [[buildIndexHier]] index: identical merge/output
-    * contract, entry chosen by the ladder instead of min-id. */
-  def searchHier(index: DataFrame, probes: Seq[(Long, Array[Double])], k: Int,
-      p: Params): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val pnorm = probes.map { case (pid, pv) => (pid, unit(pv)) }
-    val perShard = index
-      .select(col("shard"), col("vec_id"), col("v_unit"), col("nbrs"),
-        col("nbrs1"), col("lvl1"))
-      .repartition(p.nShards, col("shard"))
-      .as[(Int, Long, Array[Double], Array[Long], Array[Long], Boolean)]
-      .mapPartitions { it =>
-        it.toSeq.groupBy(_._1).valuesIterator.flatMap(rows =>
-          hierShardSearch(rows, pnorm, k, p)
-            .map { case (pid, _, id, cos, _, _) => (pid, id, cos) })
-      }
-      .toDF("probe_id", "vec_id", "cos")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    perShard.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("probe_id"), col("rk"), col("vec_id"), round(col("cos"), 6).as("cos"))
-      .orderBy("probe_id", "rk")
-  }
-
-  /** [[searchStats]]' ladder twin: per-(probe, shard) TOTAL visited
-    * (upper + lower beams) out of the shard. */
-  def searchStatsHier(index: DataFrame, probes: Seq[(Long, Array[Double])],
-      k: Int, p: Params): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val pnorm = probes.map { case (pid, pv) => (pid, unit(pv)) }
-    index
-      .select(col("shard"), col("vec_id"), col("v_unit"), col("nbrs"),
-        col("nbrs1"), col("lvl1"))
-      .repartition(p.nShards, col("shard"))
-      .as[(Int, Long, Array[Double], Array[Long], Array[Long], Boolean)]
-      .mapPartitions { it =>
-        it.toSeq.groupBy(_._1).valuesIterator.flatMap(rows =>
-          hierShardSearch(rows, pnorm, k, p)
-            .map { case (pid, shard, _, _, visited, size) =>
-              (pid, shard, visited, size) }
-            .toSeq.distinct.iterator)
-      }
-      .toDF("probe_id", "shard", "visited", "shard_size")
-      .orderBy("probe_id", "shard")
   }
 
   /** [[search]] with per-(probe, shard) work accounting: how many

@@ -39,11 +39,6 @@ import graft.model.Tables
   */
 object MiningOps {
 
-  // fanned (r19): tokenize/score map work over a one-row-group scan —
-  // see Tables.fanned
-  private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.fanned(spark, sfDir, "documents")
-
   // ------------------------------------------------- temperature mixing
   /** Token budget distributed across sources by the temperature weights. */
   private[operators] val TempMixBudget = 1000000L
@@ -59,7 +54,7 @@ object MiningOps {
   def temperatureMix(spark: SparkSession, sfDir: String): DataFrame = {
     val wAll = Window.partitionBy(lit(1))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("nt"))
       .groupBy(col("source")).agg(sum(col("nt")).as("n_tokens"))

@@ -21,11 +21,6 @@ import graft.model.Tables
   */
 object PipelineOps {
 
-  // fanned (r19): the quality battery's regexp map work over a
-  // one-row-group scan — see Tables.fanned
-  private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.fanned(spark, sfDir, "documents")
-
   /** First 7 md5 hex digits of `seed:doc_id` as a bigint in [0, 2^28) —
     * the same 28-bit construction as TextOps token hashes (fits i32 in
     * both engines). */
@@ -51,7 +46,7 @@ object PipelineOps {
     val rate = SampleRates.foldRight(lit(SampleDefaultRate): Column) {
       case ((lang, r), other) => when(col("lang") === lang, lit(r)).otherwise(other)
     }
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .filter((keyHash("smp") % 100) < rate)
       .select(col("doc_id"), col("lang"))
       .orderBy("doc_id")
@@ -85,7 +80,7 @@ object PipelineOps {
       .partitionBy(col("source"), pmod(col("doc_id"), lit(QuotaSalts.toLong)))
       .orderBy(col("hk"), col("doc_id"))
     val global = Window.partitionBy(col("source")).orderBy(col("hk"), col("doc_id"))
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(col("doc_id"), col("source"), keyHash("qta").as("hk"))
       .withColumn("lrn", row_number().over(local))
       .filter(col("lrn") <= QuotaPerSource)
@@ -111,7 +106,7 @@ object PipelineOps {
     * its size in expectation). doc_id tiebreak makes the cut total. */
   def bottomkSample(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.orderBy(col("hk"), col("doc_id"))
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(col("doc_id"), col("source"), col("lang"), keyHash("btk").as("hk"))
       .orderBy(col("hk"), col("doc_id"))
       .limit(BottomK)
@@ -141,7 +136,7 @@ object PipelineOps {
     val u = (keyHash("wks") + lit(0.5)) / lit(268435456.0)
     val wkey = round(exp(log(u) / col("n_chars").cast("double")), 6)
     val w = Window.orderBy(col("wkey").desc, col("doc_id"))
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(col("doc_id"), col("n_chars"), wkey.as("wkey"))
       .orderBy(col("wkey").desc, col("doc_id"))
       .limit(WeightedK)
@@ -176,7 +171,7 @@ object PipelineOps {
     * exact in double on both engines. One map-side-combined aggregate
     * (one row per source shuffles) + a per-row noise expression. */
   def dpCounts(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .groupBy(col("source")).agg(count(lit(1)).cast("double").as("n"))
       .withColumn("u", (keyHash("dp", "source") + lit(0.5)) / lit(268435456.0))
       .select(col("source"),
@@ -201,7 +196,7 @@ object PipelineOps {
   def kAnonymity(spark: SparkSession, sfDir: String): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val classes = docs(spark, sfDir)
+    val classes = Tables.fannedDocuments(spark, sfDir)
       .groupBy(col("lang"), col("source"),
         floor(col("n_chars") / 100L).as("len_bucket"))
       .agg(count(lit(1)).as("sz"))
@@ -243,7 +238,7 @@ object PipelineOps {
   def lDiversity(spark: SparkSession, sfDir: String): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val classes = docs(spark, sfDir)
+    val classes = Tables.fannedDocuments(spark, sfDir)
       .groupBy(col("source"), floor(col("n_chars") / 100L).as("len_bucket"))
       .agg(count(lit(1)).as("sz"), countDistinct(col("lang")).as("n_langs"))
     val total = classes.agg(sum(col("sz")).as("n_total"))
@@ -287,7 +282,7 @@ object PipelineOps {
   def tCloseness(spark: SparkSession, sfDir: String): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val base = docs(spark, sfDir)
+    val base = Tables.fannedDocuments(spark, sfDir)
       .select(col("source"), floor(col("n_chars") / 100L).as("len_bucket"),
         col("lang"))
       .persist().transform(graft.api.Caches.tracked)
@@ -332,7 +327,7 @@ object PipelineOps {
     * random splits lack). Aggregation output is 3 rows. */
   def datasetSplit(spark: SparkSession, sfDir: String): DataFrame = {
     val bucket = keyHash("spl") % 1000
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(when(bucket < 900, "train").when(bucket < 950, "val")
         .otherwise("test").as("split"))
       .groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
@@ -370,7 +365,7 @@ object PipelineOps {
     * joins only. */
   def foldBalanceChi2(spark: SparkSession, sfDir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val cells = docs(spark, sfDir)
+    val cells = Tables.fannedDocuments(spark, sfDir)
       .select((keyHash("fold") % ChiFolds).as("fold"), col("lang"))
       .groupBy(col("fold"), col("lang")).agg(count(lit(1)).as("o"))
     val rt = cells.groupBy(col("fold")).agg(sum(col("o")).as("r"))
@@ -453,7 +448,7 @@ object PipelineOps {
     val nTokens = size(split(trim(col("text")), "\\s+"))
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(col("doc_id"), pmod(col("doc_id"), lit(PackShards)).as("shard"),
         nTokens.cast("long").as("n_tokens"))
       .withColumn("start_tokens", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
@@ -501,7 +496,7 @@ object PipelineOps {
     * 100 TB. Hash ties (28-bit space) break on doc_id so `pos` is total. */
   def corpusShuffle(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("shard")).orderBy(col("hk"), col("doc_id"))
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(col("doc_id"), keyHash("shf").as("hk"))
       .withColumn("shard", pmod(col("hk"), lit(ShuffleShards.toLong)))
       .withColumn("pos", row_number().over(w).cast("long"))
@@ -558,7 +553,7 @@ object PipelineOps {
       case ((l, t), other) =>
         when(col("lang") === l, lit((MixDenom / t).toLong)).otherwise(other)
     }
-    val agg = docs(spark, sfDir)
+    val agg = Tables.fannedDocuments(spark, sfDir)
       .filter(col("lang").isin(MixTarget.map(_._1): _*))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))

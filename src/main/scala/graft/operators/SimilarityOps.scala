@@ -1221,9 +1221,15 @@ object SimilarityOps {
     * quantize the vectors themselves; encoding the residual against the
     * list centroid — finer codes, same machinery — is the documented
     * upgrade, per [[pqRecall]]'s scaladoc). Deterministic end-to-end:
-    * quantized assignment, round-6 decimal ADC sums, id tie-breaks. */
-  def annIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
-    val probe = annProbe(spark)
+    * quantized assignment, round-6 decimal ADC sums, id tie-breaks.
+    * The query key and its oracle pin probe vector 0. */
+  def annIvfPq(spark: SparkSession, sfDir: String): DataFrame =
+    annIvfPqAt(spark, sfDir, 0)
+
+  /** [[annIvfPq]] for probe vector `probe` (the multi-probe recall sweep
+    * in OperatorSpec varies it). */
+  private[graft] def annIvfPqAt(spark: SparkSession, sfDir: String,
+      probe: Int): DataFrame = {
     val q = quantCodes(spark, sfDir)
     val sc = subCodes(q).persist().transform(graft.api.Caches.tracked)
     sc.count()
@@ -1267,14 +1273,6 @@ object SimilarityOps {
       .orderBy(col("d").asc, col("vec_id"))
       .limit(5)
   }
-
-  /** Probe vector id for the IVF-ADC query family — a library knob
-    * (`spark.graft.ann.probeId`) whose default 0 is what the oracle and
-    * bench pin; the multi-probe recall sweep in OperatorSpec varies it
-    * to average the single-probe noise out of the residual-vs-plain
-    * comparison. */
-  private def annProbe(spark: SparkSession): Int =
-    graft.api.GraftConfig.getInt(spark, "spark.graft.ann.probeId", 0)
 
   /** Residuals (code − list centroid) are scaled by this and rounded to
     * whole numbers, so every residual-side sum (sub-centroid means, dot
@@ -1320,9 +1318,14 @@ object SimilarityOps {
     * codebooks, probe LUT and probe-list ids are all broadcast
     * (8 + 32 + 64 + 2 rows); the corpus is scanned once for residual
     * encoding, only ~probes/K of it reaches the ADC join; exact
-    * distance touches exactly 10 vectors. */
-  def annIvfPqRes(spark: SparkSession, sfDir: String): DataFrame = {
-    val probe = annProbe(spark)
+    * distance touches exactly 10 vectors. The query key and its oracle
+    * pin probe vector 0. */
+  def annIvfPqRes(spark: SparkSession, sfDir: String): DataFrame =
+    annIvfPqResAt(spark, sfDir, 0)
+
+  /** [[annIvfPqRes]] for probe vector `probe`. */
+  private[graft] def annIvfPqResAt(spark: SparkSession, sfDir: String,
+      probe: Int): DataFrame = {
     val q = quantCodes(spark, sfDir)
     val cents = lloydCentroids(q).persist().transform(graft.api.Caches.tracked)
     cents.count()
@@ -1394,7 +1397,7 @@ object SimilarityOps {
     * non-residual [[annIvfPq]] composite's recall on the same corpus,
     * the verdict's acceptance bar). Deterministic like its siblings. */
   def ivfpqResRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val probe = annProbe(spark)
+    val probe = 0
     val e = vecs(spark, sfDir)
     val probeV = e.filter(col("vec_id") === probe).select(col("v").as("p"))
     val exact5 = e.crossJoin(broadcast(probeV))

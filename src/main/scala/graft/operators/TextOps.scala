@@ -25,19 +25,13 @@ import graft.model.Tables
   */
 object TextOps {
 
-  // fanned (r19): the shingle/md5/normalize map work downstream is the
-  // suite's heaviest CPU stage and the single-row-group scan pins it to
-  // one task — see Tables.fanned
-  private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.fanned(spark, sfDir, "documents")
-
   /** Whitespace-collapsed lowercase normalization — shared by the fuzzy
     * dedup family. */
   private[operators] val normCol: Column =
     trim(regexp_replace(lower(col("text")), "\\s+", " "))
 
   private[operators] def normed(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir).select(col("doc_id"), normCol.as("norm"))
+    Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), normCol.as("norm"))
 
   /** Occurrence count of `sub` in space-padded normalized text (leftmost
     * non-overlapping `replace`, same semantics both engines). */
@@ -50,7 +44,7 @@ object TextOps {
     * hash-partition, never global. */
   def dedupExact(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .withColumn("content_hash", md5(col("text")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -61,7 +55,7 @@ object TextOps {
   /** Near-dup via normalized-text hash (lower + collapse whitespace). */
   def dedupFuzzy(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("norm_hash")).orderBy(col("doc_id"))
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .withColumn("norm_hash", md5(normCol))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -284,7 +278,7 @@ object TextOps {
     * (doc_id, source) pairs; the matrix aggregate is ≤ |sources|²
     * cells. */
   def crossSourceNeardup(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = docs(spark, sfDir).select(col("doc_id"), col("source"))
+    val src = Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("source"))
     candidatePairs(spark, sfDir)
       .join(src.toDF("doc_a", "src_a"), Seq("doc_a"))
       .join(src.toDF("doc_b", "src_b"), Seq("doc_b"))
@@ -375,7 +369,7 @@ object TextOps {
     sig.count()
     val bands = bandsOf(sig)
     verdictsFromBands(
-      docs(spark, sfDir).select(col("doc_id")).filter(isNew),
+      Tables.fannedDocuments(spark, sfDir).select(col("doc_id")).filter(isNew),
       bands.filter(isNew), bands.filter(!isNew))
       .orderBy("doc_id")
   }
@@ -421,9 +415,8 @@ object TextOps {
     * as a multi-MB foldable literal in the plan / generated code
     * (round-8 shape; at 100 TB an eval split's sketch can reach GBs —
     * a plan-sized literal does not survive that, a subquery result
-    * does). Sketch geometry is fixed by conf
-    * (`spark.graft.decontam.bloom.items`/`.bits`, default 2²⁰ items /
-    * 2²³ bits = 1 MiB) rather than a driver-side pre-count job: an
+    * does). Sketch geometry is fixed (2²⁰ items / 2²³ bits = 1 MiB)
+    * rather than sized by a driver-side pre-count job: an
     * undersized sketch only raises fpp, and false positives merely pass
     * extra rows into the exact join, so the result is bit-identical to
     * [[decontaminate]] either way (same oracle SQL). An empty eval
@@ -434,14 +427,10 @@ object TextOps {
       import org.apache.spark.sql.GraftColumnBridge
       import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, ScalarSubquery}
       import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-      val items = graft.api.GraftConfig.getLong(spark,
-        "spark.graft.decontam.bloom.items", 1L << 20)
-      val bits = graft.api.GraftConfig.getLong(spark,
-        "spark.graft.decontam.bloom.bits", 1L << 23)
       val sketch = eval.select(GraftColumnBridge.column(
         new BloomFilterAggregate(
           GraftColumnBridge.expression(xxhash64(col("sh"))),
-          Literal(items), Literal(bits)).toAggregateExpression()).as("bf"))
+          Literal(1L << 20), Literal(1L << 23)).toAggregateExpression()).as("bf"))
       val probe = GraftColumnBridge.column(BloomFilterMightContain(
         ScalarSubquery(sketch.queryExecution.analyzed),
         GraftColumnBridge.expression(xxhash64(col("sh")))))
@@ -498,7 +487,8 @@ object TextOps {
   /** The train-split documents (the stream side of the streaming
     * decontamination parity test). */
   private[graft] def trainSplitDocs(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir).filter(splitBucket < 900).select(col("doc_id"), col("text"))
+    Tables.fannedDocuments(spark, sfDir).filter(splitBucket < 900)
+      .select(col("doc_id"), col("text"))
 
   /** One micro-batch's contamination incidents against the offline
     * index: every (arriving train doc, eval doc) pair sharing ≥
@@ -527,7 +517,7 @@ object TextOps {
     val best = overlaps.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("train_id").as("contaminated_by"), col("overlap"))
-    docs(spark, sfDir).select(col("doc_id")).filter(splitBucket >= 950)
+    Tables.fannedDocuments(spark, sfDir).select(col("doc_id")).filter(splitBucket >= 950)
       .join(best, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("contaminated_by"),
         coalesce(col("overlap"), lit(0L)).as("overlap"),
@@ -631,7 +621,7 @@ object TextOps {
     * of all shingles). */
   def sourceOverlapJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = docShingles(spark, sfDir)
-      .join(docs(spark, sfDir).select(col("doc_id"), col("source")), "doc_id")
+      .join(Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), explode(col("sh")).as("sh")).distinct()
       .persist().transform(graft.api.Caches.tracked)
     ss.count()
@@ -794,7 +784,7 @@ object TextOps {
     val cand = candidatePairsFrom(docShingles(spark, sfDir))
     val labels = GraphOps.connectedComponents(cand, "doc_a", "doc_b")
       .withColumnRenamed("node_id", "doc_id")
-    docs(spark, sfDir).select(col("doc_id"))
+    Tables.fannedDocuments(spark, sfDir).select(col("doc_id"))
       .join(labels.withColumnRenamed("group_id", "g"), Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("g"), col("doc_id")).as("group_id"))
   }
@@ -829,7 +819,7 @@ object TextOps {
     val oldLabels = GraphOps.connectedComponents(oldPairs, "doc_a", "doc_b")
     val merged = GraphOps.incrementalComponents(oldLabels, deltaPairs,
       "doc_a", "doc_b")
-    docs(spark, sfDir).select(col("doc_id"))
+    Tables.fannedDocuments(spark, sfDir).select(col("doc_id"))
       .join(merged.withColumnRenamed("node_id", "doc_id")
         .withColumnRenamed("group_id", "g"), Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("g"), col("doc_id")).as("group_id"))
@@ -853,7 +843,7 @@ object TextOps {
     * join of the shared CC labels against (doc_id, source), then a
     * sources-sized aggregate with map-side partials. */
   def dedupRateBySource(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir).select(col("doc_id"), col("source"))
+    Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("source"))
       .join(dedupGroupsUnsorted(spark, sfDir), Seq("doc_id"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -887,7 +877,7 @@ object TextOps {
     val kept = groups.join(sz, Seq("group_id"))
       .select(col("doc_id"),
         when(PipelineOps.keyHash("soft") % col("sz") === 0, 1L).otherwise(0L).as("kept"))
-    docs(spark, sfDir).select(col("doc_id"), col("source"))
+    Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("source"))
       .join(kept, Seq("doc_id"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("kept")).as("n_kept"))
@@ -1148,7 +1138,7 @@ object TextOps {
   // -------------------------------------------------------- text analysis
   /** Per-document stats: chars, words, unique words, avg word length. */
   def textStats(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir).select(
+    Tables.fannedDocuments(spark, sfDir).select(
       col("doc_id"),
       length(col("text")).as("n_chars_calc"),
       size(split(trim(col("text")), "\\s+")).as("n_words"),
@@ -1195,7 +1185,7 @@ object TextOps {
 
   /** Corpus language distribution. */
   def langDist(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
@@ -1213,7 +1203,7 @@ object TextOps {
     * (the md5 does). */
   def dupInflationBySource(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))
-    docs(spark, sfDir)
+    Tables.fannedDocuments(spark, sfDir)
       .select(col("doc_id"), col("source"), col("n_chars"),
         md5(col("text")).as("content_hash"))
       .withColumn("rn", row_number().over(w))
@@ -1241,7 +1231,7 @@ object TextOps {
     * map-side-combinable aggregates over (source, lang) — key-space
     * cost, never row-space. */
   def langEntropyBySource(spark: SparkSession, sfDir: String): DataFrame = {
-    val counts = docs(spark, sfDir)
+    val counts = Tables.fannedDocuments(spark, sfDir)
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("c"))
     val tot = counts.groupBy(col("source")).agg(sum(col("c")).as("n"))
@@ -1267,7 +1257,7 @@ object TextOps {
     val es = score(Seq("el", "los", "las", "de"))
     val fr = score(Seq("le", "et", "les", "une"))
     val de = score(Seq("der", "und", "die", "das"))
-    docs(spark, sfDir).select(
+    Tables.fannedDocuments(spark, sfDir).select(
       col("doc_id"), col("lang"),
       en.as("score_en"), es.as("score_es"), fr.as("score_fr"), de.as("score_de"),
       when(en >= es && en >= fr && en >= de, lit("en"))
@@ -1292,7 +1282,7 @@ object TextOps {
   /** Token counting: whitespace words plus a BPE-ish regex segmentation
     * (alnum runs | single non-alnum-non-space marks). */
   def tokenCount(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir).select(
+    Tables.fannedDocuments(spark, sfDir).select(
       col("doc_id"),
       size(split(trim(col("text")), "\\s+")).as("n_ws_tokens"),
       size(expr("regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\\\s]', 0)")).as("n_bpe_tokens"),
@@ -1312,7 +1302,7 @@ object TextOps {
     val nWords = size(split(trim(col("text")), "\\s+"))
     val punct = length(col("text")) - length(regexp_replace(col("text"), "[^A-Za-z0-9 ]", ""))
     val stop = Seq("the", "a", "and", "of", "to").map(w => hits(padded, s" $w ")).reduce(_ + _)
-    docs(spark, sfDir).select(
+    Tables.fannedDocuments(spark, sfDir).select(
       col("doc_id"), col("lang"),
       nWords.as("n_words"), punct.as("n_punct"), stop.as("n_stop"),
       round(
@@ -1333,7 +1323,8 @@ object TextOps {
     * map-side-combinable aggregate. */
   def qualityBySource(spark: SparkSession, sfDir: String): DataFrame =
     qualityScoredUnsorted(spark, sfDir).select(col("doc_id"), col("quality"))
-      .join(docs(spark, sfDir).select(col("doc_id"), col("source")), Seq("doc_id"))
+      .join(Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("source")),
+        Seq("doc_id"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("quality").cast(DecimalType(18, 6))).as("qsum"),
@@ -1398,7 +1389,7 @@ object TextOps {
     val padded = concat(lit(" "), col("text"), lit(" "))
     val stopDistinct = GopherStops
       .map(w => (instr(padded, s" $w ") > 0).cast("int")).reduce(_ + _)
-    docs(spark, sfDir).select(
+    Tables.fannedDocuments(spark, sfDir).select(
         col("doc_id"),
         nWords.as("n_words"),
         round(wordChars.cast("double") / nWords.cast("double"), 6).as("mean_wlen"),
@@ -1431,7 +1422,7 @@ object TextOps {
     * one over the quality frame (round-6 DECIMAL mean, shuffle-order
     * exact), combined by a broadcast of two one-row frames. */
   def datasetCard(spark: SparkSession, sfDir: String): DataFrame = {
-    val census = docs(spark, sfDir).agg(
+    val census = Tables.fannedDocuments(spark, sfDir).agg(
       count(lit(1)).as("n_docs"),
       sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_tokens"),
       count_distinct(col("lang")).as("n_langs"),
@@ -1817,7 +1808,7 @@ object TextOps {
     * 1-row aggregate — the funnel costs three shuffles of id-sized
     * rows, never a second pass over document text. */
   def pipelineFunnel(spark: SparkSession, sfDir: String): DataFrame = {
-    val d0 = docs(spark, sfDir).select(col("doc_id"), col("n_chars"),
+    val d0 = Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("n_chars"),
       md5(col("text")).as("he"), md5(normCol).as("hn"))
       .persist().transform(graft.api.Caches.tracked)
     d0.count()

@@ -333,9 +333,8 @@ object CowTable {
   /** Rebind `df` to a WRITE-SCOPED clone session with parquet variant
     * shredding on, via a global temp view (the one public cross-session
     * plan hand-off). The confs live only on the clone — never a
-    * set/restore window on the caller's session (the
-    * Payload.writeShredded discipline) — so concurrent queries can't
-    * observe the flip. The view is dropped as soon as the plan is
+    * set/restore window on the caller's session — so concurrent queries
+    * can't observe the flip. The view is dropped as soon as the plan is
     * resolved into the clone (Datasets capture their analyzed plan at
     * creation). */
   private def bindShredWriteSession(df: DataFrame): DataFrame = {

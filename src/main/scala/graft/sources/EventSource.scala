@@ -19,6 +19,10 @@ import graft.model.Tables
   */
 object EventSource {
 
+  /** The canonical events schema every reader returns. */
+  private val EventsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+
   /** Canonical events from parquet (driver data). */
   def parquet(spark: SparkSession, sfDir: String): DataFrame =
     Tables.events(spark, sfDir)
@@ -41,8 +45,7 @@ object EventSource {
     df.write.mode("overwrite").option("timestampFormat", TsFormat).json(path)
 
   def readJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(
-      "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+    spark.read.schema(EventsSchema)
       .option("timestampFormat", TsFormat)
       .json(path)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -54,7 +57,7 @@ object EventSource {
 
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true")
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+      .schema(EventsSchema)
       .option("timestampFormat", TsFormat)
       .csv(path)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -90,7 +93,7 @@ object EventSource {
     * below slots in with the same downstream plan). */
   def streamParquet(spark: SparkSession, path: String): DataFrame =
     spark.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+      .schema(EventsSchema)
       .parquet(path)
 
   /** Live Kafka-shaped subscription (reference `consumer.ex:105` joins
@@ -128,9 +131,7 @@ object EventSource {
   def parseTopicEvents(records: DataFrame): DataFrame =
     records.select(
       col("partition"), col("offset"),
-      from_json(col("value"),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"),
+      from_json(col("value"), EventsSchema,
         java.util.Map.of("timestampFormat", TsFormat)).as("e"))
       .select(col("partition"), col("offset"), col("e.*"))
 
@@ -138,9 +139,7 @@ object EventSource {
     * tail of every wire decode (topic log, MessagePack frames). */
   def parseWireJson(records: DataFrame): DataFrame =
     records.select(
-      from_json(col("value"),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"),
+      from_json(col("value"), EventsSchema,
         java.util.Map.of("timestampFormat", TsFormat)).as("e"))
       .select(col("e.*"))
 }

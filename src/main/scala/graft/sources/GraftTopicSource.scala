@@ -81,11 +81,25 @@ object GraftTopicLog {
   def partitionFile(dir: String, topic: String, partition: Int): File =
     new File(new File(dir, topic), s"p$partition.log")
 
-  /** Producer append (broker-side). Records are (key, tsMicros, value);
-    * value must be single-line text (the engine's wire-debug JSON — tabs
-    * and newlines are always escaped inside JSON strings). */
+  /** Producer append (broker-side). Records are (key, tsMicros, value),
+    * stored one `key\tts\tvalue` line each, so the key must be non-null
+    * text without a tab or line break and the value non-null single-line
+    * text (the engine's wire-debug JSON — tabs and newlines are always
+    * escaped inside JSON strings). The reader ends a line at '\r' as
+    * well as '\n'. A batch with any record that breaks the framing is
+    * rejected whole, before any file is opened. */
   def append(dir: String, topic: String, records: Seq[(String, Long, String)],
-      partitionCount: Int = graft.model.Tables.DefaultPartitionCount): Unit =
+      partitionCount: Int = graft.model.Tables.DefaultPartitionCount): Unit = {
+    records.iterator.zipWithIndex.foreach { case ((k, _, v), i) =>
+      def reject(field: String, why: String): Nothing =
+        throw new IllegalArgumentException(
+          s"topic record $i: $field $why, which the log's line framing cannot carry")
+      def breaksLine(t: String) = t.indexOf('\n') >= 0 || t.indexOf('\r') >= 0
+      if (k == null) reject("key", "is null")
+      if (v == null) reject("value", "is null")
+      if (breaksLine(k) || k.indexOf('\t') >= 0) reject("key", "contains a tab or line break")
+      if (breaksLine(v)) reject("value", "contains a line break")
+    }
     records.groupBy(r => partitionFor(r._1, partitionCount)).foreach {
       case (part, recs) =>
         val f = partitionFile(dir, topic, part)
@@ -98,6 +112,7 @@ object GraftTopicLog {
           out.getChannel.force(false) // whole-line durability before ack
         } finally out.close()
     }
+  }
 
   /** End byte offset per assigned partition: the last record boundary at
     * or below the file's length. A producer's append can be observed

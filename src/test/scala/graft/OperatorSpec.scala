@@ -1231,35 +1231,31 @@ class OperatorSpec extends AnyFunSuite with SparkTest {
     // probe is far too noisy to compare index quality (probe 0 happens
     // to favor the plain path at sf0.01 while the 10-probe means favor
     // residual at BOTH SFs — measured during development), so the gate
-    // averages the composite recall@5 over 10 probes via the
-    // spark.graft.ann.probeId knob.
+    // averages the composite recall@5 over 10 probes.
     import org.apache.spark.sql.functions._
     def dotE(a: String, b: String) =
       expr(s"aggregate(zip_with($a, $b, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
     val probes = 0 until 10
     var plainSum = 0.0
     var resSum = 0.0
-    try {
-      for (p <- probes) {
-        spark.conf.set("spark.graft.ann.probeId", p.toString)
-        val e = graft.model.Tables.embeddings(spark, sf)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> cast(x as double))").as("v"))
-        val pv = e.filter(col("vec_id") === p).select(col("v").as("p"))
-        val exact5 = e.crossJoin(broadcast(pv)).filter(col("vec_id") =!= p)
-          .select(col("vec_id"),
-            round(dotE("v", "v") - lit(2.0) * dotE("v", "p") + dotE("p", "p"), 6).as("d"))
-          .orderBy(col("d").asc, col("vec_id")).limit(5)
-          .collect().map(_.getLong(0)).toSet
-        val plain5 = SimilarityOps.annIvfPq(spark, sf)
-          .collect().map(_.getLong(0)).toSet
-        val res5 = SimilarityOps.annIvfPqRes(spark, sf)
-          .collect().map(_.getLong(0)).toSet
-        plainSum += exact5.intersect(plain5).size / 5.0
-        resSum += exact5.intersect(res5).size / 5.0
-        graft.api.Caches.release(spark)
-      }
-    } finally spark.conf.unset("spark.graft.ann.probeId")
+    for (p <- probes) {
+      val e = graft.model.Tables.embeddings(spark, sf)
+        .select(col("vec_id"),
+          expr("transform(embedding, x -> cast(x as double))").as("v"))
+      val pv = e.filter(col("vec_id") === p).select(col("v").as("p"))
+      val exact5 = e.crossJoin(broadcast(pv)).filter(col("vec_id") =!= p)
+        .select(col("vec_id"),
+          round(dotE("v", "v") - lit(2.0) * dotE("v", "p") + dotE("p", "p"), 6).as("d"))
+        .orderBy(col("d").asc, col("vec_id")).limit(5)
+        .collect().map(_.getLong(0)).toSet
+      val plain5 = SimilarityOps.annIvfPqAt(spark, sf, p)
+        .collect().map(_.getLong(0)).toSet
+      val res5 = SimilarityOps.annIvfPqResAt(spark, sf, p)
+        .collect().map(_.getLong(0)).toSet
+      plainSum += exact5.intersect(plain5).size / 5.0
+      resSum += exact5.intersect(res5).size / 5.0
+      graft.api.Caches.release(spark)
+    }
     val (plainMean, resMean) = (plainSum / probes.size, resSum / probes.size)
     info(f"mean recall@5 over ${probes.size} probes: plain=$plainMean%.2f residual=$resMean%.2f")
     assert(resMean >= plainMean,

@@ -281,4 +281,25 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
       st.stop()
     }
   }
+
+  test("topic log: append rejects records that break the line framing and writes nothing") {
+    val dir = tempDir("framing")
+    GraftTopicLog.append(dir, "t", Seq(("k", 1L, """{"n": 1}""")))
+    def lengths = (0 until graft.model.Tables.DefaultPartitionCount)
+      .map(p => GraftTopicLog.partitionFile(dir, "t", p).length())
+    val before = lengths
+    val bad = Seq(
+      ("k\tx", 2L, "{}") -> "key", ("k\rx", 2L, "{}") -> "key",
+      ("k\nx", 2L, "{}") -> "key", ((null: String), 2L, "{}") -> "key",
+      ("k", 2L, "{\r}") -> "value", ("k", 2L, "{\n}") -> "value",
+      ("k", 2L, (null: String)) -> "value")
+    bad.foreach { case (rec, field) =>
+      // a valid record first: the whole batch is checked before any write
+      val e = intercept[IllegalArgumentException] {
+        GraftTopicLog.append(dir, "t", Seq(("k", 3L, """{"n": 3}"""), rec))
+      }
+      assert(e.getMessage.contains(field), e.getMessage)
+      assert(lengths == before, s"a rejected batch wrote bytes: $rec")
+    }
+  }
 }

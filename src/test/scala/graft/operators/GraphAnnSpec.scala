@@ -235,92 +235,6 @@ class GraphAnnSpec extends AnyFunSuite with SparkTest {
     idx.unpersist()
   }
 
-  test("entry ladder: deterministic, lvl1 edges stay in-level, flat layer unchanged") {
-    val hier = GraphAnn.buildIndexHier(embeds(sf), P).collect()
-      .map(r => (r.getAs[Int]("shard"), r.getAs[Long]("vec_id"),
-        r.getSeq[Long](r.fieldIndex("nbrs")).toSeq,
-        r.getSeq[Long](r.fieldIndex("nbrs1")).toSeq,
-        r.getAs[Boolean]("lvl1")))
-      .sortBy(t => (t._1, t._2)).toSeq
-    // flat layer-0 adjacency is bit-identical to buildIndex's
-    val flat = GraphAnn.buildIndex(embeds(sf), P).collect()
-      .map(r => (r.getAs[Int]("shard"), r.getAs[Long]("vec_id"),
-        r.getSeq[Long](r.fieldIndex("nbrs")).toSeq))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(hier.map(t => (t._1, t._2, t._3)) == flat)
-    // upper layer: ~sqrt(n) nodes per shard, edges stay inside level 1,
-    // non-lvl1 nodes carry no upper adjacency
-    hier.groupBy(_._1).values.foreach { ss =>
-      val lvl1 = ss.filter(_._5).map(_._2).toSet
-      val stride = GraphAnn.lvl1Stride(ss.size)
-      assert(lvl1.size == (ss.size + stride - 1) / stride,
-        s"lvl1 size ${lvl1.size} for shard of ${ss.size} (stride $stride)")
-      assert(lvl1.contains(ss.map(_._2).min), "min id must anchor the ladder")
-      ss.foreach { case (_, id, _, nbrs1, isL1) =>
-        if (!isL1) assert(nbrs1.isEmpty, s"non-lvl1 node $id has upper edges")
-        nbrs1.foreach(n => assert(lvl1.contains(n), s"upper edge leaves level 1: $id -> $n"))
-      }
-    }
-    // search determinism
-    val idx = GraphAnn.buildIndexHier(embeds(sf), P).cache()
-    val all = unitVecs(sf)
-    val probes = (0L until NProbes).map(id => id -> all(id))
-    def res() = GraphAnn.searchHier(idx, probes, K, P).collect()
-      .map(r => (r.getAs[Long]("probe_id"), r.getAs[Int]("rk"),
-        r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))).toSeq
-    assert(res() == res(), "two ladder searches differ")
-    idx.unpersist()
-  }
-
-  test("entry ladder: equal recall at a smaller beam, strictly fewer visits at 20k (r14 verdict #6)") {
-    // The ladder's value proposition is HNSW's: a near-query entry lets a
-    // SMALLER lower beam reach the same recall, so total visits drop. The
-    // gate runs on a 20k-vector corpus (the 10× replica's SIZE) with the
-    // CLUSTERED geometry real embedding corpora have — the replica itself
-    // is clone-degenerate (its ground-truth top-10 is exact-duplicate
-    // cliques on a cos≈1 plateau, where recall measures tie-chasing luck
-    // and the entry point is immaterial — measured and documented in
-    // SCALING.md r15, the honest-negative twin of this gate). Everything
-    // here is deterministic: the corpus is a pure function of the id.
-    val spark2 = spark
-    import spark2.implicits._
-    val all = clustered(20000).map { case (id, v) =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      id -> v.map(_ / n)
-    }.toMap
-    val vecsDf = clustered(20000).toSeq.toDF("vec_id", "v")
-    val probes = (0L until NProbes).map(id => id -> all(id))
-    def exact(pid: Long, pv: Array[Double]) = all.toSeq.filter(_._1 != pid)
-      .map { case (id, v) => (-v.zip(pv).map { case (a, b) => a * b }.sum, id) }
-      .sorted.take(K).map(_._2).toSet
-    val truth = probes.map { case (pid, pv) => pid -> exact(pid, pv) }.toMap
-    def recallOf(rows: Array[org.apache.spark.sql.Row]) = {
-      val got = rows.map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("vec_id")))
-        .groupBy(_._1).map { case (pid, rs) =>
-          pid -> rs.map(_._2).filter(_ != pid).take(K).toSet }
-      probes.map { case (pid, _) =>
-        got(pid).intersect(truth(pid)).size.toDouble / K }.sum / probes.size
-    }
-    val Ph = P.copy(efSearch = (P.efSearch * 3) / 4) // 48 vs flat 64
-    val flatIdx = GraphAnn.buildIndex(vecsDf, P).cache()
-    val flatRecall = recallOf(GraphAnn.search(flatIdx, probes, K + 1, P).collect())
-    val flatVisited = GraphAnn.searchStats(flatIdx, probes, K, P).collect()
-      .map(_.getAs[Long]("visited")).sum
-    flatIdx.unpersist()
-    val hierIdx = GraphAnn.buildIndexHier(vecsDf, Ph).cache()
-    val hierRecall = recallOf(GraphAnn.searchHier(hierIdx, probes, K + 1, Ph).collect())
-    val hierVisited = GraphAnn.searchStatsHier(hierIdx, probes, K, Ph).collect()
-      .map(_.getAs[Long]("visited")).sum
-    hierIdx.unpersist()
-    assert(hierRecall >= flatRecall,
-      s"ladder recall $hierRecall fell below flat $flatRecall")
-    assert(hierVisited < flatVisited,
-      s"ladder visited $hierVisited not below flat $flatVisited")
-    info(f"flat@${P.efSearch}: recall $flatRecall%.3f visited $flatVisited — " +
-      f"ladder@${Ph.efSearch}: recall $hierRecall%.3f visited $hierVisited " +
-      f"(${100.0 * (flatVisited - hierVisited) / flatVisited}%.1f%% fewer)")
-  }
-
   test("the beam visits a shrinking FRACTION of each shard as the corpus grows") {
     def meanFrac(dir: String): (Double, Long) = {
       val idx = GraphAnn.buildIndex(embeds(dir), P).cache()
@@ -367,7 +281,7 @@ class GraphAnnSpec extends AnyFunSuite with SparkTest {
     assert(GraphAnn.adaptiveM(20000L) <= 8)
   }
 
-  test("shards past the measured envelope refuse to build unless explicitly allowed (r17 #3)") {
+  test("shards past the measured envelope refuse to build (r17 #3)") {
     import spark.implicits._
     // a shard bigger than MeasuredMaxShardNodes: synthesize by claiming
     // one shard over > envelope rows of trivially small vectors — the
@@ -384,17 +298,9 @@ class GraphAnnSpec extends AnyFunSuite with SparkTest {
     assert(e.getMessage.contains("measured") ||
       Option(e.getCause).exists(_.getMessage.contains("measured")),
       s"expected the envelope refusal, got: ${e.getMessage}")
-    // the conf opt-in restores the old warn-and-build behavior; capping
-    // the rows back inside the envelope also builds (boundary inclusive)
+    // capping the rows back inside the envelope builds
     assert(GraphAnn.buildIndex(vecs.limit(1000),
       GraphAnn.adaptiveParams(1000L, nShards = 1)).count() == 1000)
-    spark.conf.set(GraphAnn.AllowExtrapolatedKey, "true")
-    try {
-      // tiny row count but oversized CLAIM is not what trips the check —
-      // the check sees actual shard rows, so this builds fine under the
-      // conf; the real > envelope build would too (not run here: cost)
-      assert(GraphAnn.buildIndex(vecs.limit(500), p).count() == 500)
-    } finally spark.conf.unset(GraphAnn.AllowExtrapolatedKey)
   }
 
   test("recall at 100k-node shards recovers to the <=20k band with derived parameters (env-gated)") {
