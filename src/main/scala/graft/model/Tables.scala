@@ -199,20 +199,6 @@ object Tables {
 
   case class Event(meta: Meta, payload: String)
 
-  /** Canonical envelope schema for `from_json` / streaming sources. */
-  val metaSchema: StructType = StructType(Seq(
-    StructField("name", StringType),
-    StructField("producer", StringType),
-    StructField("version", IntegerType),
-    StructField("cid", StringType),
-    StructField("uuid", StringType),
-    StructField("created_at", TimestampType),
-    StructField("key", StringType)))
-
-  val eventSchema: StructType = StructType(Seq(
-    StructField("meta", metaSchema),
-    StructField("payload", StringType)))
-
   /** Default server-side partition count (reference `config/config.exs:8`). */
   val DefaultPartitionCount = 4
 }

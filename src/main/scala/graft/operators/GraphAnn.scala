@@ -446,18 +446,4 @@ object GraphAnn {
       .toDF("probe_id", "shard", "visited", "shard_size")
       .orderBy("probe_id", "shard")
   }
-
-  /** Convenience: index + search the driver-table embeddings with the
-    * sweep-family probes (vec_ids 0 until nProbes), k best each. */
-  def searchEmbeddings(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nProbes: Int, k: Int, p: Params = Params()): DataFrame = {
-    val e = graft.model.Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> cast(x as double))").as("v"))
-    val idx = buildIndex(e, p).persist().transform(graft.api.Caches.tracked)
-    idx.count()
-    val probes = e.filter(col("vec_id") < nProbes)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    search(idx, probes, k, p)
-  }
 }

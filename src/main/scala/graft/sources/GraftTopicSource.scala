@@ -78,6 +78,8 @@ object GraftTopicLog {
   def assignment(partitionCount: Int, memberIndex: Int, memberCount: Int): Seq[Int] =
     (0 until partitionCount).filter(_ % memberCount == memberIndex)
 
+  private[sources] val PartitionFileName = "p(\\d+)\\.log".r
+
   def partitionFile(dir: String, topic: String, partition: Int): File =
     new File(new File(dir, topic), s"p$partition.log")
 
@@ -580,6 +582,15 @@ class GraftTopicProvider extends TableProvider
         graft.model.Tables.DefaultPartitionCount
       }
     val count = options.getInt("partition.count", confCount)
+    // a log written with more partitions than `count` would have its
+    // higher partitions silently never read
+    val logFiles = Option(new java.io.File(dir, topic).listFiles()).getOrElse(Array.empty)
+    logFiles.map(_.getName).collect { case GraftTopicLog.PartitionFileName(k) => k.toInt }
+      .filter(_ >= count).minOption.foreach { k =>
+        throw new IllegalArgumentException(
+          s"graft-topic: ${GraftTopicLog.partitionFile(dir, topic, k)} holds partition $k, " +
+            s"but partition.count is $count: set it to the count the log was written with")
+      }
     val partitions = Option(options.get("partitions")).filter(_.nonEmpty)
       .map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(0 until count)

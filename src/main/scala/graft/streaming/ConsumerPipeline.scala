@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQ
   *   own checkpoint dir = the group's offset state;
   * - partitioned queues           → `repartition(n, key)` before stateful
   *   stages;
-  * - quarantine                   → `foreachBatch` union-split to ok/dlq
-  *   sinks (idempotent parquet appends keyed by batchId);
+  * - quarantine                   → per-batch sink union-split to ok/dlq
+  *   ([[MicroBatch.startSink]]: idempotent overwrites keyed by batchId);
   * - reconnect/backoff            → Spark task retry + query restart from
   *   checkpoint (runtime concern, no data-plane logic needed).
   */
@@ -89,10 +89,9 @@ object ConsumerPipeline {
     enriched.withWatermark("created_at", watermark).dropDuplicates("uuid")
 
   /** Consume with DLQ: every micro-batch is union-split to the ok sink
-    * and the quarantine sink. foreachBatch is only at-least-once, so the
-    * writes are made idempotent by keying each batch's output directory
-    * on the batchId and OVERWRITING it — a replayed batch rewrites the
-    * same directory instead of appending duplicates. With
+    * and the quarantine sink through the [[MicroBatch.startSink]]
+    * per-batch sink — a replayed batch rewrites the same directories
+    * instead of appending duplicates. With
     * `exactlyOnce = true` (default) duplicate uuids within the watermark
     * are also dropped before routing (the effectively-once upgrade over
     * the reference's at-least-once contract).
@@ -102,21 +101,12 @@ object ConsumerPipeline {
       exactlyOnce: Boolean = true): StreamingQuery = {
     val enriched = enrich(events)
     val deduped = if (exactlyOnce) dedupByUuid(enriched) else enriched
-    withOutcome(deduped)
-      .writeStream
-      .queryName(service)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val routed = batch.cache()
-        try {
-          routed.filter(col("outcome") === "ok")
-            .write.mode("overwrite").parquet(s"$okPath/batch=$batchId")
-          routed.filter(col("outcome") =!= "ok")
-            .withColumn("queue", concat(lit("event:"), col("name")))
-            .write.mode("overwrite").parquet(s"$dlqPath/batch=$batchId")
-        } finally graft.api.Caches.dropTransient(routed)
-      }
-      .start()
+    MicroBatch.startSink(withOutcome(deduped), service, checkpointDir) { routed =>
+      Seq(
+        okPath -> routed.filter(col("outcome") === "ok"),
+        dlqPath -> routed.filter(col("outcome") =!= "ok")
+          .withColumn("queue", concat(lit("event:"), col("name"))))
+    }
   }
 
   /** Tumbling windowed aggregation with watermark — late rows beyond the

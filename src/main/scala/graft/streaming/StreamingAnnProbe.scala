@@ -32,15 +32,12 @@ object StreamingAnnProbe {
   def start(queriesDf: DataFrame, index: DataFrame,
       seeds: Array[(Int, Array[Double])], k: Int, p: GraphAnn.Params,
       probeShards: Int, checkpointDir: String, outPath: String): StreamingQuery =
-    queriesDf.writeStream
-      .queryName("graft-streaming-ann-probe")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.foreachBatch(queriesDf, "graft-streaming-ann-probe", checkpointDir) {
+      (batch, batchId) =>
         val probes = batch.select("vec_id", "v").collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
         if (probes.nonEmpty)
           GraphAnn.searchRouted(index, seeds, probes, k, p, probeShards)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      }
-      .start()
+            .write.mode("overwrite").parquet(MicroBatch.batchDir(outPath, batchId))
+    }
 }

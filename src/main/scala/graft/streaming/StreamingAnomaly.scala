@@ -3,7 +3,6 @@ package graft.streaming
 import scala.math.BigDecimal.RoundingMode
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.AnalyticOps
 import graft.streaming.ConsumerPipeline.RawEvent
@@ -42,34 +41,23 @@ object StreamingAnomaly {
       window: Int = AnalyticOps.ZscoreWindow,
       threshold: Double = 3.0): Dataset[Anomaly] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (etype: String, it: Iterator[RawEvent], state: GroupState[Ring]) =>
-          val sorted = it.toVector
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var ring = state.getOption.map(_.vals).getOrElse(Vector.empty)
-          val out = Vector.newBuilder[Anomaly]
-          for (e <- sorted) {
-            if (ring.length == window) {
-              val ds = ring.map(v =>
-                BigDecimal(v).setScale(2, RoundingMode.HALF_UP))
-              val s1 = ds.sum.toDouble
-              val s2 = ds.map(d => d * d).sum.toDouble
-              val mean = s1 / window
-              val variance = (s2 - s1 * s1 / window) / window
-              // same guard as the batch window: a zero-variance frame
-              // (50 identical values; the double can land ulps negative)
-              // has no defined z-score — both paths drop the row
-              if (variance > 1e-12) {
-                val z = (e.value - mean) / math.sqrt(variance)
-                if (math.abs(z) > threshold)
-                  out += Anomaly(e.event_id, etype, e.value, mean, z)
-              }
-            }
-            ring = (ring :+ e.value).takeRight(window)
-          }
-          state.update(Ring(ring))
-          out.result().iterator
-      }
+    MicroBatch.foldInEventOrder(events, (e: RawEvent) => e.event_type, Ring(Vector.empty)) {
+      (etype: String, ring: Ring, e: RawEvent) =>
+        val hit = if (ring.vals.length < window) None else {
+          val ds = ring.vals.map(v => BigDecimal(v).setScale(2, RoundingMode.HALF_UP))
+          val s1 = ds.sum.toDouble
+          val s2 = ds.map(d => d * d).sum.toDouble
+          val mean = s1 / window
+          val variance = (s2 - s1 * s1 / window) / window
+          // same guard as the batch window: a zero-variance frame
+          // (50 identical values; the double can land ulps negative)
+          // has no defined z-score — both paths drop the row
+          val z = (e.value - mean) / math.sqrt(variance)
+          if (variance > 1e-12 && math.abs(z) > threshold)
+            Some(Anomaly(e.event_id, etype, e.value, mean, z))
+          else None
+        }
+        (Ring((ring.vals :+ e.value).takeRight(window)), hit)
+    }
   }
 }

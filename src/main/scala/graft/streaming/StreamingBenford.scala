@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.math.BigDecimal.RoundingMode
-
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
@@ -31,21 +29,17 @@ import graft.streaming.ConsumerPipeline.RawEvent
   * the same rows across a two-wave split, and that [[profileRows]]
   * matches the batch expression chain value-for-value.
   */
-object StreamingBenford {
+object StreamingBenford extends CatalystRounding {
 
   case class DigitCount(digit: Int, n: Long)
 
   case class DigitRow(digit: Int, n: Long, obs_share: Double,
       exp_share: Double, abs_dev: Double)
 
-  private[graft] def round6(v: Double): Double =
-    BigDecimal(v).setScale(6, RoundingMode.HALF_UP).toDouble
-
   /** Leading digit of the value's exact cents — the batch digit chain
     * replayed (round(v·100) HALF_UP → decimal rendering → first char). */
   private[graft] def leadingDigit(v: Double): Int =
-    BigDecimal(v * 100.0).setScale(0, RoundingMode.HALF_UP).toLong
-      .toString.charAt(0) - '0'
+    toCents(v * 100.0).toString.charAt(0) - '0'
 
   def profile(events: Dataset[RawEvent]): Dataset[DigitCount] = {
     import events.sparkSession.implicits._

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -16,11 +15,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (StreamingSpec proves bit-parity), which no reservoir scheme run per
   * batch gives you.
   *
-  * State layout mirrors [[StreamingCdc]]: versioned k-row snapshots
-  * `statePath/v=<batchId>`; each batch reads the newest version below
-  * its own id and overwrites its own, so an at-least-once replay
-  * recomputes from the same predecessor instead of re-sampling —
-  * idempotent by construction. Versions two behind are pruned.
+  * State is a k-row snapshot in the [[MicroBatch]] snapshot store, so
+  * an at-least-once replay recomputes from the same predecessor instead
+  * of re-sampling — idempotent by construction.
   */
 object StreamingBottomK {
 
@@ -38,40 +35,15 @@ object StreamingBottomK {
   private def bottomK(df: DataFrame): DataFrame =
     df.orderBy(col("hk"), col("event_id")).limit(K)
 
-  private def versions(spark: SparkSession, statePath: String): Seq[Long] = {
-    val p = new Path(statePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.drop(2).toLong }
-  }
-
   /** The newest committed k-row sample (for readers). */
-  def state(spark: SparkSession, statePath: String): DataFrame = {
-    val vs = versions(spark, statePath)
-    require(vs.nonEmpty, s"no sample snapshot under $statePath")
-    spark.read.parquet(s"$statePath/v=${vs.max}")
-  }
+  def state(spark: SparkSession, statePath: String): DataFrame =
+    MicroBatch.snapshot(spark, statePath)
 
   def start(events: DataFrame, statePath: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .queryName("graft-streaming-bottomk")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prevIds = versions(spark, statePath).filter(_ < batchId)
+    MicroBatch.startSnapshots(events, "graft-streaming-bottomk", statePath, checkpointDir) {
+      (batch, prev) =>
         val fresh = bottomK(hashed(batch))
-        val merged = prevIds.sorted.lastOption match {
-          case Some(v) => bottomK(
-            spark.read.parquet(s"$statePath/v=$v").unionByName(fresh))
-          case None => fresh
-        }
-        merged.write.mode("overwrite").parquet(s"$statePath/v=$batchId")
-        val fs = new Path(statePath)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        prevIds.filter(_ < batchId - 1)
-          .foreach(v => fs.delete(new Path(s"$statePath/v=$v"), true))
-      }
-      .start()
+        prev.fold(fresh)(p => bottomK(p.unionByName(fresh)))
+    }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,14 +16,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * final state is independent of how the stream was micro-batched AND of
   * at-least-once replays (StreamingSpec proves stream-batch parity).
   *
-  * State layout: versioned snapshots `statePath/v=<batchId>`, a
-  * poor-man's commit log. Each batch reads the newest version BELOW its
-  * own id and overwrites its own — so a replayed batch recomputes from
-  * the same predecessor state instead of double-applying, the same
-  * idempotence contract as ConsumerPipeline's batch-keyed sinks. At
-  * scale the snapshot is one row per live key (delta-sized, not
-  * event-sized), rewritten per batch; versions two behind the current
-  * batch are pruned.
+  * State lives in the [[MicroBatch]] snapshot store, a poor-man's
+  * commit log: a replayed batch recomputes from the same predecessor
+  * state instead of double-applying. At scale the snapshot is one row
+  * per live key (delta-sized, not event-sized), rewritten per batch.
   */
 object StreamingCdc {
 
@@ -47,20 +42,9 @@ object StreamingCdc {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  private def versions(spark: SparkSession, statePath: String): Seq[Long] = {
-    val p = new Path(statePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.drop(2).toLong }
-  }
-
   /** The newest committed snapshot (for readers). */
-  def state(spark: SparkSession, statePath: String): DataFrame = {
-    val vs = versions(spark, statePath)
-    require(vs.nonEmpty, s"no state snapshot under $statePath")
-    spark.read.parquet(s"$statePath/v=${vs.max}")
-  }
+  def state(spark: SparkSession, statePath: String): DataFrame =
+    MicroBatch.snapshot(spark, statePath)
 
   /** Streaming CDC folded into a [[graft.sources.CowTable]] — the
     * natural composition of the two halves (round-10 verdict, missing
@@ -76,13 +60,9 @@ object StreamingCdc {
     * table) instead of a full snapshot rewrite per batch. */
   def startToCow(events: DataFrame, root: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .queryName("graft-streaming-cdc-cow")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcBatch(root, batch, batchId)
-      }
-      .start()
+    MicroBatch.foreachBatch(events, "graft-streaming-cdc-cow", checkpointDir) {
+      (batch, batchId) => applyCdcBatch(root, batch, batchId)
+    }
 
   /** One micro-batch's idempotent CowTable commit (the foreachBatch
     * body, visible for the replay spec): already-applied batch ids
@@ -129,24 +109,9 @@ object StreamingCdc {
 
   def start(events: DataFrame, statePath: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .queryName("graft-streaming-cdc")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prevIds = versions(spark, statePath).filter(_ < batchId)
+    MicroBatch.startSnapshots(events, "graft-streaming-cdc", statePath, checkpointDir) {
+      (batch, prev) =>
         val changes = latestChanges(batch)
-        val merged = prevIds.sorted.lastOption match {
-          case Some(v) => merge(
-            spark.read.parquet(s"$statePath/v=$v"), changes)
-          case None => changes
-        }
-        merged.write.mode("overwrite").parquet(s"$statePath/v=$batchId")
-        // prune: a replay of batch N only ever needs version N-1
-        val fs = new Path(statePath)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        prevIds.filter(_ < batchId - 1)
-          .foreach(v => fs.delete(new Path(s"$statePath/v=$v"), true))
-      }
-      .start()
+        prev.fold(changes)(merge(_, changes))
+    }
 }

@@ -1,9 +1,6 @@
 package graft.streaming
 
-import scala.math.BigDecimal.RoundingMode
-
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.streaming.ConsumerPipeline.RawEvent
 
@@ -38,15 +35,12 @@ import graft.streaming.ConsumerPipeline.RawEvent
   * value (impossible for the DECIMAL-backed events table) emits its
   * own value as the stat and does NOT advance the type's (t, cum)
   * state, so one poisoned record cannot corrupt the running sum. */
-object StreamingCusum {
+object StreamingCusum extends CatalystRounding {
 
   case class Scanned(event_id: Long, event_type: String, t: Long, stat: Double)
 
   /** Per-type running position and exact cent sum. */
   case class CusumState(t: Long, cum: Long)
-
-  private def toCents(v: Double): Long =
-    BigDecimal(v).setScale(0, RoundingMode.HALF_UP).toLong
 
   /** The shared double chain, replayed in Scala exactly as Catalyst
     * evaluates `CusumStatExpr` (same operand order, same CASE guard). */
@@ -61,26 +55,17 @@ object StreamingCusum {
   def scan(events: Dataset[RawEvent],
       moments: Map[String, (Long, Double, Double)]): Dataset[Scanned] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (tpe: String, it: Iterator[RawEvent], state: GroupState[CusumState]) =>
-          val sorted = it.toVector
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var st = state.getOption.getOrElse(CusumState(0L, 0L))
+    MicroBatch.foldInEventOrder(events, (e: RawEvent) => e.event_type, CusumState(0L, 0L)) {
+      (tpe: String, st: CusumState, e: RawEvent) =>
+        if (e.value.isNaN || e.value.isInfinite)
+          (st, Some(Scanned(e.event_id, tpe, st.t, e.value)))
+        else {
           val (n, sx, sxx) = moments.getOrElse(tpe, (0L, 0.0, 0.0))
-          val out = Vector.newBuilder[Scanned]
-          for (e <- sorted) {
-            if (e.value.isNaN || e.value.isInfinite) {
-              out += Scanned(e.event_id, tpe, st.t, e.value)
-            } else {
-              st = CusumState(st.t + 1L, st.cum + toCents(e.value * 100.0))
-              out += Scanned(e.event_id, tpe, st.t,
-                statOf(st.cum.toDouble, st.t.toDouble, n.toDouble, sx, sxx))
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+          val next = CusumState(st.t + 1L, st.cum + toCents(e.value * 100.0))
+          (next, Some(Scanned(e.event_id, tpe, next.t,
+            statOf(next.cum.toDouble, next.t.toDouble, n.toDouble, sx, sxx))))
+        }
+    }
   }
 
   /** Collect the offline moments artifact (|types| rows — metadata). */

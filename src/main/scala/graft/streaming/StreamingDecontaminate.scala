@@ -19,10 +19,9 @@ import graft.operators.TextOps
   * cross-batch state and NO stream-side corpus statistics are needed,
   * and batch boundaries cannot change any verdict (StreamingSpec proves
   * the union of streamed incidents reproduces the batch `decontaminate`
-  * query's per-eval contamination report exactly). foreachBatch is
-  * at-least-once, so writes are idempotent by keying each batch's
-  * output directory on the batchId and OVERWRITING it (the
-  * StreamingDedup/ConsumerPipeline sink contract).
+  * query's per-eval contamination report exactly). Incidents go through
+  * the [[MicroBatch.startSink]] per-batch sink, so an at-least-once
+  * replay rewrites its own batch directory.
   */
 object StreamingDecontaminate {
 
@@ -31,16 +30,7 @@ object StreamingDecontaminate {
     * persisted by the caller — it is consumed once per micro-batch. */
   def start(newDocs: DataFrame, evalIdx: DataFrame,
       checkpointDir: String, outPath: String): StreamingQuery =
-    newDocs.writeStream
-      .queryName("graft-streaming-decontaminate")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the shingle pipeline reads the batch once, but a non-trivial
-        // source should still be decoded once, not per shuffle retry
-        val b = batch.persist()
-        try TextOps.decontamIncidents(b, evalIdx)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally graft.api.Caches.dropTransient(b)
-      }
-      .start()
+    MicroBatch.startSink(newDocs, "graft-streaming-decontaminate", checkpointDir) { b =>
+      Seq(outPath -> TextOps.decontamIncidents(b, evalIdx))
+    }
 }

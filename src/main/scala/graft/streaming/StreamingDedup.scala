@@ -13,11 +13,11 @@ import graft.operators.TextOps
   * the batch `dedup_incremental` query — per-batch cost tracks the DELTA
   * size times bucket occupancy, never the corpus pair space. The index
   * side is static inside the join (stream-static), so no streaming
-  * aggregation state is needed; foreachBatch is only at-least-once, so
-  * writes are made idempotent by keying each batch's output directory on
-  * the batchId and OVERWRITING it (same contract as
-  * ConsumerPipeline.start — a replayed batch rewrites its own directory
-  * instead of appending duplicates).
+  * aggregation state is needed. Verdicts go through the
+  * [[MicroBatch.startSink]] per-batch sink, so a replayed batch rewrites
+  * its own directory instead of appending duplicates; the batch is
+  * persisted because the kernel reads it twice (signature pipeline +
+  * the verdict left-join's id list).
   */
 object StreamingDedup {
 
@@ -26,17 +26,7 @@ object StreamingDedup {
     * the caller — it is consumed once per micro-batch. */
   def start(newDocs: DataFrame, corpusBands: DataFrame,
       checkpointDir: String, outPath: String): StreamingQuery =
-    newDocs.writeStream
-      .queryName("graft-streaming-dedup")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the kernel reads the batch twice (signature pipeline + the
-        // verdict left-join's id list) — persist so a non-trivial source
-        // is decoded once per micro-batch, not per consuming branch
-        val b = batch.persist()
-        try TextOps.matchVerdicts(b, corpusBands)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally graft.api.Caches.dropTransient(b)
-      }
-      .start()
+    MicroBatch.startSink(newDocs, "graft-streaming-dedup", checkpointDir) { b =>
+      Seq(outPath -> TextOps.matchVerdicts(b, corpusBands))
+    }
 }

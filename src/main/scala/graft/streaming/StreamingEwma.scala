@@ -1,9 +1,6 @@
 package graft.streaming
 
-import scala.math.BigDecimal.RoundingMode
-
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.AnalyticOps
 import graft.streaming.ConsumerPipeline.RawEvent
@@ -34,7 +31,7 @@ import graft.streaming.ConsumerPipeline.RawEvent
   * batch counterpart — the stream passes them through as their own
   * ewma instead, flagged for a downstream policy.
   */
-object StreamingEwma {
+object StreamingEwma extends CatalystRounding {
 
   case class Smoothed(event_id: Long, user_id: Long, value: Double,
       ewma: Double)
@@ -42,37 +39,22 @@ object StreamingEwma {
   /** Ring of the most recent ≤ window cent values (oldest first). */
   case class Ring(cents: Vector[Long])
 
-  private[graft] def round6(v: Double): Double =
-    BigDecimal(v).setScale(6, RoundingMode.HALF_UP).toDouble
-
-  private def toCents(v: Double): Long =
-    BigDecimal(v).setScale(0, RoundingMode.HALF_UP).toLong
-
   def smooth(events: Dataset[RawEvent],
       window: Int = AnalyticOps.EwmaWindow): Dataset[Smoothed] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[RawEvent], state: GroupState[Ring]) =>
-          val sorted = it.toVector
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var ring = state.getOption.map(_.cents).getOrElse(Vector.empty)
-          val out = Vector.newBuilder[Smoothed]
-          for (e <- sorted) {
-            if (e.value.isNaN || e.value.isInfinite) {
-              out += Smoothed(e.event_id, uid, e.value, e.value)
-            } else {
-              ring = (ring :+ toCents(e.value * 100.0)).takeRight(window)
-              val k = ring.length
-              var wsum = 0L
-              var i = 0
-              while (i < k) { wsum += ring(i) << i; i += 1 }
-              val ewma = wsum.toDouble / ((math.pow(2.0, k) - 1.0) * 100.0)
-              out += Smoothed(e.event_id, uid, e.value, round6(ewma))
-            }
-          }
-          state.update(Ring(ring))
-          out.result().iterator
-      }
+    MicroBatch.foldInEventOrder(events, (e: RawEvent) => e.user_id, Ring(Vector.empty)) {
+      (uid: Long, ring: Ring, e: RawEvent) =>
+        if (e.value.isNaN || e.value.isInfinite)
+          (ring, Some(Smoothed(e.event_id, uid, e.value, e.value)))
+        else {
+          val cents = (ring.cents :+ toCents(e.value * 100.0)).takeRight(window)
+          val k = cents.length
+          var wsum = 0L
+          var i = 0
+          while (i < k) { wsum += cents(i) << i; i += 1 }
+          val ewma = wsum.toDouble / ((math.pow(2.0, k) - 1.0) * 100.0)
+          (Ring(cents), Some(Smoothed(e.event_id, uid, e.value, round6(ewma))))
+        }
+    }
   }
 }

@@ -16,9 +16,8 @@ import graft.operators.MultimodalOps
   * cross-batch state exists (a batch's hashes are self-contained), so
   * batch boundaries cannot change any verdict.
   *
-  * foreachBatch is at-least-once; writes are idempotent by keying each
-  * batch's output directory on the batchId and OVERWRITING it (the
-  * StreamingDedup/ConsumerPipeline sink contract).
+  * Verdicts go through the [[MicroBatch.startSink]] per-batch sink, so
+  * an at-least-once replay rewrites its own batch directory.
   */
 object StreamingImageDedup {
 
@@ -28,14 +27,7 @@ object StreamingImageDedup {
     * micro-batch. */
   def start(newImages: DataFrame, index: DataFrame,
       checkpointDir: String, outPath: String): StreamingQuery =
-    newImages.writeStream
-      .queryName("graft-streaming-image-dedup")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try MultimodalOps.phashVerdicts(b, index)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally graft.api.Caches.dropTransient(b)
-      }
-      .start()
+    MicroBatch.startSink(newImages, "graft-streaming-image-dedup", checkpointDir) { b =>
+      Seq(outPath -> MultimodalOps.phashVerdicts(b, index))
+    }
 }

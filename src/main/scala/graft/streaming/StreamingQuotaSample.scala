@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,11 +19,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * not data volume), per-batch work is one rank window over
   * (state + batch-survivors)-sized frames.
   *
-  * Determinism and state layout follow [[StreamingBottomK]]: fixed
-  * hash-uniform draw per id (replays re-derive it), versioned snapshots
-  * `statePath/v=<batchId>` with below-own-id replay idempotence,
-  * versions two behind pruned. StreamingSpec proves bit-parity with a
-  * batch recomputation over the union of all arrival waves. */
+  * Determinism and state follow [[StreamingBottomK]]: fixed
+  * hash-uniform draw per id (replays re-derive it), snapshots in the
+  * [[MicroBatch]] snapshot store. StreamingSpec proves bit-parity with
+  * a batch recomputation over the union of all arrival waves. */
 object StreamingQuotaSample {
 
   /** Records kept per group (matches the batch sampler's contract). */
@@ -43,40 +41,15 @@ object StreamingQuotaSample {
       .filter(col("rn") <= PerGroup).drop("rn")
   }
 
-  private def versions(spark: SparkSession, statePath: String): Seq[Long] = {
-    val p = new Path(statePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.drop(2).toLong }
-  }
-
   /** The newest committed per-group sample (for readers). */
-  def state(spark: SparkSession, statePath: String): DataFrame = {
-    val vs = versions(spark, statePath)
-    require(vs.nonEmpty, s"no sample snapshot under $statePath")
-    spark.read.parquet(s"$statePath/v=${vs.max}")
-  }
+  def state(spark: SparkSession, statePath: String): DataFrame =
+    MicroBatch.snapshot(spark, statePath)
 
   def start(records: DataFrame, statePath: String,
       checkpointDir: String): StreamingQuery =
-    records.writeStream
-      .queryName("graft-streaming-quota-sample")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prevIds = versions(spark, statePath).filter(_ < batchId)
+    MicroBatch.startSnapshots(records, "graft-streaming-quota-sample", statePath, checkpointDir) {
+      (batch, prev) =>
         val fresh = topPerGroup(hashed(batch))
-        val merged = prevIds.sorted.lastOption match {
-          case Some(v) => topPerGroup(
-            spark.read.parquet(s"$statePath/v=$v").unionByName(fresh))
-          case None => fresh
-        }
-        merged.write.mode("overwrite").parquet(s"$statePath/v=$batchId")
-        val fs = new Path(statePath)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        prevIds.filter(_ < batchId - 1)
-          .foreach(v => fs.delete(new Path(s"$statePath/v=$v"), true))
-      }
-      .start()
+        prev.fold(fresh)(p => topPerGroup(p.unionByName(fresh)))
+    }
 }

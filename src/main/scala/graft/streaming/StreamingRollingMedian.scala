@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.math.BigDecimal.RoundingMode
-
 import org.apache.spark.sql.Dataset
 
 import graft.operators.AnalyticOps
@@ -26,43 +24,26 @@ import graft.streaming.ConsumerPipeline.RawEvent
   * batch window; StreamingSpec asserts that equality across a two-wave
   * split. Non-finite values flag through as their own median and do
   * not poison the ring (the StreamingEwma policy). */
-object StreamingRollingMedian {
+object StreamingRollingMedian extends CatalystRounding {
 
   case class Medianed(event_id: Long, user_id: Long, value: Double,
       rolling_median: Double)
 
-  private def round6(v: Double): Double =
-    BigDecimal(v).setScale(6, RoundingMode.HALF_UP).toDouble
-
-  private def toCents(v: Double): Long =
-    BigDecimal(v).setScale(0, RoundingMode.HALF_UP).toLong
-
   def smooth(events: Dataset[RawEvent],
       window: Int = AnalyticOps.RollMedianW): Dataset[Medianed] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[RawEvent],
-         state: org.apache.spark.sql.streaming.GroupState[StreamingEwma.Ring]) =>
-          val sorted = it.toVector
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var ring = state.getOption.map(_.cents).getOrElse(Vector.empty)
-          val out = Vector.newBuilder[Medianed]
-          for (e <- sorted) {
-            if (e.value.isNaN || e.value.isInfinite) {
-              out += Medianed(e.event_id, uid, e.value, e.value)
-            } else {
-              ring = (ring :+ toCents(e.value * 100.0)).takeRight(window)
-              val win = ring.sorted
-              val k = win.length
-              val med = (win((k - 1) / 2) + win(k / 2)).toDouble / 200.0
-              out += Medianed(e.event_id, uid, e.value, round6(med))
-            }
-          }
-          state.update(StreamingEwma.Ring(ring))
-          out.result().iterator
-      }
+    MicroBatch.foldInEventOrder(events, (e: RawEvent) => e.user_id,
+        StreamingEwma.Ring(Vector.empty)) {
+      (uid: Long, ring: StreamingEwma.Ring, e: RawEvent) =>
+        if (e.value.isNaN || e.value.isInfinite)
+          (ring, Some(Medianed(e.event_id, uid, e.value, e.value)))
+        else {
+          val cents = (ring.cents :+ toCents(e.value * 100.0)).takeRight(window)
+          val win = cents.sorted
+          val k = win.length
+          val med = (win((k - 1) / 2) + win(k / 2)).toDouble / 200.0
+          (StreamingEwma.Ring(cents), Some(Medianed(e.event_id, uid, e.value, round6(med))))
+        }
+    }
   }
 }

@@ -18,9 +18,9 @@ import graft.operators.TextOps
   * membership in the offline index, so there is NO cross-batch state
   * and batch boundaries cannot change a single span (StreamingSpec
   * proves the union of streamed spans equals the driver-computed
-  * reference per arriving doc). foreachBatch is at-least-once; writes
-  * are idempotent by keying each batch's output directory on the
-  * batchId and overwriting (the family's sink contract). At 100 TB the
+  * reference per arriving doc). Spans go through the
+  * [[MicroBatch.startSink]] per-batch sink, so an at-least-once replay
+  * rewrites its own batch directory. At 100 TB the
   * exact gram index becomes a bloom filter (the decontaminate_bloom
   * move) — the probe plan is unchanged.
   */
@@ -31,14 +31,7 @@ object StreamingSubstringDedup {
     * be persisted by the caller — it is consumed once per micro-batch. */
   def start(newDocs: DataFrame, gramIdx: DataFrame,
       checkpointDir: String, outPath: String): StreamingQuery =
-    newDocs.writeStream
-      .queryName("graft-streaming-substring-dedup")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try TextOps.substrSpansAgainst(b, gramIdx)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally graft.api.Caches.dropTransient(b)
-      }
-      .start()
+    MicroBatch.startSink(newDocs, "graft-streaming-substring-dedup", checkpointDir) { b =>
+      Seq(outPath -> TextOps.substrSpansAgainst(b, gramIdx))
+    }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -21,11 +20,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Determinism: each record's key exp(ln(u)/w) uses the fixed
   * hash-uniform u of its id (the batch sampler's idiom), so replays
   * re-derive identical keys — a true RNG reservoir cannot replay.
-  * State layout mirrors [[StreamingBottomK]]/[[StreamingCdc]]:
-  * versioned k-row snapshots `statePath/v=<batchId>`, each batch
-  * reading the newest version below its own id and overwriting its own
-  * — at-least-once replays recompute from the same predecessor,
-  * idempotent by construction; versions two behind are pruned.
+  * State is a k-row snapshot in the [[MicroBatch]] snapshot store:
+  * at-least-once replays recompute from the same predecessor,
+  * idempotent by construction.
   */
 object StreamingWeightedSample {
 
@@ -44,41 +41,16 @@ object StreamingWeightedSample {
   private def topK(df: DataFrame): DataFrame =
     df.orderBy(col("wkey").desc, col("event_id")).limit(K)
 
-  private def versions(spark: SparkSession, statePath: String): Seq[Long] = {
-    val p = new Path(statePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.drop(2).toLong }
-  }
-
   /** The newest committed k-row weighted sample (for readers). */
-  def state(spark: SparkSession, statePath: String): DataFrame = {
-    val vs = versions(spark, statePath)
-    require(vs.nonEmpty, s"no sample snapshot under $statePath")
-    spark.read.parquet(s"$statePath/v=${vs.max}")
-  }
+  def state(spark: SparkSession, statePath: String): DataFrame =
+    MicroBatch.snapshot(spark, statePath)
 
   /** `events` must carry `event_id` and a positive weight column `w`. */
   def start(events: DataFrame, statePath: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .queryName("graft-streaming-weighted-sample")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prevIds = versions(spark, statePath).filter(_ < batchId)
+    MicroBatch.startSnapshots(events, "graft-streaming-weighted-sample", statePath, checkpointDir) {
+      (batch, prev) =>
         val fresh = topK(keyed(batch))
-        val merged = prevIds.sorted.lastOption match {
-          case Some(v) => topK(
-            spark.read.parquet(s"$statePath/v=$v").unionByName(fresh))
-          case None => fresh
-        }
-        merged.write.mode("overwrite").parquet(s"$statePath/v=$batchId")
-        val fs = new Path(statePath)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        prevIds.filter(_ < batchId - 1)
-          .foreach(v => fs.delete(new Path(s"$statePath/v=$v"), true))
-      }
-      .start()
+        prev.fold(fresh)(p => topK(p.unionByName(fresh)))
+    }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.math.BigDecimal.RoundingMode
-
 import org.apache.spark.sql.Dataset
 
 import graft.streaming.ConsumerPipeline.RawEvent
@@ -34,14 +32,10 @@ import graft.streaming.ConsumerPipeline.RawEvent
   * foreign feed) skip the BigDecimal replay, which would throw on them,
   * and emerge as themselves: NaN compares false to both cuts so the
   * min/max clip already passes it through, and ±∞ clips to the cut. */
-object StreamingWinsorize {
+object StreamingWinsorize extends CatalystRounding {
 
   case class Winsorized(event_id: Long, event_type: String, value: Double,
       value_winsorized: Double)
-
-  private[graft] def round6(v: Double): Double =
-    if (v.isNaN || v.isInfinite) v
-    else BigDecimal(v).setScale(6, RoundingMode.HALF_UP).toDouble
 
   def apply(events: Dataset[RawEvent],
       cuts: Map[String, (Double, Double)]): Dataset[Winsorized] = {

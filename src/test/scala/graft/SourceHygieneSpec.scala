@@ -66,6 +66,26 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(documented == knobs, "USAGE.md knob names differ from the allowlist")
   }
 
+  /** Source text without `/* */` and `//` comments. */
+  private def code(file: Path): String =
+    new String(Files.readAllBytes(file), "UTF-8")
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+
+  test("streaming operators use the shared micro-batch layout and rounding, no private copies") {
+    val streaming = scalaFiles("src/main/scala/graft/streaming")
+    // the snapshot (`v=<id>`) and per-batch sink (`batch=<id>`) layouts
+    val layout = "[/\"](v|batch)=".r
+    val layoutOwners = streaming.filter(f => layout.findFirstIn(code(f)).nonEmpty)
+      .map(_.getFileName.toString)
+    assert(layoutOwners == Seq("MicroBatch.scala"),
+      s"batch-keyed layout literals outside MicroBatch: $layoutOwners")
+    for (name <- Seq("round6", "toCents")) {
+      val defs = scalaFiles("src/main")
+        .flatMap(f => s"def $name\\b".r.findAllIn(code(f)).map(_ => f))
+      assert(defs.size == 1, s"def $name is defined ${defs.size} times: ${defs.mkString(", ")}")
+    }
+  }
+
   test("lint detects a planted NUL (self-check)") {
     // The lint predicate itself, applied to a buffer with a raw NUL —
     // guards against the check rotting into an always-green walk.

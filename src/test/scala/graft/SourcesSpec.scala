@@ -302,4 +302,26 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
       assert(lengths == before, s"a rejected batch wrote bytes: $rec")
     }
   }
+
+  test("topic log: a partition count below the log's partitions fails naming the file") {
+    val dir = tempDir("undercount")
+    // keys k0..k19 land in all four partitions of the default count
+    GraftTopicLog.append(dir, "t", (0 until 20).map(i => (s"k$i", i.toLong, "{}")))
+    assert((0 until 4).forall(GraftTopicLog.partitionFile(dir, "t", _).exists()))
+    def load(count: Option[Int]) = {
+      val r = spark.readStream.format(classOf[GraftTopicProvider].getName)
+        .option("path", dir).option("topic", "t")
+      count.fold(r)(c => r.option("partition.count", c.toLong)).load()
+    }
+    val byOption = intercept[IllegalArgumentException](load(Some(2)))
+    assert(byOption.getMessage.contains(GraftTopicLog.partitionFile(dir, "t", 2).toString),
+      byOption.getMessage)
+    spark.conf.set("spark.graft.partition.count", "2")
+    val byConf =
+      try intercept[IllegalArgumentException](load(None))
+      finally spark.conf.unset("spark.graft.partition.count")
+    assert(byConf.getMessage.contains("p2.log"), byConf.getMessage)
+    // the writer's own count, and any larger one, still load
+    assert(load(Some(4)).isStreaming && load(Some(8)).isStreaming && load(None).isStreaming)
+  }
 }
