@@ -84,9 +84,12 @@ object ConsumerPipeline {
 
   /** Effectively-once upgrade: drop duplicate uuids within the watermark
     * (the reference is at-least-once and leaves idempotence to the user —
-    * SURVEY.md §2.2 "Stateful ops"). */
+    * SURVEY.md §2.2 "Stateful ops"). A uuid's state is evicted once the
+    * watermark passes its `created_at` + `watermark`, so state is
+    * O(rate × watermark); `dropDuplicates("uuid")` would keep every uuid
+    * forever, since Spark evicts only keys that hold the event time. */
   def dedupByUuid(enriched: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    enriched.withWatermark("created_at", watermark).dropDuplicates("uuid")
+    enriched.withWatermark("created_at", watermark).dropDuplicatesWithinWatermark("uuid")
 
   /** Consume with DLQ: every micro-batch is union-split to the ok sink
     * and the quarantine sink through the [[MicroBatch.startSink]]

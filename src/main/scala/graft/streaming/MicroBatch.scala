@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.io.NioLocalFs
 import graft.streaming.ConsumerPipeline.RawEvent
 
 /** The effectively-once policy every streaming operator shares, in one
@@ -25,17 +26,29 @@ import graft.streaming.ConsumerPipeline.RawEvent
   *    one persist of the batch.
   *  - [[foldInEventOrder]]: a per-key fold over the state store, each
   *    micro-batch's events of a key taken in (ts, nanos, event_id) order.
+  *
+  * Every query starts in [[foreachBatch]] and every per-batch file goes
+  * out through [[write]], so both route their `file:` I/O through
+  * [[graft.io.NioLocalFs]]: checkpoint logs, state store and outputs
+  * without a `chmod`/`readlink` fork per file.
   */
 object MicroBatch {
 
   /** Run `body(batch, batchId)` on every micro-batch of `input`. */
   def foreachBatch(input: DataFrame, queryName: String, checkpointDir: String)(
-      body: (DataFrame, Long) => Unit): StreamingQuery =
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    NioLocalFs.install(input.sparkSession)
     input.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(body)
       .start()
+  }
+
+  /** Overwrite `path` with `df` as parquet: the one file write of the
+    * streaming operators. */
+  def write(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").options(NioLocalFs.writerOptions(df.sparkSession)).parquet(path)
 
   /** Where batch `batchId`'s output under `path` lives. */
   def batchDir(path: String, batchId: Long): String = s"$path/batch=$batchId"
@@ -49,7 +62,7 @@ object MicroBatch {
     foreachBatch(input, queryName, checkpointDir) { (batch, batchId) =>
       val b = batch.persist()
       try outputs(b).foreach { case (path, out) =>
-        out.write.mode("overwrite").parquet(batchDir(path, batchId))
+        write(out, batchDir(path, batchId))
       }
       finally graft.api.Caches.dropTransient(b)
     }
@@ -80,16 +93,23 @@ object MicroBatch {
 
   /** Fold every micro-batch into the snapshot store under `statePath`:
     * `next(batch, prev)` builds version `v=<batchId>` from the batch and
-    * the newest committed version below it (None for the first batch). */
+    * the newest committed version below it (None for the first batch).
+    * A committed version above `batchId` can only be another run's (a
+    * fresh checkpoint on a used `statePath`), which readers would serve
+    * as this run's state, so the batch fails instead. */
   def startSnapshots(input: DataFrame, queryName: String, statePath: String,
       checkpointDir: String)(
       next: (DataFrame, Option[DataFrame]) => DataFrame): StreamingQuery =
     foreachBatch(input, queryName, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       val fs = fileSystem(spark, statePath)
-      val prev = committed(fs, statePath).filter(_ < batchId).maxOption
+      val vs = committed(fs, statePath)
+      if (vs.exists(_ > batchId)) throw new IllegalStateException(
+        s"$statePath holds snapshot v=${vs.max} of another run, above batch $batchId; " +
+          "use a fresh statePath or the checkpoint that wrote it")
+      val prev = vs.filter(_ < batchId).maxOption
         .map(v => spark.read.parquet(s"$statePath/v=$v"))
-      next(batch, prev).write.mode("overwrite").parquet(s"$statePath/v=$batchId")
+      write(next(batch, prev), s"$statePath/v=$batchId")
       // a replay of batch N only ever needs version N-1
       versionDirs(fs, statePath).foreach { case (v, d) =>
         if (v < batchId - 1) fs.delete(d, true)

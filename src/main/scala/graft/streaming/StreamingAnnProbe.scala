@@ -37,7 +37,7 @@ object StreamingAnnProbe {
         val probes = batch.select("vec_id", "v").collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
         if (probes.nonEmpty)
-          GraphAnn.searchRouted(index, seeds, probes, k, p, probeShards)
-            .write.mode("overwrite").parquet(MicroBatch.batchDir(outPath, batchId))
+          MicroBatch.write(GraphAnn.searchRouted(index, seeds, probes, k, p, probeShards),
+            MicroBatch.batchDir(outPath, batchId))
     }
 }

@@ -76,6 +76,34 @@ class MicroBatchSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("a fresh checkpoint on a used statePath fails instead of serving the old run's snapshot") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val evs = graft.model.Tables.events(spark, sf)
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .as[RawEvent].collect().toSeq
+    val statePath = tempDir("store_reused")
+    val stream = MemoryStream[RawEvent]
+    val q = StreamingBottomK.start(stream.toDF(), statePath, tempDir("store_ckpt_old"))
+    try evs.take(3).foreach { e => stream.addData(e); q.processAllAvailable() }
+    finally q.stop()
+    assert(versionDirs(statePath) == Set("v=1", "v=2"))
+    val oldRows = rows(StreamingBottomK.state(spark, statePath))
+
+    val fresh = MemoryStream[RawEvent]
+    val again = StreamingBottomK.start(fresh.toDF(), statePath, tempDir("store_ckpt_new"))
+    val err = try {
+      fresh.addData(evs.drop(3).take(2): _*)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](again.processAllAvailable())
+    } finally again.stop()
+    val cause = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case e: IllegalStateException => e }
+    assert(cause.exists(_.getMessage.contains(statePath)), err)
+    // nothing of the new run was committed over the old snapshots
+    assert(versionDirs(statePath) == Set("v=1", "v=2"))
+    assert(rows(StreamingBottomK.state(spark, statePath)) == oldRows)
+  }
+
   test("snapshot readers return the newest committed version, not a write in flight") {
     import spark.implicits._
     for ((name, _, state) <- stores) {

@@ -86,6 +86,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
   }
 
+  test("streaming operators write files only through MicroBatch") {
+    // MicroBatch.write is the writer that carries the fork-free local
+    // filesystem; a DataFrame `.write` elsewhere would bypass it
+    val writers = scalaFiles("src/main/scala/graft/streaming")
+      .filter(f => "(?<!MicroBatch)\\.write\\b".r.findFirstIn(code(f)).nonEmpty)
+      .map(_.getFileName.toString)
+    assert(writers == Seq("MicroBatch.scala"), s"streaming files with .write: $writers")
+  }
+
   test("lint detects a planted NUL (self-check)") {
     // The lint predicate itself, applied to a buffer with a raw NUL —
     // guards against the check rotting into an always-green walk.

@@ -135,6 +135,38 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     assert(out.select("uuid").distinct().count() == 5)
   }
 
+  test("uuid dedup state stays bounded over hours of events; a duplicate within the watermark is dropped") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val hourly = (0 until 6).map { h =>
+      (1 to 5).map { i =>
+        val id = 10L * h + i
+        RawEvent(id, Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z")
+          .plusSeconds(3600L * h + 60L * i)), id % 4, "click", 1.0, "{}")
+      }
+    }
+    val stream = MemoryStream[RawEvent]
+    val deduped = ConsumerPipeline.dedupByUuid(ConsumerPipeline.enrich(stream.toDF()))
+    val q = deduped.writeStream.format("memory").queryName("dedup_bounded")
+      .option("checkpointLocation", tempDir("ckpt"))
+      .outputMode("append").start()
+    val stateRows = try {
+      val rows = hourly.map { wave =>
+        stream.addData(wave: _*)
+        q.processAllAvailable()
+        q.lastProgress.stateOperators.head.numRowsTotal
+      }
+      stream.addData(hourly.last.head) // redelivered 4 minutes after its first copy
+      q.processAllAvailable()
+      rows
+    } finally q.stop()
+    // each hour's uuids are evicted once the watermark passes them + 10 min
+    assert(stateRows.forall(_ <= 5), s"state rows per hour: $stateRows")
+    val out = spark.table("dedup_bounded")
+    assert(out.count() == 30)
+    assert(out.select("uuid").distinct().count() == 30)
+  }
+
   test("tumbling window counts match the batch rendition") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
