@@ -6,33 +6,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // JVM-wide Janino cache defaults to 100 generated classes; ~90
-      // queries × several codegen stages each evict every entry before a
-      // warmed query runs again, so mid-run queries pay full recompilation
-      // (~5.5 s of the old 8.8 s ngram_jaccard was codegen, not data).
-      // Static conf — must be set before the first session is created.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = LocalSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // Optional runtime-conf overrides for A/B experiments
-    // (SPARK_GRAFT_CONF="spark.graft.fanout.minRows=1,k2=v2"). The
-    // driver never sets it, so official artifacts always run defaults;
-    // locally it prices a conf-gated path against the default plan
-    // on identical data.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
-      .filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not key=value " +
-              "(note: the splitter is comma-based, so values may not contain commas)")
-        }
-      })
     // Untimed warm-up: the first queries otherwise pay one-time JVM costs
     // (classloading, Janino codegen compilation, parquet reader, shuffle
     // and broadcast machinery) that no steady-state deployment would

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: print the executed plan of one or more declared
   * queries — the tool behind PLANS.md (which curates these dumps) and
   * the quickest way to check a scale property (pushdown, broadcast,
@@ -19,12 +17,7 @@ object Explain {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("4")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

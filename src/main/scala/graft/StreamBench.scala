@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.api.Caches
 import graft.model.Tables
 import graft.operators.TextOps
 import graft.streaming.ConsumerPipeline.RawEvent
@@ -30,13 +30,7 @@ object StreamBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "20").toInt
     val fpt = sys.env.getOrElse("SPARK_GRAFT_STREAM_FPT", "2")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = LocalSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val stage = Files.createTempDirectory("graft_streambench").toString
@@ -67,8 +61,7 @@ object StreamBench {
     // ---- streaming dedup: new docs vs the corpus signature index ------
     stream("dedup") {
       val corpus = Tables.documents(spark, sfDir).filter(col("doc_id") % 10 =!= 9)
-      val bands = TextOps.signatureIndex(corpus).persist()
-      bands.count()
+      val bands = Caches.materialize(TextOps.signatureIndex(corpus))
       val newDocs = Tables.documents(spark, sfDir)
         .filter(col("doc_id") % 10 === 9).select("doc_id", "text")
       newDocs.repartition(nFiles).write.mode("overwrite").parquet(s"$stage/dedup_in")
@@ -79,8 +72,8 @@ object StreamBench {
       val outRows = spark.read.parquet(s"$stage/dedup_out").count()
       require(outRows == n, s"dedup verdicts $outRows != streamed $n")
       report("dedup", n, sec)
-      api.Caches.dropTransient(bands, blocking = true)
-      api.Caches.release(spark)
+      Caches.dropTransient(bands, blocking = true)
+      Caches.release(spark)
     }
 
     // ---- streaming cdc: events fold into a latest-wins snapshot -------
@@ -95,7 +88,7 @@ object StreamBench {
       val state = StreamingCdc.state(spark, s"$stage/cdc_state")
       report("cdc", n, sec,
         s""","state_rows":${state.count()},"state_bytes":${dirBytes(s"$stage/cdc_state")}""")
-      api.Caches.release(spark)
+      Caches.release(spark)
     }
 
     // ---- streaming bottom-k: exact uniform sample over the stream -----
@@ -110,7 +103,7 @@ object StreamBench {
       val state = StreamingBottomK.state(spark, s"$stage/btk_state")
       report("bottomk", n, sec,
         s""","state_rows":${state.count()},"state_bytes":${dirBytes(s"$stage/btk_state")}""")
-      api.Caches.release(spark)
+      Caches.release(spark)
     }
 
     // ---- streaming weighted sample: exact A-Res over the stream -------
@@ -126,7 +119,7 @@ object StreamBench {
       val state = graft.streaming.StreamingWeightedSample.state(spark, s"$stage/wks_state")
       report("weighted_sample", n, sec,
         s""","state_rows":${state.count()},"state_bytes":${dirBytes(s"$stage/wks_state")}""")
-      api.Caches.release(spark)
+      Caches.release(spark)
     }
 
     // ---- streaming quota sample: exact per-group budgets --------------
@@ -142,7 +135,7 @@ object StreamBench {
       val state = graft.streaming.StreamingQuotaSample.state(spark, s"$stage/qta_state")
       report("quota_sample", n, sec,
         s""","state_rows":${state.count()},"state_bytes":${dirBytes(s"$stage/qta_state")}""")
-      api.Caches.release(spark)
+      Caches.release(spark)
     }
 
     // ---- streaming anomaly: trailing z-score rings per event_type -----
@@ -256,8 +249,7 @@ object StreamBench {
     }
     // ---- streaming decontamination: train docs vs the eval index ------
     stream("decontaminate") {
-      val evalIdx = TextOps.evalShingleIndex(spark, sfDir).persist()
-      evalIdx.count()
+      val evalIdx = Caches.materialize(TextOps.evalShingleIndex(spark, sfDir))
       val train = TextOps.trainSplitDocs(spark, sfDir)
       train.repartition(nFiles).write.mode("overwrite").parquet(s"$stage/decon_in")
       val n = spark.read.parquet(s"$stage/decon_in").count()
@@ -267,8 +259,8 @@ object StreamBench {
       val sec = timed { try q.processAllAvailable() finally q.stop() }
       val incidents = spark.read.parquet(s"$stage/decon_out").count()
       report("decontaminate", n, sec, s""","incidents":$incidents""")
-      api.Caches.dropTransient(evalIdx, blocking = true)
-      api.Caches.release(spark)
+      Caches.dropTransient(evalIdx, blocking = true)
+      Caches.release(spark)
     }
 
     // ---- streaming image dedup: payloads vs the phash index -----------
@@ -280,8 +272,7 @@ object StreamBench {
         val (w, h) = mkDims(id)
         MultimodalOps.ImageBytes(id, MultimodalOps.synthPngPixels(w, h))
       })
-      val index = MultimodalOps.phashIndex(corpus).persist()
-      index.count()
+      val index = Caches.materialize(MultimodalOps.phashIndex(corpus))
       val newImgs = ids.filter(_ % 10 == 9).mapPartitions(_.map { id =>
         val (w, h) = mkDims(id)
         MultimodalOps.ImageBytes(id, MultimodalOps.synthPngPixels(w, h))
@@ -297,8 +288,8 @@ object StreamBench {
       val dups = out.filter(!col("kept")).count()
       report("image_dedup", n, sec,
         s""","dups":$dups,"index_classes":${index.count()}""")
-      api.Caches.dropTransient(index, blocking = true)
-      api.Caches.release(spark)
+      Caches.dropTransient(index, blocking = true)
+      Caches.release(spark)
     }
 
     // ---- streaming top-k: Misra-Gries heavy hitters, bounded state ----

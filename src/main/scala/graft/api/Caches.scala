@@ -24,12 +24,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   *  1. **Scoped release (round 9, the library-correct path)**: every
   *     `SparkEntry.queries` entry builds inside [[scoped]], each internal
-  *     `.persist()` registers with the enclosing scope via [[tracked]],
-  *     and a [[QueryExecutionListener]] releases the scope's caches as
-  *     soon as ANY action over the scope's result plan completes — so a
+  *     [[persist]] registers with the enclosing scope, and a
+  *     [[QueryExecutionListener]] releases the scope's caches as soon as
+  *     ANY action over the scope's result plan completes — so a
   *     long-lived session calling query functions as a library never
   *     accumulates blocks, with no harness cooperation required.
-  *     Internal materializing actions (`cache.count()` during the build)
+  *     Internal materializing actions ([[materialize]] during the build)
   *     cannot release anything because the scope's result plan is only
   *     recorded after the builder returns.
   *  2. **Global sweep ([[release]])**: the bench/verify harnesses still
@@ -37,6 +37,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     (unit tests call operator functions without the SparkEntry
   *     wrapper) and for the timing-isolation GC discipline the bench
   *     needs anyway.
+  *
+  * Operators and streaming sinks never call `persist`, `cache` or
+  * `unpersist` themselves: [[persist]], [[materialize]] and
+  * [[dropTransient]] are the library's only cache calls, so how an
+  * intermediate is cached, filled and dropped is decided here, once.
   *
   * == Why one sweeper thread owns every unpersist (round 11) ==
   *
@@ -161,15 +166,25 @@ object Caches {
     java.util.Collections.newSetFromMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
-  /** Register a just-persisted intermediate with the enclosing [[scoped]]
-    * build (no-op outside one — direct operator calls keep the old
-    * harness-swept behavior). Shaped for `df.persist().transform(tracked)`. */
-  def tracked(df: DataFrame): DataFrame = {
+  /** Persist `df` and register it with the enclosing [[scoped]] build
+    * (no registration outside one — direct operator calls keep the old
+    * harness-swept behavior). Lazy: the first action over `df` fills the
+    * cache, for builders whose next action reads `df` anyway. Use as
+    * `Caches.persist(df)` or `df.transform(Caches.persist)`. */
+  def persist(df: DataFrame): DataFrame = {
+    df.persist()
     building.get().headOption.foreach(_.cached += df)
     df
   }
 
-  /** Run `build`, collecting every [[tracked]] persist into a scope that
+  /** [[persist]] `df` and fill the cache now with one `count()` job, so
+    * every later consumer reads blocks, not the lineage. */
+  def materialize(df: DataFrame): DataFrame = {
+    persist(df).count()
+    df
+  }
+
+  /** Run `build`, collecting every [[persist]] into a scope that
     * auto-releases when an action over the returned plan completes.
     *
     * CONTRACT — one terminal action: the scope releases as soon as the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.api.Caches
 import graft.model.Tables
 
 /** Second wave of capability-parity analytics: reshaping (pivot/unpivot),
@@ -1304,8 +1305,7 @@ object AnalyticOps {
     * end). */
   def theilSenTrend(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = dailyCounts(spark, sfDir)
-      .persist().transform(graft.api.Caches.tracked)
-    daily.count()
+      .transform(Caches.materialize)
     val slopes = daily.as("a")
       .join(broadcast(daily.as("b")), col("b.d") > col("a.d"))
       .select(((col("b.cnt") - col("a.cnt")).cast("double") /
@@ -1402,8 +1402,7 @@ object AnalyticOps {
     * bounded after one map-combined aggregate of the log. */
   def seasonalNaiveError(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = dailyCounts(spark, sfDir)
-      .persist().transform(graft.api.Caches.tracked)
-    daily.count()
+      .transform(Caches.materialize)
     def maeLeg(lag: Int) = daily.as("a")
       .join(daily.as("b"), col("a.d") - lit(lag.toLong) === col("b.d"))
       .select(abs(col("a.cnt") - col("b.cnt")).as("e"))
@@ -1472,8 +1471,7 @@ object AnalyticOps {
   def seasonalDecompose(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = dailyCounts(spark, sfDir)
       .withColumn("dow", pmod(col("d") + 3, lit(7L)))
-      .persist().transform(graft.api.Caches.tracked)
-    daily.count()
+      .transform(Caches.materialize)
     val mom = daily.groupBy(col("dow"))
       .agg(count(lit(1)).as("n"), sum(col("cnt")).as("sd"))
     daily.join(broadcast(mom), Seq("dow"))
@@ -1546,8 +1544,7 @@ object AnalyticOps {
       .filter(col("from_type").isNotNull)
       .groupBy(col("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("c"))
-      .persist().transform(graft.api.Caches.tracked)
-    cuv.count()
+      .transform(Caches.materialize)
     val cu = cuv.groupBy(col("from_type")).agg(sum(col("c")).as("cu"))
     val nb = cuv.agg(sum(col("c")).as("nb"))
     cuv.join(cu, Seq("from_type"))

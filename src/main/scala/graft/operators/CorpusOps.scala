@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.api.Caches
 import graft.model.Tables
 
 /** Corpus-statistics and mixture operators a large-scale training-data
@@ -258,8 +259,7 @@ object CorpusOps {
     * `expr` unparsable or silently wrong (round-13 ADVICE). */
   private[graft] def bpeChainOf(v0in: DataFrame, rounds: Int = BpeTrainMerges)
       : (Seq[(Int, String, String, Long)], Seq[DataFrame]) = {
-    val v0 = v0in.persist().transform(graft.api.Caches.tracked)
-    v0.count()
+    val v0 = Caches.materialize(v0in)
     var vocab: DataFrame = v0
     val frames = scala.collection.mutable.ArrayBuffer[DataFrame](v0)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
@@ -410,8 +410,7 @@ object CorpusOps {
     // (measured a wash at these SFs, where reuse does kick in).
     // Released by the Caches scope like its siblings.
     val cuv = bg.groupBy(col("u"), col("v")).agg(count(lit(1)).as("c"))
-      .persist().transform(graft.api.Caches.tracked)
-    cuv.count()
+      .transform(Caches.materialize)
     val cu = cuv.groupBy(col("u")).agg(sum(col("c")).as("cu"))
     val nb = cuv.agg(sum(col("c")).as("nb"))
     cuv.join(cu, Seq("u"))
@@ -453,8 +452,7 @@ object CorpusOps {
         "transform(sequence(1, size(tokens) - 1), i -> struct(tokens[i-1] AS u, tokens[i] AS v))")).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
     val cuv = bg.groupBy(col("u"), col("v")).agg(count(lit(1)).as("c"))
-      .persist().transform(graft.api.Caches.tracked)
-    cuv.count()
+      .transform(Caches.materialize)
     val cu = cuv.groupBy(col("u")).agg(sum(col("c")).as("cu"))
     val cv = cuv.groupBy(col("v")).agg(sum(col("c")).as("cv"))
     val nb = cuv.agg(sum(col("c")).as("nb"))
@@ -486,8 +484,7 @@ object CorpusOps {
   def langSourcePmi(spark: SparkSession, sfDir: String): DataFrame = {
     val cells = Tables.fannedDocuments(spark, sfDir)
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n"))
-      .persist().transform(graft.api.Caches.tracked)
-    cells.count()
+      .transform(Caches.materialize)
     val nl = cells.groupBy(col("lang")).agg(sum(col("n")).as("n_lang"))
     val ns = cells.groupBy(col("source")).agg(sum(col("n")).as("n_src"))
     val tot = cells.agg(sum(col("n")).as("total"))
@@ -564,7 +561,7 @@ object CorpusOps {
       .select(col("doc_id"), explode(split(col("norm"), " ")).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
-      .persist().transform(graft.api.Caches.tracked)
+      .transform(Caches.persist)
     // NO eager count (r19 job-floor audit, VERDICT r18 item 4): every
     // retrieval entry point immediately builds dfShared, whose OWN eager
     // count reads this frame exactly once and so populates both caches in
@@ -595,8 +592,7 @@ object CorpusOps {
     * base it reduces; every ranker subtree then reads the one cached
     * copy instead of re-running the token-keyed aggregate. */
   private def dfShared(tfb: DataFrame): DataFrame = {
-    val dfv = dfOf(tfb).persist().transform(graft.api.Caches.tracked)
-    dfv.count()
+    val dfv = Caches.materialize(dfOf(tfb))
     dfv
   }
 
@@ -876,8 +872,7 @@ object CorpusOps {
     val joined = b.join(broadcast(a), Seq("doc_id"), "left_outer")
       .select(col("rb"),
         coalesce(lit(Bm25TopK.toLong + 1L) - col("ra"), lit(0L)).as("g"))
-      .persist().transform(graft.api.Caches.tracked)
-    joined.count()
+      .transform(Caches.materialize)
     val dcg = joined
       .select(round(col("g").cast("double") /
         (log(col("rb").cast("double") + 1.0) / ln2), 6)
@@ -938,8 +933,7 @@ object CorpusOps {
   def langSourceMi(spark: SparkSession, sfDir: String): DataFrame = {
     val cells = Tables.fannedDocuments(spark, sfDir)
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n"))
-      .persist().transform(graft.api.Caches.tracked)
-    cells.count()
+      .transform(Caches.materialize)
     val nl = cells.groupBy(col("lang")).agg(sum(col("n")).as("nl"))
     val ns = cells.groupBy(col("source")).agg(sum(col("n")).as("ns"))
     val tot = cells.agg(sum(col("n")).as("total"), count(lit(1)).as("n_cells"))
@@ -1082,16 +1076,15 @@ object CorpusOps {
   private[graft] val CmsEps = 0.001
   def approxTopk(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val toks = TextOps.normed(spark, sfDir)
-      .select(explode(split(col("norm"), " ")).as("token"))
-    toks.persist().transform(graft.api.Caches.tracked)
+    val toks = Caches.persist(TextOps.normed(spark, sfDir)
+      .select(explode(split(col("norm"), " ")).as("token")))
     val cms = toks.stat.countMinSketch("token", eps = CmsEps,
       confidence = 0.99, seed = 42)
     val total = toks.count() // N for the CMS overestimate budget eps·N
     val top = toks.groupBy(col("token")).agg(count(lit(1)).as("true_cnt"))
       .orderBy(col("true_cnt").desc, col("token")).limit(CmsTopK)
       .as[(String, Long)].collect() // k rows — metadata-sized, like ann_recall
-    graft.api.Caches.dropTransient(toks)
+    Caches.dropTransient(toks)
     // oracle-bearing the ann_recall way (round-14 verdict): the exact
     // counts are re-stated by DuckDB, and the CMS estimate — deterministic
     // for fixed data + seed — must clear its own guarantee (never under,
@@ -1141,8 +1134,7 @@ object CorpusOps {
       .select(col("doc_id"), explode(expr(
         s"transform(sequence(1, greatest(cast(ceil(size(tokens) / $p.0) as int), 1)), " +
           s"i -> md5(array_join(slice(tokens, (i - 1) * $p + 1, $p), ' ')))")).as("ph"))
-      .persist().transform(graft.api.Caches.tracked)
-    pass.count()
+      .transform(Caches.materialize)
     val pdf = pass.groupBy(col("ph"))
       .agg(count_distinct(col("doc_id")).as("pdf"))
     pass.join(pdf, Seq("ph"))
@@ -1222,8 +1214,7 @@ object CorpusOps {
         "zip_with(slice(ts, 1, size(ts) - 1), slice(ts, 2, size(ts) - 1), " +
           "(u, v) -> struct(u, v))")).as("b"))
       .select(col("doc_id"), col("b.u").as("u"), col("b.v").as("v"))
-      .persist().transform(graft.api.Caches.tracked)
-    docBigrams.count()
+      .transform(Caches.materialize)
     val big = docBigrams.groupBy(col("u"), col("v")).agg(count(lit(1)).as("cuv"))
     val uni = docBigrams.groupBy(col("u")).agg(count(lit(1)).as("cu"))
     // c(v) and N from the SAME bigram stream (successor counts): keeps
@@ -1327,8 +1318,7 @@ object CorpusOps {
           s"i -> struct(i AS pos, array_join(slice(tokens, (i - 1) * $p + 1, $p), ' ') AS ptext))")).as("e"))
       .select(col("doc_id"), col("e.pos").as("pos"), col("e.ptext").as("ptext"),
         md5(col("e.ptext")).as("ph"))
-      .persist().transform(graft.api.Caches.tracked)
-    pass.count()
+      .transform(Caches.materialize)
     val bp = pass.groupBy(col("ph"))
       .agg(count_distinct(col("doc_id")).as("pdf"))
       .filter(col("pdf") > BoilerplateMaxDf)

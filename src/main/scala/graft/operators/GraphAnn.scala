@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.api.Caches
+
 /** Graph ANN (HNSW-family): navigable-small-world graphs built per
   * SHARD, searched with a greedy best-first beam — the graph-index
   * alternative to the IVF/PQ family, runtime-only (graph construction
@@ -308,8 +310,7 @@ object GraphAnn {
     val qu = vecs.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
       .map { case (id, v) => (id, unit(v).map(x => math.floor(x * 127 + 0.5))) }
       .toDF("vec_id", "qu")
-      .persist().transform(graft.api.Caches.tracked)
-    qu.count()
+      .transform(Caches.materialize)
     // init = routingSeeds' choice expressed in training space
     var cents: Array[(Int, Array[Double])] =
       qu.orderBy(col("vec_id")).limit(p.nShards).collect()
@@ -339,7 +340,7 @@ object GraphAnn {
         }
       }
     }
-    qu.unpersist()
+    Caches.dropTransient(qu)
     cents.map { case (i, c) => (i, unit(c)) }
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.api.Caches
+
 /** Distributed graph primitives shared by the dedup pipelines.
   *
   * A near-dup pipeline's last step is graph-shaped: candidate PAIRS from
@@ -86,13 +88,13 @@ object GraphOps {
         .as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
-      .persist().transform(graft.api.Caches.tracked)
+      .transform(Caches.persist)
     val edgeCount = edges.count()
     val localMax = graft.api.GraftConfig.getLong(pairs.sparkSession,
       "spark.graft.cc.localMaxEdges", LocalMaxEdgesDefault)
     if (edgeCount <= localMax) {
       val labels = localUnionFind(edges.collect().map(r => (r.getLong(0), r.getLong(1))))
-      graft.api.Caches.dropTransient(edges, blocking = true)
+      Caches.dropTransient(edges, blocking = true)
       val spark = pairs.sparkSession
       import spark.implicits._
       return labels.toSeq.toDF("node_id", "group_id")
@@ -107,9 +109,8 @@ object GraphOps {
     // (the distinct's (src, dst) partitioning never matches the
     // src-only key).
     val edgesP = edges.repartition(col("src"))
-      .persist().transform(graft.api.Caches.tracked)
-    edgesP.count()
-    graft.api.Caches.dropTransient(edges, blocking = true)
+      .transform(Caches.materialize)
+    Caches.dropTransient(edges, blocking = true)
     // Initial labels ARE the first propagation hop (min direct neighbor,
     // self included via the self-loops) — same one-job cost as a
     // label=self seed, one full round cheaper. Self-loops put every
@@ -144,7 +145,7 @@ object GraphOps {
     }
     // labels is a projection over a checkpointed leaf — it no longer
     // references the edge list
-    graft.api.Caches.dropTransient(edgesP, blocking = true)
+    Caches.dropTransient(edgesP, blocking = true)
     labels
   }
 
@@ -200,8 +201,7 @@ object GraphOps {
     // unlabeled endpoints represent themselves)
     val repRoots = connectedComponents(contracted, "ra", "rb")
       .select(col("node_id").as("rep"), col("group_id").as("new_root"))
-      .persist().transform(graft.api.Caches.tracked)
-    repRoots.count()
+      .transform(Caches.materialize)
     // re-point members of touched components; untouched keep labels
     val updatedOld = l
       .join(repRoots.withColumnRenamed("rep", "group_id"), Seq("group_id"), "left_outer")
@@ -276,8 +276,7 @@ object GraphOps {
     val und = li.select((col("l_partkey") * 2).as("src"),
       (col("l_suppkey") * 2 + 1).as("dst")).distinct()
     val edges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .persist().transform(graft.api.Caches.tracked)
-    edges.count()
+      .transform(Caches.materialize)
     // disjoint column names per role — outdeg/nodes/sums all descend
     // from `edges`, and df("col") references across shared lineage trip
     // DetectAmbiguousSelfJoin
@@ -298,9 +297,8 @@ object GraphOps {
       .join(outdeg, col("src") === col("deg_node"))
       .select(col("src").as("edge_src"), col("dst"), col("outdeg"))
       .repartition(col("edge_src"))
-      .persist().transform(graft.api.Caches.tracked)
-    edgesDeg.count()
-    val nodes = edges.select(col("src").as("node_id")).distinct().persist().transform(graft.api.Caches.tracked)
+      .transform(Caches.materialize)
+    val nodes = Caches.persist(edges.select(col("src").as("node_id")).distinct())
     val nA = nodes.agg(count(lit(1)).as("n"))
     var pr = nodes.crossJoin(broadcast(nA))
       .select(col("node_id"), expr("1000000000000L DIV n").as("pr"))
@@ -367,14 +365,13 @@ object GraphOps {
   private[graft] def triangleCountOf(pairsIn: DataFrame): DataFrame = {
     // one persisted pair base feeds degrees, orientation, and the edge
     // count (the file-family one-base-per-query rule)
-    val pairs = pairsIn.persist().transform(graft.api.Caches.tracked)
+    val pairs = Caches.persist(pairsIn)
     // NO eager count on pairs (r19 job-floor audit): deg's count below
     // reads pairs exactly once, so one job populates both caches; the
     // later wedge/orientation consumers then read the cache.
     val deg = pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .persist().transform(graft.api.Caches.tracked)
-    deg.count()
+      .transform(Caches.materialize)
     // orient by (deg, id): lower endpoint → higher endpoint
     val aLower = col("da") < col("db") || (col("da") === col("db") && col("doc_a") < col("doc_b"))
     val oriented = pairs
@@ -394,8 +391,7 @@ object GraphOps {
       .join(deg.select(col("node").as("nv"), col("deg").as("vdeg")), col("nv") === col("v"))
       .select(col("u"), col("v"), col("vdeg"))
       .repartition(col("u"))
-      .persist().transform(graft.api.Caches.tracked)
-    ek.count()
+      .transform(Caches.materialize)
     val legOrder = col("e1.vdeg") < col("e2.vdeg") ||
       (col("e1.vdeg") === col("e2.vdeg") && col("e1.v") < col("e2.v"))
     val tri = ek.as("e1")
@@ -450,8 +446,7 @@ object GraphOps {
     * else. */
   private[graft] def labelPropagationOf(pairsIn: DataFrame,
       nodes: DataFrame, rounds: Int = LpaRounds): DataFrame = {
-    val pairs = pairsIn.persist().transform(graft.api.Caches.tracked)
-    pairs.count()
+    val pairs = Caches.materialize(pairsIn)
     // The directed edge list is static across rounds: persist it
     // PRE-PARTITIONED on the join key `u` (r18 optimization round,
     // guide §2.4 — the pagerank/CC discipline), so each round's
@@ -460,8 +455,7 @@ object GraphOps {
     val ed = pairs.select(col("doc_a").as("v"), col("doc_b").as("u"))
       .unionByName(pairs.select(col("doc_b").as("v"), col("doc_a").as("u")))
       .repartition(col("u"))
-      .persist().transform(graft.api.Caches.tracked)
-    ed.count()
+      .transform(Caches.materialize)
     var labels = nodes.select(col("node"), col("node").as("lbl"))
     for (_ <- 1 to rounds) {
       val nb = ed.join(labels.select(col("node").as("u"), col("lbl").as("ulbl")),
@@ -514,10 +508,8 @@ object GraphOps {
     * drive it with known-core graphs and to fixpoint. */
   private[graft] def kCoreOf(pairsIn: DataFrame, k: Int = KCoreK,
       rounds: Int = KCoreRounds): DataFrame = {
-    val initial = pairsIn.select(col("doc_a"), col("doc_b"))
-      .persist().transform(graft.api.Caches.tracked)
+    val initial = Caches.materialize(pairsIn.select(col("doc_a"), col("doc_b")))
     var edges = initial
-    edges.count()
     for (_ <- 1 to rounds) {
       val keep = edges
         .select(explode(array(col("doc_a"), col("doc_b"))).as("node"))
@@ -529,12 +521,7 @@ object GraphOps {
         .join(keep.select(col("node").as("kb")),
           col("doc_b") === col("kb"), "left_semi"))
     }
-    // Each round's `truncate` is an EAGER checkpoint, so after ≥1 round
-    // `edges` no longer reads the initial cache — release it here rather
-    // than rely on Caches.tracked (a no-op when kCoreOf is called outside
-    // a Caches scope, where repeated fixpoint probes would otherwise
-    // accumulate persisted copies for the session lifetime).
-    if (rounds >= 1 && (edges ne initial)) initial.unpersist(false)
+    if (edges ne initial) Caches.dropTransient(initial)
     edges
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("core_degree"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.api.Caches
 import graft.model.Tables
 
 /** Training-data pipeline ASSEMBLY operators (north-star extensions,
@@ -285,8 +286,7 @@ object PipelineOps {
     val base = Tables.fannedDocuments(spark, sfDir)
       .select(col("source"), floor(col("n_chars") / 100L).as("len_bucket"),
         col("lang"))
-      .persist().transform(graft.api.Caches.tracked)
-    base.count()
+      .transform(Caches.materialize)
     val clsLang = base.groupBy(col("source"), col("len_bucket"), col("lang"))
       .agg(count(lit(1)).as("n_cl"))
     val cls = base.groupBy(col("source"), col("len_bucket"))
@@ -419,8 +419,7 @@ object PipelineOps {
     // pipelines, zero ReusedExchange). One token explode over the corpus,
     // not two — the file-family's one-base-per-query rule; released by
     // Caches.release like its siblings.
-    val tf = TextOps.tfUnsorted(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    tf.count()
+    val tf = Caches.materialize(TextOps.tfUnsorted(spark, sfDir))
     val df = tf.groupBy(col("dim")).agg(count(lit(1)).as("df"))
     val n = Tables.documents(spark, sfDir).agg(count(lit(1)).as("n"))
     tf.join(broadcast(df), Seq("dim"))
@@ -608,8 +607,7 @@ object PipelineOps {
       .withColumn("split",
         when(col("us") <= col("cut"), "early").otherwise("late"))
     val users = lab.select(col("split"), col("user_id")).distinct()
-      .persist().transform(graft.api.Caches.tracked)
-    users.count()
+      .transform(Caches.materialize)
     val shared = users.filter(col("split") === "early")
       .select(col("user_id"))
       .join(users.filter(col("split") === "late").select(col("user_id")),

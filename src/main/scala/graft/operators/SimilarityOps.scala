@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.functions._
 
+import graft.api.Caches
 import graft.model.Tables
 
 /** Similarity search over the `embeddings` table (north-star extension —
@@ -176,8 +177,7 @@ object SimilarityOps {
         posexplode(graft.functions.VectorFunctions.hyperplane_buckets(
           col("v"), NeardupBands, bits, 64)))
       .select(col("vec_id"), col("pos").as("band_no"), col("col").as("bh"))
-      .persist().transform(graft.api.Caches.tracked)
-    sig.count()
+      .transform(Caches.materialize)
     val cand = sig.as("a").join(sig.as("b"),
         col("a.band_no") === col("b.band_no") && col("a.bh") === col("b.bh") &&
           col("a.vec_id") < col("b.vec_id"))
@@ -186,8 +186,7 @@ object SimilarityOps {
     val unit = e
       .select(col("vec_id"), col("v"), sqrt(dot("v", "v")).as("nrm"))
       .select(col("vec_id"), expr("transform(v, x -> x / nrm)").as("u"))
-      .persist().transform(graft.api.Caches.tracked)
-    unit.count()
+      .transform(Caches.materialize)
     cand
       .join(unit.as("ua"), col("ua.vec_id") === col("vec_a"))
       .join(unit.as("ub"), col("ub.vec_id") === col("vec_b"))
@@ -313,8 +312,7 @@ object SimilarityOps {
       .select(least(col("vec_id"), col("nbr")).as("a"),
         greatest(col("vec_id"), col("nbr")).as("b"))
       .distinct()
-      .persist().transform(graft.api.Caches.tracked)
-    edges.count()
+      .transform(Caches.materialize)
     val sym = edges.select(col("a").as("x"), col("b").as("y"))
       .unionAll(edges.select(col("b").as("x"), col("a").as("y")))
     val deg = sym.groupBy(col("x")).agg(count(lit(1)).as("deg"))
@@ -371,16 +369,14 @@ object SimilarityOps {
     * (LEFT-join completion). */
   def annProbeSweep(spark: SparkSession, sfDir: String): DataFrame = {
     val nPlanes = 6
-    val e = vecs(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    e.count()
+    val e = Caches.materialize(vecs(spark, sfDir))
     val bucketCol = (0 until nPlanes).map { p =>
       val plane = array((0 until 64).map(d => lit(planeSign(p, d))): _*)
       when(graft.functions.VectorFunctions.dot_product(col("v"), plane) > 0,
         lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
     val sig = e.select(col("vec_id"), bucketCol.cast("long").as("bucket"))
-      .persist().transform(graft.api.Caches.tracked)
-    sig.count()
+      .transform(Caches.materialize)
     val masks: Seq[Long] = 0L +: ((0 until nPlanes).map(i => 1L << i) ++
       (0 until nPlanes).flatMap(i =>
         (i + 1 until nPlanes).map(j => (1L << i) | (1L << j))))
@@ -422,11 +418,9 @@ object SimilarityOps {
     * corpus; the exact side is probes × corpus — ground truth's price,
     * run on a fixed eval slice at 100 TB. */
   def ivfProbeSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = vecs(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    e.count()
+    val e = Caches.materialize(vecs(spark, sfDir))
     val q = quantCodes(spark, sfDir)
-    val cents = lloydCentroids(q).persist().transform(graft.api.Caches.tracked)
-    cents.count()
+    val cents = Caches.materialize(lloydCentroids(q))
     val assigned = assignNearest(q, cents, keepQ = false)
       .select(col("vec_id"), col("cid"))
     val pw = Window.partitionBy(col("probe")).orderBy(col("pdist").asc, col("cid"))
@@ -472,13 +466,10 @@ object SimilarityOps {
     * [[ivfpqResProbeSweep]] (r13). Exact side and determinism as the
     * siblings (L2², DECIMAL ADC sums, id ties). */
   def pqProbeSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = vecs(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    e.count()
+    val e = Caches.materialize(vecs(spark, sfDir))
     val sc = subCodes(quantCodes(spark, sfDir))
-      .persist().transform(graft.api.Caches.tracked)
-    sc.count()
-    val cents = pqCentroids(sc).persist().transform(graft.api.Caches.tracked)
-    cents.count()
+      .transform(Caches.materialize)
+    val cents = Caches.materialize(pqCentroids(sc))
     val lut = sc.filter(col("vec_id") < SweepProbes)
       .join(broadcast(cents), Seq("sub"))
       .select(col("vec_id").as("probe"), col("sub"), col("cid").as("code"),
@@ -711,8 +702,7 @@ object SimilarityOps {
       .select(col("vec_id"), posexplode(col("v")))
       .select(col("vec_id"), col("pos").as("dim"),
         expr("cast(floor(col * 1000000.0 + 0.5) as bigint)").as("q"))
-      .persist().transform(graft.api.Caches.tracked)
-    q.count()
+      .transform(Caches.materialize)
     val st = q.groupBy("dim")
       .agg(count(lit(1)).as("n"), sum(col("q").cast(dec)).cast("double").as("s1"))
     val x = col("q").cast("double") / lit(1e6) - col("s1") / col("n") / lit(1e6)
@@ -872,8 +862,7 @@ object SimilarityOps {
       .select(col("vec_id"), posexplode(col("v")))
       .select(col("vec_id"), col("pos").as("dim"),
         expr("cast(floor(col * 1000000.0 + 0.5) as bigint)").as("q"))
-      .persist().transform(graft.api.Caches.tracked)
-    q.count()
+      .transform(Caches.materialize)
     val stats = q.groupBy(col("dim"))
       .agg(count(lit(1)).as("n"),
         sum(col("q").cast(dec)).cast("double").as("s1"),
@@ -960,8 +949,7 @@ object SimilarityOps {
     val q = quantCodes(spark, sfDir)
     // K rows, consumed twice (assignment + probe-list selection);
     // recomputing would re-run the Lloyd round's corpus pass
-    val cents = lloydCentroids(q).persist().transform(graft.api.Caches.tracked)
-    cents.count()
+    val cents = Caches.materialize(lloydCentroids(q))
     val assigned = assignNearest(q, cents, keepQ = false)
       .select(col("vec_id"), col("cid"))
     val probeLists = q.filter(col("vec_id") === 0)
@@ -1044,8 +1032,7 @@ object SimilarityOps {
     val q = quantCodes(spark, sfDir)
     val assigned = assignNearest(q, lloydCentroids(q), keepQ = true)
       .select(col("vec_id"), col("cid").as("cluster"), col("q"))
-      .persist().transform(graft.api.Caches.tracked)
-    assigned.count()
+      .transform(Caches.materialize)
     val a = assigned.select(col("cluster"), col("vec_id").as("vec_a"), col("q").as("qa"))
     val b = assigned.select(col("cluster"), col("vec_id").as("vec_b"), col("q").as("qb"))
     val dropped = a.join(b, Seq("cluster"))
@@ -1132,8 +1119,7 @@ object SimilarityOps {
     * only shuffles carry 4 narrow rows per vector. */
   def productQuantize(spark: SparkSession, sfDir: String): DataFrame = {
     val sc = subCodes(quantCodes(spark, sfDir))
-      .persist().transform(graft.api.Caches.tracked)
-    sc.count()
+      .transform(Caches.materialize)
     pqAssign(sc, pqCentroids(sc))
       .orderBy("vec_id", "sub")
   }
@@ -1152,12 +1138,10 @@ object SimilarityOps {
     * sum; top-k is TakeOrderedAndProject. */
   def annPq(spark: SparkSession, sfDir: String): DataFrame = {
     val sc = subCodes(quantCodes(spark, sfDir))
-      .persist().transform(graft.api.Caches.tracked)
-    sc.count()
+      .transform(Caches.materialize)
     // 32 rows, consumed twice (code assignment + probe LUT); recomputing
     // would re-run the Lloyd round's corpus pass
-    val cents = pqCentroids(sc).persist().transform(graft.api.Caches.tracked)
-    cents.count()
+    val cents = Caches.materialize(pqCentroids(sc))
     val lut = sc.filter(col("vec_id") === 0)
       .join(broadcast(cents), Seq("sub"))
       .select(col("sub"), col("cid").as("code"),
@@ -1231,12 +1215,9 @@ object SimilarityOps {
   private[graft] def annIvfPqAt(spark: SparkSession, sfDir: String,
       probe: Int): DataFrame = {
     val q = quantCodes(spark, sfDir)
-    val sc = subCodes(q).persist().transform(graft.api.Caches.tracked)
-    sc.count()
-    val cents = lloydCentroids(q).persist().transform(graft.api.Caches.tracked)
-    cents.count()
-    val pqc = pqCentroids(sc).persist().transform(graft.api.Caches.tracked)
-    pqc.count()
+    val sc = Caches.materialize(subCodes(q))
+    val cents = Caches.materialize(lloydCentroids(q))
+    val pqc = Caches.materialize(pqCentroids(sc))
     val probeLists = q.filter(col("vec_id") === probe)
       .crossJoin(broadcast(cents))
       .select(col("cid"),
@@ -1327,17 +1308,14 @@ object SimilarityOps {
   private[graft] def annIvfPqResAt(spark: SparkSession, sfDir: String,
       probe: Int): DataFrame = {
     val q = quantCodes(spark, sfDir)
-    val cents = lloydCentroids(q).persist().transform(graft.api.Caches.tracked)
-    cents.count()
-    val rsc = resSubCodes(q, cents).persist().transform(graft.api.Caches.tracked)
-    rsc.count()
+    val cents = Caches.materialize(lloydCentroids(q))
+    val rsc = Caches.materialize(resSubCodes(q, cents))
     // residual codebooks train on the FULL corpus's residual sub-codes
     // (cid dropped — pqCentroids is list-agnostic; one codebook set
     // shared across lists, the standard IVFADC memory/quality trade)
     val rcents = pqCentroids(rsc.select(col("vec_id"), col("sub"), col("sq")))
       .withColumnRenamed("cid", "rcid")
-      .persist().transform(graft.api.Caches.tracked)
-    rcents.count()
+      .transform(Caches.materialize)
     val probeLists = q.filter(col("vec_id") === probe)
       .crossJoin(broadcast(cents))
       .select(col("cid"),
@@ -1440,17 +1418,13 @@ object SimilarityOps {
     * report via LEFT-join completion; probe 0 reproduces
     * [[ivfpqResRecall]] exactly (spec-pinned). */
   def ivfpqResProbeSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = vecs(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    e.count()
+    val e = Caches.materialize(vecs(spark, sfDir))
     val q = quantCodes(spark, sfDir)
-    val cents = lloydCentroids(q).persist().transform(graft.api.Caches.tracked)
-    cents.count()
-    val rsc = resSubCodes(q, cents).persist().transform(graft.api.Caches.tracked)
-    rsc.count()
+    val cents = Caches.materialize(lloydCentroids(q))
+    val rsc = Caches.materialize(resSubCodes(q, cents))
     val rcents = pqCentroids(rsc.select(col("vec_id"), col("sub"), col("sq")))
       .withColumnRenamed("cid", "rcid")
-      .persist().transform(graft.api.Caches.tracked)
-    rcents.count()
+      .transform(Caches.materialize)
     // per-probe 2 nearest coarse lists (rank window, the ivfProbeSweep move)
     val pw = Window.partitionBy(col("probe")).orderBy(col("pdist").asc, col("cid"))
     val probeLists = q.filter(col("vec_id") < SweepProbes)
@@ -1540,7 +1514,7 @@ object SimilarityOps {
   def ivfBuildStats(spark: SparkSession, sfDir: String): DataFrame = {
     val q = quantCodes(spark, sfDir)
     val assigned = assignNearest(q, lloydCentroids(q), keepQ = false)
-      .persist().transform(graft.api.Caches.tracked)
+      .transform(Caches.persist)
     val total = assigned.count()
     assigned.groupBy(col("cid"))
       .agg(count(lit(1)).as("n_members"),
@@ -1580,8 +1554,7 @@ object SimilarityOps {
       .toDF("round", "inertia", "n_changed")
     for (r <- 1 to KmeansIterRounds) {
       val a = assignNearest(q, cents, keepQ = true)
-        .persist().transform(graft.api.Caches.tracked)
-      a.count()
+        .transform(Caches.materialize)
       val changed =
         if (prev == null) a.agg(count(lit(1)).as("n_changed"))
         else a.select(col("vec_id"), col("cid"))
@@ -1616,8 +1589,7 @@ object SimilarityOps {
         expr("CASE WHEN m = 0D THEN transform(v, x -> 0D) " +
           "ELSE transform(v, x -> cast(floor(x * 127 / m + 0.5) as double)) END")
           .as("q"))
-      .persist().transform(graft.api.Caches.tracked)
-    q.count()
+      .transform(Caches.materialize)
     q
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.api.Caches
 import graft.functions.TextFunctions.{minhash_pieces, word_shingles}
 import graft.model.Tables
 
@@ -168,8 +169,7 @@ object TextOps {
     * branches race to compute the shingle pipeline before either
     * populates it. */
   private def candidatePairsFrom(ds: DataFrame): DataFrame = {
-    val sig = signatureFrom(ds).persist().transform(graft.api.Caches.tracked)
-    sig.count()
+    val sig = Caches.materialize(signatureFrom(ds))
     candidatePairsFromSig(sig)
   }
 
@@ -305,8 +305,7 @@ object TextOps {
     shingles(spark, sfDir, 3).select(col("sh")).distinct().count()
 
   def ngramNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    val s3 = shingles(spark, sfDir, 3).distinct().persist().transform(graft.api.Caches.tracked)
-    s3.count()
+    val s3 = Caches.materialize(shingles(spark, sfDir, 3).distinct())
     val firstOwner = s3.groupBy(col("sh")).agg(min(col("doc_id")).as("first_doc"))
     s3.join(firstOwner, Seq("sh"))
       .groupBy(col("doc_id"))
@@ -365,8 +364,7 @@ object TextOps {
     * eagerly: the band join consumes it twice in one job). */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val isNew = col("doc_id") % 10 === 9
-    val sig = signatureFrom(docShingles(spark, sfDir)).persist().transform(graft.api.Caches.tracked)
-    sig.count()
+    val sig = Caches.materialize(signatureFrom(docShingles(spark, sfDir)))
     val bands = bandsOf(sig)
     verdictsFromBands(
       Tables.fannedDocuments(spark, sfDir).select(col("doc_id")).filter(isNew),
@@ -462,14 +460,13 @@ object TextOps {
     * while a window group on a boilerplate shingle (10⁸ docs at 100 TB)
     * is one unsplittable task. */
   private def rareBucketedShingles(spark: SparkSession, sfDir: String): DataFrame = {
-    val dsh = shinglesOf(normed(spark, sfDir), 3).distinct().persist()
-    dsh.count() // deterministic fill-before-branch (round-2 discipline)
+    // deterministic fill-before-branch (round-2 discipline)
+    val dsh = Caches.materialize(shinglesOf(normed(spark, sfDir), 3).distinct())
     val rareSh = dsh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= DecontamMaxDf).select(col("sh"))
     val rare = dsh.join(rareSh, Seq("sh"), "left_semi")
-      .withColumn("bucket", splitBucket).persist().transform(graft.api.Caches.tracked)
-    rare.count()
-    graft.api.Caches.dropTransient(dsh) // transient: dead once rare is built
+      .withColumn("bucket", splitBucket).transform(Caches.materialize)
+    Caches.dropTransient(dsh) // transient: dead once rare is built
     rare
   }
 
@@ -542,8 +539,7 @@ object TextOps {
     // ONE persisted normalized base feeds the shingle pipeline AND both
     // prefix join sides — without it the documents scan+normalization
     // runs three times per query (this file's one-base-per-query rule)
-    val base = normed(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    base.count()
+    val base = Caches.materialize(normed(spark, sfDir))
     val nb = base.select(col("doc_id"), substring(col("norm"), 1, EditPrefix).as("prefix"))
     val cand = candidatePairsFrom(docShinglesOf(base))
     cand
@@ -583,8 +579,7 @@ object TextOps {
   def jwPairs(spark: SparkSession, sfDir: String): DataFrame = {
     // one persisted normalized base for shingles + both join sides
     // (editDistancePairs' one-base-per-query discipline)
-    val base = normed(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    base.count()
+    val base = Caches.materialize(normed(spark, sfDir))
     val nb = base.select(col("doc_id"), substring(col("norm"), 1, EditPrefix).as("prefix"))
     val cand = candidatePairsFrom(docShinglesOf(base))
     import org.apache.spark.sql.GraftColumnBridge
@@ -623,8 +618,7 @@ object TextOps {
     val ss = docShingles(spark, sfDir)
       .join(Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), explode(col("sh")).as("sh")).distinct()
-      .persist().transform(graft.api.Caches.tracked)
-    ss.count()
+      .transform(Caches.materialize)
     val sizes = ss.groupBy(col("source")).agg(count(lit(1)).as("sz"))
     val inter = ss.as("a")
       .join(ss.as("b"), col("a.sh") === col("b.sh") && col("a.source") < col("b.source"))
@@ -663,8 +657,7 @@ object TextOps {
     val th = DedupSweepThresholds.toDF("threshold")
     val e = pj.crossJoin(broadcast(th))
       .filter(col("jaccard") >= col("threshold"))
-      .persist().transform(graft.api.Caches.tracked)
-    e.count()
+      .transform(Caches.materialize)
     val nPairs = e.groupBy("threshold").agg(count(lit(1)).as("np"))
     val nDocs = e.select(col("threshold"),
         explode(array(col("doc_a"), col("doc_b"))).as("d"))
@@ -703,8 +696,7 @@ object TextOps {
     * (the one-base-per-query rule). */
   private def pairOverlapWithSig(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     val ds = docShingles(spark, sfDir)
-    val sig = signatureFrom(ds).persist().transform(graft.api.Caches.tracked)
-    sig.count()
+    val sig = Caches.materialize(signatureFrom(ds))
     (sig, overlapOf(candidatePairsFromSig(sig), ds))
   }
 
@@ -812,8 +804,7 @@ object TextOps {
   def dedupGroupsIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     def isNew(c: org.apache.spark.sql.Column) = c % 10 === 9
     val cand = candidatePairsFrom(docShingles(spark, sfDir))
-      .persist().transform(graft.api.Caches.tracked)
-    cand.count()
+      .transform(Caches.materialize)
     val oldPairs = cand.filter(!isNew(col("doc_a")) && !isNew(col("doc_b")))
     val deltaPairs = cand.filter(isNew(col("doc_a")) || isNew(col("doc_b")))
     val oldLabels = GraphOps.connectedComponents(oldPairs, "doc_a", "doc_b")
@@ -1010,8 +1001,7 @@ object TextOps {
   def simhashNeardup(spark: SparkSession, sfDir: String): DataFrame = {
     // sig feeds both sides of the band self-join: persist EAGERLY
     // (mirroring candidatePairsFrom) so the token pipeline runs once
-    val sig = simhashUnsorted(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    sig.count()
+    val sig = Caches.materialize(simhashUnsorted(spark, sfDir))
     val bandCols = (0 until SimhashBands).map { b =>
       expr(s"(simhash div ${1L << (SimhashBandBits * b)}L) % ${1 << SimhashBandBits}")
     }
@@ -1094,13 +1084,11 @@ object TextOps {
     // only sort), and cand is consumed twice (dot products + the
     // pair-preserving outer join); lazily-cached either would be
     // recomputed per consuming branch
-    val base = normed(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    base.count()
-    val tf = tfOf(base).persist().transform(graft.api.Caches.tracked)
-    tf.count()
+    val base = Caches.materialize(normed(spark, sfDir))
+    val tf = Caches.materialize(tfOf(base))
     val norms = tf.groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("tf")).as("n2"))
-    val cand = candidatePairsFrom(docShinglesOf(base)).persist().transform(graft.api.Caches.tracked)
+    val cand = Caches.persist(candidatePairsFrom(docShinglesOf(base)))
     val candCount = cand.count()
     // Semi-filter the corpus-wide TF table down to docs that appear in a
     // candidate pair before the sparse-dim join: never shuffle the full
@@ -1170,8 +1158,7 @@ object TextOps {
     val cc = normed(spark, sfDir)
       .select(col("doc_id"), explode(expr("regexp_extract_all(norm, '.', 0)")).as("ch"))
       .groupBy(col("doc_id"), col("ch")).agg(count(lit(1)).as("c"))
-      .persist().transform(graft.api.Caches.tracked)
-    cc.count()
+      .transform(Caches.materialize)
     val tot = cc.groupBy(col("doc_id")).agg(sum(col("c")).as("nc"))
     val p = col("c").cast("double") / col("nc").cast("double")
     cc.join(tot, Seq("doc_id"))
@@ -1465,8 +1452,7 @@ object TextOps {
     * are ≥ 1 by construction ([[shinglesOf]]'s `greatest(…, 1)` floor;
     * `split` of an empty norm yields one empty token). */
   def repetitionStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = normed(spark, sfDir).persist().transform(graft.api.Caches.tracked)
-    base.count()
+    val base = Caches.materialize(normed(spark, sfDir))
     val g3 = shinglesOf(base, 3).groupBy(col("doc_id")).agg(
       count(lit(1)).as("n_3grams"),
       countDistinct(col("sh")).as("n_uniq_3grams"))
@@ -1602,8 +1588,7 @@ object TextOps {
     * alone. */
   private def contaminatedEvalDocs(spark: SparkSession, sfDir: String): DataFrame = {
     val g = substrWindows(spark, sfDir)
-      .persist().transform(graft.api.Caches.tracked)
-    g.count()
+      .transform(Caches.materialize)
     val lab = g.select(col("doc_id"), col("gram"))
       .withColumn("split", contamSplitOf)
     val trainGrams = lab.filter(col("split") === "train")
@@ -1702,8 +1687,7 @@ object TextOps {
     * doc_id — bounded by document length, never global. */
   def substringSpans(spark: SparkSession, sfDir: String): DataFrame = {
     val (g0, rep0) = substrKernels(spark, sfDir)
-    val g = g0.persist().transform(graft.api.Caches.tracked)
-    g.count()
+    val g = Caches.materialize(g0)
     val rep = rep0.select(col("gram"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("i"))
     g.join(rep, Seq("gram"), "left_semi")
@@ -1730,8 +1714,7 @@ object TextOps {
     * union coverage is the islands sum Σ (max−min+k) per doc. */
   def substringDedupStats(spark: SparkSession, sfDir: String): DataFrame = {
     val (g0, rep) = substrKernels(spark, sfDir)
-    val g = g0.persist().transform(graft.api.Caches.tracked)
-    g.count()
+    val g = Caches.materialize(g0)
     val removable = g.join(rep, Seq("gram"))
       .filter(col("doc_id") =!= col("fdoc"))
       .select(col("doc_id"), col("n_tokens"), col("i"))
@@ -1761,8 +1744,7 @@ object TextOps {
     * structs — bounded by document length, never global. */
   def substringDedupApply(spark: SparkSession, sfDir: String): DataFrame = {
     val (g0, rep) = substrKernels(spark, sfDir)
-    val g = g0.persist().transform(graft.api.Caches.tracked)
-    g.count()
+    val g = Caches.materialize(g0)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("i"))
     val spans = g.join(rep, Seq("gram"))
       .filter(col("doc_id") =!= col("fdoc"))
@@ -1810,18 +1792,15 @@ object TextOps {
   def pipelineFunnel(spark: SparkSession, sfDir: String): DataFrame = {
     val d0 = Tables.fannedDocuments(spark, sfDir).select(col("doc_id"), col("n_chars"),
       md5(col("text")).as("he"), md5(normCol).as("hn"))
-      .persist().transform(graft.api.Caches.tracked)
-    d0.count()
+      .transform(Caches.materialize)
     val d1 = d0.join(qualityFilter(spark, sfDir).select(col("doc_id")),
       Seq("doc_id"), "left_semi")
-      .persist().transform(graft.api.Caches.tracked)
-    d1.count()
+      .transform(Caches.materialize)
     val d2 = d1
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("he")).orderBy(col("doc_id"))))
       .filter(col("rn") === 1).drop("rn")
-      .persist().transform(graft.api.Caches.tracked)
-    d2.count()
+      .transform(Caches.materialize)
     val d3 = d2
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("hn")).orderBy(col("doc_id"))))

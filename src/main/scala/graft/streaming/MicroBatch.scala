@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.api.Caches
 import graft.io.NioLocalFs
 import graft.streaming.ConsumerPipeline.RawEvent
 
@@ -60,11 +61,11 @@ object MicroBatch {
   def startSink(input: DataFrame, queryName: String, checkpointDir: String)(
       outputs: DataFrame => Seq[(String, DataFrame)]): StreamingQuery =
     foreachBatch(input, queryName, checkpointDir) { (batch, batchId) =>
-      val b = batch.persist()
+      val b = Caches.persist(batch)
       try outputs(b).foreach { case (path, out) =>
         write(out, batchDir(path, batchId))
       }
-      finally graft.api.Caches.dropTransient(b)
+      finally Caches.dropTransient(b)
     }
 
   private def fileSystem(spark: SparkSession, path: String): FileSystem =

@@ -179,5 +179,19 @@ class CacheScopeSpec extends AnyFunSuite with SparkTest {
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
     graft.api.Caches.release(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    // builders that drop their own transient persist leave nothing behind
+    // even unscoped; kCoreOf's per-round local checkpoints are not persists
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
+    operators.GraphOps.kCoreOf(pairs)
+    val vecs = Seq((1L, Array(1.0, 0.0)), (2L, Array(0.0, 1.0)), (3L, Array(0.6, 0.8)))
+      .toDF("vec_id", "v")
+    operators.GraphAnn.trainedSeeds(vecs,
+      operators.GraphAnn.Params(m = 8, efConstruction = 48, efSearch = 64, nShards = 2))
+    graft.api.Caches.drainSweeper()
+    val kept = spark.sparkContext.getPersistentRDDs.values.filterNot(_.isCheckpointed)
+    assert(kept.isEmpty, s"unscoped builders left ${kept.size} persist(s): " +
+      kept.map(_.name).mkString(", "))
+    graft.api.Caches.release(spark)
   }
 }

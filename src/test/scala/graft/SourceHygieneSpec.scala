@@ -95,6 +95,18 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(writers == Seq("MicroBatch.scala"), s"streaming files with .write: $writers")
   }
 
+  test("only api/Caches.scala persists or unpersists a frame") {
+    // Caches.persist / materialize / dropTransient are the library's cache
+    // calls; a direct one elsewhere skips scope release or the sweeper
+    val cacheCall = "(?<!Caches)\\.persist\\(|\\.cache\\(\\)|\\.unpersist\\(|Caches\\.tracked".r
+    val callers = scalaFiles("src/main")
+      .filterNot(_.endsWith(Paths.get("api", "Caches.scala")))
+      .filter(f => cacheCall.findFirstIn(code(f)).nonEmpty)
+      .map(_.toString).sorted
+    assert(callers.isEmpty,
+      s"${callers.size} files cache frames outside Caches:\n${callers.mkString("\n")}")
+  }
+
   test("lint detects a planted NUL (self-check)") {
     // The lint predicate itself, applied to a buffer with a raw NUL —
     // guards against the check rotting into an always-green walk.
