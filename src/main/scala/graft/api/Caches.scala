@@ -7,7 +7,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Lifecycle management for query-internal caches.
@@ -38,10 +38,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     wrapper) and for the timing-isolation GC discipline the bench
   *     needs anyway.
   *
-  * Operators and streaming sinks never call `persist`, `cache` or
-  * `unpersist` themselves: [[persist]], [[materialize]] and
-  * [[dropTransient]] are the library's only cache calls, so how an
-  * intermediate is cached, filled and dropped is decided here, once.
+  * Operators and streaming sinks never call `persist`, `cache`,
+  * `unpersist` or `checkpoint` themselves: [[persist]], [[materialize]],
+  * [[checkpoint]] and [[dropTransient]] are the library's only cache
+  * calls, so how an intermediate is cached, filled, cut and dropped is
+  * decided here, once.
   *
   * == Why one sweeper thread owns every unpersist (round 11) ==
   *
@@ -146,7 +147,8 @@ object Caches {
     * and a scope whose shared blocks were already dropped simply
     * no-ops its unpersist. */
   private final class Scope(val session: SparkSession) {
-    val cached = mutable.ArrayBuffer.empty[DataFrame]
+    /** One blocking unpersist per registered cache or checkpoint. */
+    val drops = mutable.ArrayBuffer.empty[() => Unit]
     @volatile var resultPlan: LogicalPlan = _
   }
 
@@ -173,7 +175,7 @@ object Caches {
     * `Caches.persist(df)` or `df.transform(Caches.persist)`. */
   def persist(df: DataFrame): DataFrame = {
     df.persist()
-    building.get().headOption.foreach(_.cached += df)
+    building.get().headOption.foreach(_.drops += (() => df.unpersist(blocking = true)))
     df
   }
 
@@ -184,15 +186,35 @@ object Caches {
     df
   }
 
-  /** Run `build`, collecting every [[persist]] into a scope that
-    * auto-releases when an action over the returned plan completes.
+  /** Eager lineage cut for iterative builders: a reliable checkpoint when
+    * the session has a checkpoint dir (cluster deployments),
+    * executor-local otherwise (single JVM / no dir configured). The
+    * checkpoint's blocks register with the enclosing [[scoped]] build
+    * like a [[persist]], so its release drops them; outside a scope the
+    * harness [[release]] sweep does. */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val cut =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+      else df.localCheckpoint(true)
+    val rdds = cut.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+    building.get().headOption.foreach(
+      _.drops += (() => rdds.foreach(_.unpersist(blocking = true))))
+    cut
+  }
+
+  /** Run `build`, collecting every [[persist]] and [[checkpoint]] into a
+    * scope that auto-releases when an action over the returned plan
+    * completes.
     *
     * CONTRACT — one terminal action: the scope releases as soon as the
     * FIRST action whose plan contains the scope's result plan completes
     * (a `count()` wraps the result in an Aggregate, so the match must be
     * containment, not root-only). A caller running a second action on the
     * returned DataFrame still gets correct results — the plan is lazy and
-    * simply recomputes without the internal caches. Callers that need
+    * simply recomputes without the internal caches — except past a
+    * [[checkpoint]]: a released local checkpoint has no lineage left to
+    * recompute from, so a second action over such a result fails loudly
+    * (Spark's "Checkpoint block ... not found"). Callers that need
     * repeated actions at cached speed should `.persist()` the returned
     * DataFrame themselves (their persist, their lifecycle) — exactly what
     * the bench/verify harnesses' per-query single-action pattern avoids
@@ -204,7 +226,7 @@ object Caches {
     val df =
       try build
       finally building.set(building.get().tail)
-    if (scope.cached.nonEmpty) {
+    if (scope.drops.nonEmpty) {
       // recorded AFTER the build: internal cache.count() materializations
       // during the build can never match (resultPlan is still null)
       scope.resultPlan = df.queryExecution.analyzed
@@ -256,10 +278,10 @@ object Caches {
           qe.analyzed.exists(n =>
             (n eq rp) || (n.getClass == rp.getClass && n.sameResult(rp)))) {
         it.remove()
-        val toDrop = scope.cached.toList
+        val toDrop = scope.drops.toList
         onSweeperAsync {
-          toDrop.foreach { df =>
-            try df.unpersist(blocking = true)
+          toDrop.foreach { drop =>
+            try drop()
             catch { case NonFatal(_) => () }
           }
         }

@@ -95,28 +95,43 @@ object Tables {
     * physical plan and RDD); the spec reads it to check the memo. */
   private[graft] val scanPlans = new java.util.concurrent.atomic.AtomicLong()
 
+  /** The parquet files of the table at `path` and its VERSION KEY
+    * (path, total file length, newest file mtime) — one driver-side
+    * listing, no Spark job. Handles both single-file tables (as DuckDB
+    * writes them) and Spark-written dataset directories. A table
+    * rewritten at the same path — a regenerated replica, a test's temp
+    * dir — lists different file stats and so gets a new key. */
+  private def listVersion(spark: SparkSession, path: String)
+      : (Seq[org.apache.hadoop.fs.FileStatus], (String, Long, Long)) = {
+    val fsPath = new org.apache.hadoop.fs.Path(path)
+    val fs = fsPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val status = fs.getFileStatus(fsPath)
+    val files =
+      if (status.isDirectory)
+        fs.listStatus(fsPath).filter(s => s.isFile &&
+          s.getPath.getName.endsWith(".parquet")).toSeq
+      else Seq(status)
+    (files, (path, files.map(_.getLen).sum,
+      files.map(_.getModificationTime).foldLeft(0L)(math.max)))
+  }
+
+  /** Version key of table `name` under `sfDir`, as a file-name-safe
+    * `<total length>_<newest mtime>` tag: caches derived from the table
+    * key on it (with the path) so a rewrite invalidates them. */
+  private[graft] def versionTag(spark: SparkSession, sfDir: String, name: String): String = {
+    val (_, (_, len, mtime)) = listVersion(spark, s"$sfDir/$name.parquet")
+    s"${len}_$mtime"
+  }
+
   /** Exact row count from the parquet FOOTERS (driver-side metadata
-    * read, no Spark job). Handles both single-file tables (as DuckDB
-    * writes them) and Spark-written dataset directories. Memoized per
-    * (path, total file length, newest file mtime): a table rewritten at
-    * the same path — a regenerated replica, a test's temp dir — lists
-    * different file stats and is counted afresh, while an unchanged
+    * read, no Spark job), memoized per table version: an unchanged
     * table costs one file listing per call. */
   private val rowCountCache = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), ScanStats]()
   private def scanStats(spark: SparkSession, path: String): ScanStats =
     try {
-      val conf = spark.sessionState.newHadoopConf()
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      val fs = fsPath.getFileSystem(conf)
-      val status = fs.getFileStatus(fsPath)
-      val files =
-        if (status.isDirectory)
-          fs.listStatus(fsPath).filter(s => s.isFile &&
-            s.getPath.getName.endsWith(".parquet")).toSeq
-        else Seq(status)
-      val key = (path, files.map(_.getLen).sum,
-        files.map(_.getModificationTime).foldLeft(0L)(math.max))
+      val (files, key) = listVersion(spark, path)
       rowCountCache.computeIfAbsent(key, { _ =>
+        val conf = spark.sessionState.newHadoopConf()
         var total = 0L
         files.foreach { f =>
           val reader = org.apache.parquet.hadoop.ParquetFileReader.open(

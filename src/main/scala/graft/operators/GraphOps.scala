@@ -16,13 +16,6 @@ import graft.api.Caches
   */
 object GraphOps {
 
-  /** Eager lineage truncation: reliable checkpoint when the session has
-    * a checkpoint dir (cluster deployments), executor-local otherwise
-    * (single-JVM / no dir configured). */
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint(true)
-
   /** Connected components over an undirected pair list: every node that
     * appears in `pairs` labeled with the MINIMUM node id reachable from
     * it. Returns (node_id, group_id); nodes absent from `pairs` are the
@@ -55,9 +48,10 @@ object GraphOps {
     * (`spark.sparkContext.setCheckpointDir`, i.e. a real cluster where
     * executor loss under dynamic allocation would take localCheckpoint
     * blocks with it), rounds checkpoint there instead — same lineage
-    * truncation, fault-tolerant storage. Superseded checkpoint blocks
-    * are metadata-sized; the harness's per-query cache sweep
-    * (graft.api.Caches.release) reclaims them.
+    * truncation, fault-tolerant storage. Each round's cut is
+    * `graft.api.Caches.checkpoint`, so the enclosing scoped build's
+    * release drops its blocks (unscoped, the harness's per-query
+    * `Caches.release` sweep does).
     */
   /** Edge-count ceiling for the driver-local union-find fast path
     * (overridable via `spark.graft.cc.localMaxEdges`; set ≤ -1 to force
@@ -118,7 +112,7 @@ object GraphOps {
     var labels = edgesP
       .groupBy(col("dst").as("node_id"))
       .agg(min(col("src")).as("group_id"))
-      .transform(truncate)
+      .transform(Caches.checkpoint)
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 100) {
@@ -138,7 +132,7 @@ object GraphOps {
           coalesce(col("pg"), col("l.group_id")).as("group_id"))
         .join(labels.select(col("node_id"), col("group_id").as("old_group")),
           Seq("node_id"))
-        .transform(truncate)
+        .transform(Caches.checkpoint)
       changed = next.filter(col("group_id") < col("old_group")).count()
       labels = next.select(col("node_id"), col("group_id"))
       rounds += 1
@@ -472,7 +466,7 @@ object GraphOps {
         .select(col("node"), col("s.ulbl").as("nlbl"))
       labels = labels.join(best, Seq("node"), "left")
         .select(col("node"), coalesce(col("nlbl"), col("lbl")).as("lbl"))
-        .transform(truncate)
+        .transform(Caches.checkpoint)
     }
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("community_size"))
     labels.join(sizes, Seq("lbl"))
@@ -515,7 +509,7 @@ object GraphOps {
         .select(explode(array(col("doc_a"), col("doc_b"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
-      edges = truncate(edges
+      edges = Caches.checkpoint(edges
         .join(keep.select(col("node").as("ka")),
           col("doc_a") === col("ka"), "left_semi")
         .join(keep.select(col("node").as("kb")),

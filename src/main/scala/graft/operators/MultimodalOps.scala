@@ -39,6 +39,10 @@ object MultimodalOps {
   case class MediaMeta(doc_id: Long, media_type: String, n_bytes: Int,
       width: Int, height: Int, n_frames: Int)
 
+  private def deleteRec(f: java.io.File): Unit = {
+    val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRec); f.delete(); ()
+  }
+
   /** Materialize-once parquet cache for the synthesized payload tables.
     * The driver data carries no binary column, so payloads are
     * synthesized — but synthesis must not be charged to the decode path
@@ -49,37 +53,16 @@ object MultimodalOps {
     * the exact shape of a production media table. `/tmp` is volatile and
     * that is fine: a missing `_SUCCESS` marker rebuilds on demand, and
     * the bench warm-up ([[warmPayloads]]) builds them outside the timed
-    * window. */
-  /** Cheap content fingerprint of the source documents table (row count
-    * + max doc_id), folded into the cache directory name so test data
-    * REGENERATED at the same path invalidates the cache automatically —
-    * a /tmp cache keyed on path alone would silently serve payloads for
-    * a doc_id set that no longer exists. Memoized per JVM: the bench
-    * warm-up pays the one footer-stats aggregate job, timed queries hit
-    * the map; cross-JVM staleness is exactly the case the fingerprint
-    * catches (a driver that rewrites sf* data starts a fresh JVM). */
-  private val payloadFp = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook: forget memoized fingerprints, simulating the fresh JVM a
-    * driver that regenerated its test data would start — the scenario
-    * the fingerprinted cache directory exists for. */
-  private[graft] def resetPayloadFingerprints(): Unit = payloadFp.clear()
-
-  private def fingerprint(spark: SparkSession, sfDir: String): String =
-    payloadFp.computeIfAbsent(sfDir, _ => {
-      val r = Tables.documents(spark, sfDir)
-        .agg(count(lit(1)), coalesce(max(col("doc_id")), lit(-1L))).head()
-      s"${r.getLong(0)}x${r.getLong(1)}"
-    })
-
-  private def deleteRec(f: java.io.File): Unit = {
-    val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRec); f.delete(); ()
-  }
-
+    * window. The cache directory carries the documents table's version
+    * key ([[Tables.versionTag]]: total file length + newest mtime), so
+    * test data REGENERATED at the same path rebuilds the payloads — a
+    * /tmp cache keyed on path alone would silently serve payloads for a
+    * doc_id set that no longer exists. The key is one file listing, no
+    * Spark job. */
   private def payloadCached(spark: SparkSession, sfDir: String, name: String)(
       build: => DataFrame): DataFrame = {
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_") + "_" +
-      fingerprint(spark, sfDir)
+      Tables.versionTag(spark, sfDir, "documents")
     val dir = new java.io.File(
       new java.io.File(sys.props("java.io.tmpdir"), s"graft_media_$tag"), name)
     if (!new java.io.File(dir, "_SUCCESS").isFile) {

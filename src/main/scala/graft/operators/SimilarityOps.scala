@@ -42,6 +42,11 @@ object SimilarityOps {
   private def cosine(a: String, b: String): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
+  /** L2², (a·a − 2a·b + b·b) over the sequential-fold dots rounded to
+    * 6 dp — the Scala twin of the oracles' [[distSql]]. */
+  private def dist(a: String, b: String): Column =
+    round(dot(a, a) - dot(a, b) * 2.0 + dot(b, b), 6)
+
   /** Vector norms + dimension — embedding sanity stats. */
   def embedNorms(spark: SparkSession, sfDir: String): DataFrame =
     vecs(spark, sfDir).select(
@@ -51,17 +56,14 @@ object SimilarityOps {
       .orderBy("vec_id")
 
   /** Brute-force cosine top-k (k=10) against a probe vector (vec_id 0):
-    * the correctness baseline for ANN. The one-row probe side is
-    * broadcast; the scan side streams — no shuffle at all. */
-  def topkSimilarity(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = vecs(spark, sfDir)
-    val probe = e.filter(col("vec_id") === 0).select(col("v").as("p"))
-    e.crossJoin(broadcast(probe))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), round(cosine("v", "p"), 6).as("cos"))
+    * the correctness baseline for ANN — the exact search
+    * ([[exactSearch]]) at probe 0, ranked like every single-probe key by
+    * its own `orderBy.limit` (a TakeOrderedAndProject, no shuffle). */
+  def topkSimilarity(spark: SparkSession, sfDir: String): DataFrame =
+    exactSearch(vecs(spark, sfDir), Probe0, Cosine)
+      .select(col("vec_id"), col("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(10)
-  }
 
   // ------------------------------------------------------ hard negatives
   /** Anchors mined (vec_id < this) and negatives kept per anchor. */
@@ -333,14 +335,19 @@ object SimilarityOps {
       .limit(20)
   }
 
-  /** ANN index-quality evaluation: recall@5 of [[annLsh]] against the
-    * exact brute-force top-5 for the probe — the metric an embedding
-    * pipeline reports before trusting an approximate index. One row
-    * (k, hits, recall); both rankings are deterministic (fixed fold
-    * order, id tie-breaks), so the recall itself is deterministic and
-    * oracle-checkable — rare for an "approximate" component, and exactly
-    * why the engine's sign/tie rules are pinned down. */
-  /** Probe vectors swept by [[annProbeSweep]] (vec_ids 0..9).
+  // ------------------------------------------------- probe-keyed ANN search
+  /** Every ANN index below is ONE search keyed by a probe set: it returns
+    * `(probe, vec_id, score, …)` for every candidate of every probe in
+    * the set, and all of the index's keys derive from it. A single-probe
+    * key and its recall gate rank the search over [[Probe0]] with
+    * [[top5]]; a sweep ranks the search over probes 0..9 with
+    * [[perProbe]]. Either way the index's top-5 is scored against the
+    * same ranking of [[exactSearch]], the ground truth. Probe-independent
+    * work (signatures, centroids, codebooks, codes) is built once per
+    * search whatever the probe count. */
+  private val Probe0: Seq[Int] = Seq(0)
+
+  /** Probe vectors swept by the `*_probe_sweep` keys (vec_ids 0..9).
     *
     * SCALE BOUND for every recall/sweep key (r19, recorded per VERDICT
     * r18 item 9): the exact brute-force ground-truth side of each
@@ -353,179 +360,82 @@ object SimilarityOps {
     * exact top-5" means (the oracle pins the full-corpus ground truth),
     * so the corpus side deliberately stays one scan per ranking. */
   private[operators] val SweepProbes = 10
+  private val Sweep: Seq[Int] = 0 until SweepProbes
 
-  /** Multi-probe LSH recall SWEEP: recall@5 for TEN probe vectors in one
-    * query — the statistically honest form of [[annRecall]] (a
-    * single-probe recall is one Bernoulli(5) draw; its round-to-round
-    * wiggle is noise, which round-11 established empirically). One
-    * signature pass serves all probes; candidate generation is the same
-    * 22-bucket multi-probe flip set per probe, joined probe-tagged; the
-    * per-probe top-5s come from PARTITIONed rank windows instead of
-    * LIMIT (each probe's partition is candidate-sized). The exact side
-    * scores probes × corpus — 10 scans' worth, the price of ground
-    * truth in any recall audit (at 100 TB you run it on a fixed eval
-    * slice, exactly what this models). Deterministic: round-6 cosines,
-    * vec_id tie-breaks, probes with zero candidate hits still report
-    * (LEFT-join completion). */
-  def annProbeSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val nPlanes = 6
-    val e = Caches.materialize(vecs(spark, sfDir))
-    val bucketCol = (0 until nPlanes).map { p =>
-      val plane = array((0 until 64).map(d => lit(planeSign(p, d))): _*)
-      when(graft.functions.VectorFunctions.dot_product(col("v"), plane) > 0,
-        lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    val sig = e.select(col("vec_id"), bucketCol.cast("long").as("bucket"))
-      .transform(Caches.materialize)
-    val masks: Seq[Long] = 0L +: ((0 until nPlanes).map(i => 1L << i) ++
-      (0 until nPlanes).flatMap(i =>
-        (i + 1 until nPlanes).map(j => (1L << i) | (1L << j))))
-    val probeBuckets = sig.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"),
-        explode(array(masks.map(m => expr(s"bucket ^ ${m}L")): _*)).as("pb"))
-    val pvecs = e.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"), col("v").as("p"))
-    val cand = sig.join(broadcast(probeBuckets), col("bucket") === col("pb"))
-      .filter(col("vec_id") =!= col("probe"))
-      .select(col("probe"), col("vec_id"))
-    val w = Window.partitionBy(col("probe")).orderBy(col("cos").desc, col("vec_id"))
-    val ann5 = cand.join(e, Seq("vec_id")).join(broadcast(pvecs), Seq("probe"))
-      .select(col("probe"), col("vec_id"), round(cosine("v", "p"), 6).as("cos"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      .select(col("probe"), col("vec_id"))
-    val ex5 = e.crossJoin(broadcast(pvecs))
-      .filter(col("vec_id") =!= col("probe"))
-      .select(col("probe"), col("vec_id"), round(cosine("v", "p"), 6).as("cos"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      .select(col("probe"), col("vec_id"))
-    val hits = ex5.join(ann5, Seq("probe", "vec_id"), "left_semi")
-      .groupBy("probe").agg(count(lit(1)).as("h"))
-    sig.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"))
-      .join(hits, Seq("probe"), "left")
-      .select(col("probe"), coalesce(col("h"), lit(0L)).as("hits"),
-        round(coalesce(col("h"), lit(0L)).cast("double") / 5.0, 6).as("recall"))
-      .orderBy("probe")
-  }
+  /** The probe rows of `df`, its `vec_id` renamed `probe`. */
+  private def probeRows(df: DataFrame, probes: Seq[Int]): DataFrame =
+    df.filter(col("vec_id").isin(probes: _*)).withColumnRenamed("vec_id", "probe")
 
-  /** Multi-probe IVF recall sweep — [[annProbeSweep]]'s twin for the
-    * k-means-coarse-quantizer index, so the engine's two oracle-checked
-    * index types (LSH, IVF) carry the same statistically honest recall
-    * audit: recall@5 for probe vectors 0..[[SweepProbes]], each probing
-    * its own 2 nearest lists, top-5s from PARTITIONed rank windows,
-    * zero-hit probes reported. One Lloyd round + one assignment pass
-    * serve all probes; the probed fraction per probe is ~2/K of the
-    * corpus; the exact side is probes × corpus — ground truth's price,
-    * run on a fixed eval slice at 100 TB. */
-  def ivfProbeSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Caches.materialize(vecs(spark, sfDir))
-    val q = quantCodes(spark, sfDir)
-    val cents = Caches.materialize(lloydCentroids(q))
-    val assigned = assignNearest(q, cents, keepQ = false)
-      .select(col("vec_id"), col("cid"))
-    val pw = Window.partitionBy(col("probe")).orderBy(col("pdist").asc, col("cid"))
-    val probeLists = q.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"), col("q"))
-      .crossJoin(broadcast(cents))
-      .select(col("probe"), col("cid"),
-        round(dot("q", "q") - lit(2.0) * dot("q", "c") + dot("c", "c"), 6)
-          .as("pdist"))
-      .withColumn("rn", row_number().over(pw)).filter(col("rn") <= 2)
-      .select(col("probe"), col("cid"))
-    val pvecs = e.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"), col("v").as("p"))
-    val w = Window.partitionBy(col("probe")).orderBy(col("cos").desc, col("vec_id"))
-    val ivf5 = assigned.join(broadcast(probeLists), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe"))
-      .join(e, Seq("vec_id")).join(broadcast(pvecs), Seq("probe"))
-      .select(col("probe"), col("vec_id"), round(cosine("v", "p"), 6).as("cos"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      .select(col("probe"), col("vec_id"))
-    val ex5 = e.crossJoin(broadcast(pvecs))
-      .filter(col("vec_id") =!= col("probe"))
-      .select(col("probe"), col("vec_id"), round(cosine("v", "p"), 6).as("cos"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      .select(col("probe"), col("vec_id"))
-    val hits = ex5.join(ivf5, Seq("probe", "vec_id"), "left_semi")
-      .groupBy("probe").agg(count(lit(1)).as("h"))
-    q.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"))
-      .join(hits, Seq("probe"), "left")
-      .select(col("probe"), coalesce(col("h"), lit(0L)).as("hits"),
-        round(coalesce(col("h"), lit(0L)).cast("double") / 5.0, 6).as("recall"))
-      .orderBy("probe")
-  }
+  /** The probes' own vectors, `(probe, p)` — broadcast-sized. */
+  private def probeVecs(e: DataFrame, probes: Seq[Int]): DataFrame =
+    probeRows(e, probes).select(col("probe"), col("v").as("p"))
 
-  /** Multi-probe PQ (ADC) recall sweep — the third member of the sweep
-    * family ([[annProbeSweep]], [[ivfProbeSweep]]): recall@5 of the ADC
-    * scan for probes 0..[[SweepProbes]]. ONE code table and one shared
-    * codebook serve all probes; the only per-probe artifact is the LUT
-    * (probes × 4 × 8 = 320 broadcast rows); per-probe ADC sums and
-    * top-5s come from probe-keyed aggregates + partitioned rank
-    * windows. The residual composite's own sweep is
-    * [[ivfpqResProbeSweep]] (r13). Exact side and determinism as the
-    * siblings (L2², DECIMAL ADC sums, id ties). */
-  def pqProbeSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Caches.materialize(vecs(spark, sfDir))
-    val sc = subCodes(quantCodes(spark, sfDir))
-      .transform(Caches.materialize)
-    val cents = Caches.materialize(pqCentroids(sc))
-    val lut = sc.filter(col("vec_id") < SweepProbes)
-      .join(broadcast(cents), Seq("sub"))
-      .select(col("vec_id").as("probe"), col("sub"), col("cid").as("code"),
-        round(dot("sq", "sq") - lit(2.0) * dot("sq", "c") + dot("c", "c"), 6)
-          .cast(DecimalType(18, 6)).as("pd"))
-    val w = Window.partitionBy(col("probe")).orderBy(col("adist").asc, col("vec_id"))
-    val a5 = pqAssign(sc, cents)
-      .join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("probe"))
-      .groupBy(col("probe"), col("vec_id"))
-      .agg(sum(col("pd")).as("sd"))
-      .select(col("probe"), col("vec_id"), col("sd").cast("double").as("adist"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      .select(col("probe"), col("vec_id"))
-    val pvecs = e.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"), col("v").as("p"))
-    val we = Window.partitionBy(col("probe")).orderBy(col("d").asc, col("vec_id"))
-    val e5 = e.crossJoin(broadcast(pvecs))
-      .filter(col("vec_id") =!= col("probe"))
-      .select(col("probe"), col("vec_id"),
-        round(dot("v", "v") - lit(2.0) * dot("v", "p") + dot("p", "p"), 6)
-          .as("d"))
-      .withColumn("rn", row_number().over(we)).filter(col("rn") <= 5)
-      .select(col("probe"), col("vec_id"))
-    val hits = e5.join(a5, Seq("probe", "vec_id"), "left_semi")
-      .groupBy("probe").agg(count(lit(1)).as("h"))
-    e.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"))
-      .join(hits, Seq("probe"), "left")
-      .select(col("probe"), coalesce(col("h"), lit(0L)).as("hits"),
-        round(coalesce(col("h"), lit(0L)).cast("double") / 5.0, 6).as("recall"))
-      .orderBy("probe")
-  }
+  /** The top-5 of a search at the single probe [[Probe0]] under `order`,
+    * vec_id ties — a global `orderBy.limit`, planned as one
+    * TakeOrderedAndProject. */
+  private def top5(search: DataFrame, order: Column): DataFrame =
+    search.orderBy(order, col("vec_id")).limit(5)
 
-  def annRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val exact5 = topkSimilarity(spark, sfDir).limit(5).select(col("vec_id"))
-    val lsh5 = annLsh(spark, sfDir).select(col("vec_id"))
-    exact5.join(lsh5, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-      .select(lit(5).as("k"), col("hits"),
-        round(col("hits").cast("double") / 5.0, 6).as("recall"))
-  }
+  /** The first `k` rows of each probe under `order` — a probe-partitioned
+    * rank window, which Spark thins to k rows per probe before its
+    * shuffle. */
+  private def perProbe(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy(col("probe")).orderBy(order: _*)))
+      .filter(col("rn") <= k)
+      .drop("rn")
 
-  /** [[annRecall]]'s twin for the k-means IVF index: recall@5 of
-    * [[annIvf]] against the exact brute-force top-5. Reports the
-    * quality of the clustered coarse index the same way the LSH gate
-    * does — both are deterministic end-to-end (quantized assignment,
-    * pinned tie-breaks), so even this quality METRIC is
+  /** A ground-truth ranking: its output column, its round-6 score and
+    * which end is best (cosine descending, L2² ascending). */
+  private final case class Metric(name: String, score: (String, String) => Column,
+      best: Column => Column)
+  private val Cosine = Metric("cos", (a, b) => round(cosine(a, b), 6), _.desc)
+  private val L2 = Metric("d", dist, _.asc)
+
+  /** The exact brute-force search of `vs` (vec_id, v): every other
+    * vector scored under `m` against each probe — `(probe, vec_id,
+    * <m.name>)`. The probe vectors are broadcast and the corpus streams —
+    * one scan, no self-join, for any probe count. */
+  private def exactSearch(vs: DataFrame, probes: Seq[Int], m: Metric): DataFrame =
+    vs.crossJoin(broadcast(probeVecs(vs, probes)))
+      .filter(col("vec_id") =!= col("probe"))
+      .select(col("probe"), col("vec_id"), m.score("v", "p").as(m.name))
+
+  /** The recall@5 hits: the `(probe, vec_id)` rows of the exact top-5s
+    * `truth` that the index's top-5s `found` (≤ 5 rows per probe, so
+    * broadcast) also return. Both rankings break ties on vec_id and every
+    * score is a fixed-fold round-6 value, so even this quality metric is
     * oracle-checkable. */
-  def ivfRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val exact5 = topkSimilarity(spark, sfDir).limit(5).select(col("vec_id"))
-    val ivf5 = annIvf(spark, sfDir).select(col("vec_id"))
-    exact5.join(ivf5, Seq("vec_id"), "left_semi")
+  private def hits5(truth: DataFrame, found: DataFrame): DataFrame =
+    truth.join(broadcast(found.select(col("probe"), col("vec_id"))),
+      Seq("probe", "vec_id"), "left_semi")
+
+  private def recall5(hits: Column): Column = round(hits.cast("double") / 5.0, 6).as("recall")
+
+  /** A single-probe gate: recall@5 of the index's top-5 at [[Probe0]]
+    * (`search` ranked by `order`) against the exact top-5 under `m` — one
+    * `(k, hits, recall)` row, a global aggregate, so it reports even when
+    * nothing hits. */
+  private def recallGate(spark: SparkSession, sfDir: String, m: Metric,
+      search: Seq[Int] => DataFrame, order: Column): DataFrame =
+    hits5(top5(exactSearch(vecs(spark, sfDir), Probe0, m), m.best(col(m.name))),
+      top5(search(Probe0), order))
       .agg(count(lit(1)).as("hits"))
-      .select(lit(5).as("k"), col("hits"),
-        round(col("hits").cast("double") / 5.0, 6).as("recall"))
+      .select(lit(5).as("k"), col("hits"), recall5(col("hits")))
+
+  /** A sweep: [[recallGate]]'s recall@5 for each of probes 0..9 — one
+    * `(probe, hits, recall)` row per probe vector in the table, zero-hit
+    * probes LEFT-completed with 0. */
+  private def recallSweep(spark: SparkSession, sfDir: String, m: Metric,
+      search: Seq[Int] => DataFrame, order: Column): DataFrame = {
+    val e = vecs(spark, sfDir)
+    val hits = hits5(
+      perProbe(exactSearch(e, Sweep, m), 5, m.best(col(m.name)), col("vec_id")),
+      perProbe(search(Sweep), 5, order, col("vec_id")))
+    probeRows(e, Sweep).select(col("probe"))
+      .join(hits.groupBy(col("probe")).agg(count(lit(1)).as("h")), Seq("probe"), "left")
+      .select(col("probe"), coalesce(col("h"), lit(0L)).as("hits"))
+      .select(col("probe"), col("hits"), recall5(col("hits")))
+      .orderBy("probe")
   }
 
   /** Output dimensionality of the [[jlProject]] sketch. */
@@ -554,54 +464,29 @@ object SimilarityOps {
     * long (vec_id, j, proj) layout is the same explode-last presentation
     * as [[embedQuantize]]. Deterministic: fixed fold order per dot,
     * division by an exact power of two, round(…, 6). */
-  def jlProject(spark: SparkSession, sfDir: String): DataFrame = {
-    val projArr = array((0 until JlDims).map { j =>
-      val plane = array((0 until 64).map(d => lit(planeSign(JlPlaneBase + j, d))): _*)
-      round(graft.functions.VectorFunctions.dot_product(col("v"), plane) / JlScale, 6)
-    }: _*)
-    vecs(spark, sfDir)
-      .select(col("vec_id"), posexplode(projArr))
+  def jlProject(spark: SparkSession, sfDir: String): DataFrame =
+    jlVecs(spark, sfDir)
+      .select(col("vec_id"), posexplode(col("v")))
       .select(col("vec_id"), col("pos").as("j"), col("col").as("proj"))
       .orderBy("vec_id", "j")
-  }
 
-  /** Packed JL sketch (vec_id, 16-dim array) — shared by [[jlRecall]]. */
+  /** Packed JL sketch `(vec_id, v)`, `v` the 16-dim projection. */
   private def jlVecs(spark: SparkSession, sfDir: String): DataFrame = {
     val projArr = array((0 until JlDims).map { j =>
       val plane = array((0 until 64).map(d => lit(planeSign(JlPlaneBase + j, d))): _*)
       round(graft.functions.VectorFunctions.dot_product(col("v"), plane) / JlScale, 6)
     }: _*)
-    vecs(spark, sfDir).select(col("vec_id"), projArr.as("pv"))
+    vecs(spark, sfDir).select(col("vec_id"), projArr.as("v"))
   }
 
   /** [[annRecall]]'s twin for the JL sketch: recall@5 of the top-5 by
     * L2² in [[jlProject]]'s 16-dim space against the exact top-5 by L2²
     * in the original 64-dim space — JL's own target metric (it preserves
     * L2, not cosine), the same each-gate-scores-its-own-metric rule as
-    * `pq_recall`. Deterministic end-to-end (rounded coordinates, fixed
-    * fold order, id tie-breaks), so the quality metric itself
-    * oracle-checks. Both rankings are broadcast-probe scans with
-    * TakeOrderedAndProject top-5s — no shuffle of the corpus. */
-  def jlRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = vecs(spark, sfDir)
-    val probeV = e.filter(col("vec_id") === 0).select(col("v").as("p"))
-    val exact5 = e.crossJoin(broadcast(probeV))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"),
-        round(dot("v", "v") - lit(2.0) * dot("v", "p") + dot("p", "p"), 6).as("d2"))
-      .orderBy(col("d2").asc, col("vec_id")).limit(5).select("vec_id")
-    val pv = jlVecs(spark, sfDir)
-    val probeP = pv.filter(col("vec_id") === 0).select(col("pv").as("pp"))
-    val jl5 = pv.crossJoin(broadcast(probeP))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"),
-        round(dot("pv", "pv") - lit(2.0) * dot("pv", "pp") + dot("pp", "pp"), 6).as("d2"))
-      .orderBy(col("d2").asc, col("vec_id")).limit(5).select("vec_id")
-    exact5.join(jl5, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-      .select(lit(5).as("k"), col("hits"),
-        round(col("hits").cast("double") / 5.0, 6).as("recall"))
-  }
+    * `pq_recall`. The sketch's index IS an exact search, over the
+    * sketch instead of the floats. */
+  def jlRecall(spark: SparkSession, sfDir: String): DataFrame =
+    recallGate(spark, sfDir, L2, exactSearch(jlVecs(spark, sfDir), _, L2), col("d").asc)
 
   /** Symmetric int8 scalar quantization of the embedding table — the
     * 4×-storage-cut step a 100 TB embedding pipeline runs before
@@ -895,6 +780,14 @@ object SimilarityOps {
     if (Integer.parseInt(hex, 16) % 2 == 1) 1.0 else -1.0
   }
 
+  /** Hyperplanes of the LSH signature. */
+  private val LshPlanes = 6
+
+  /** The multi-probe flip masks: the probe's own bucket, its 6 one-bit
+    * and its 15 two-bit neighbors (Hamming ≤ 2, 22 buckets). */
+  private val LshMasks: Seq[Long] = 0L +: ((0 until LshPlanes).map(i => 1L << i) ++
+    (0 until LshPlanes).flatMap(i => (i + 1 until LshPlanes).map(j => (1L << i) | (1L << j))))
+
   /** Random-hyperplane LSH ANN with MULTI-PROBE: 6-bit signatures bucket
     * the vectors; the probe searches every bucket within Hamming
     * distance 2 of its own (1 + 6 + 15 = 22 probes), then re-ranks
@@ -908,28 +801,44 @@ object SimilarityOps {
     * from a bucket equi-join against the 22 broadcast probe buckets, so
     * cost stays proportional to probed-bucket occupancy. Sign decisions
     * are deterministic because the dot-product fold order is fixed. */
-  def annLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    val nPlanes = 6
+  def annLsh(spark: SparkSession, sfDir: String): DataFrame =
+    top5(lshSearch(spark, sfDir, Probe0), col("cos").desc)
+      .select(col("vec_id"), col("bucket"), col("cos"))
+
+  /** ANN index-quality evaluation: recall@5 of [[annLsh]] against the
+    * exact brute-force top-5 for the probe — the metric an embedding
+    * pipeline reports before trusting an approximate index. One row
+    * (k, hits, recall). */
+  def annRecall(spark: SparkSession, sfDir: String): DataFrame =
+    recallGate(spark, sfDir, Cosine, lshSearch(spark, sfDir, _), col("cos").desc)
+
+  /** Multi-probe LSH recall SWEEP: recall@5 for TEN probe vectors in one
+    * query — the statistically honest form of [[annRecall]] (a
+    * single-probe recall is one Bernoulli(5) draw; its round-to-round
+    * wiggle is noise, which round-11 established empirically). One
+    * signature pass serves all probes. */
+  def annProbeSweep(spark: SparkSession, sfDir: String): DataFrame =
+    recallSweep(spark, sfDir, Cosine, lshSearch(spark, sfDir, _), col("cos").desc)
+
+
+  /** The LSH search: every vector in a probe's 22 flip buckets, exactly
+    * cosine-scored — `(probe, vec_id, bucket, cos)`. */
+  private def lshSearch(spark: SparkSession, sfDir: String, probes: Seq[Int]): DataFrame = {
     val e = vecs(spark, sfDir)
-    val bucketCol = (0 until nPlanes).map { p =>
+    val bucketCol = (0 until LshPlanes).map { p =>
       val plane = array((0 until 64).map(d => lit(planeSign(p, d))): _*)
       when(graft.functions.VectorFunctions.dot_product(col("v"), plane) > 0,
         lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
     val sig = e.select(col("vec_id"), bucketCol.cast("long").as("bucket"))
-    val flips = (0 until nPlanes).map(i => 1L << i) ++
-      (0 until nPlanes).flatMap(i => (i + 1 until nPlanes).map(j => (1L << i) | (1L << j)))
-    val probeBuckets = sig.filter(col("vec_id") === 0)
-      .select(explode(array(
-        col("bucket") +: flips.map(m => expr(s"bucket ^ ${m}L")): _*)).as("pb"))
-    val probeVec = e.filter(col("vec_id") === 0).select(col("v").as("p"))
+    val probeBuckets = probeRows(sig, probes)
+      .select(col("probe"),
+        explode(array(LshMasks.map(m => expr(s"bucket ^ ${m}L")): _*)).as("pb"))
     sig.join(broadcast(probeBuckets), col("bucket") === col("pb"))
-      .filter(col("vec_id") =!= 0)
+      .filter(col("vec_id") =!= col("probe"))
       .join(e, Seq("vec_id"))
-      .crossJoin(broadcast(probeVec))
-      .select(col("vec_id"), col("bucket"), round(cosine("v", "p"), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(5)
+      .join(broadcast(probeVecs(e, probes)), Seq("probe"))
+      .select(col("probe"), col("vec_id"), col("bucket"), round(cosine("v", "p"), 6).as("cos"))
   }
 
   /** IVF with a REAL clustered coarse index: the inverted lists are the
@@ -944,32 +853,46 @@ object SimilarityOps {
     * Scale shape unchanged: corpus ⨯ broadcast(K centroids) assignment
     * with a map-side-combined min-struct (one row per vector shuffles),
     * probe the 2 nearest lists, re-rank only the probed lists. */
-  def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
+  def annIvf(spark: SparkSession, sfDir: String): DataFrame =
+    top5(ivfSearch(spark, sfDir, Probe0), col("cos").desc)
+      .select(col("vec_id"), col("cid"), col("cos"))
+
+  /** [[annRecall]]'s twin for the k-means IVF index: recall@5 of
+    * [[annIvf]] against the exact brute-force top-5. */
+  def ivfRecall(spark: SparkSession, sfDir: String): DataFrame =
+    recallGate(spark, sfDir, Cosine, ivfSearch(spark, sfDir, _), col("cos").desc)
+
+  /** 10-probe IVF recall sweep, [[annProbeSweep]]'s form for the
+    * k-means index: one Lloyd round + one assignment pass serve all
+    * probes; the probed fraction per probe is ~2/K of the corpus. */
+  def ivfProbeSweep(spark: SparkSession, sfDir: String): DataFrame =
+    recallSweep(spark, sfDir, Cosine, ivfSearch(spark, sfDir, _), col("cos").desc)
+
+
+  /** The IVF search: the members of each probe's 2 nearest k-means
+    * lists, exactly cosine-scored — `(probe, vec_id, cid, cos)`. */
+  private def ivfSearch(spark: SparkSession, sfDir: String, probes: Seq[Int]): DataFrame = {
     val e = vecs(spark, sfDir)
     val q = quantCodes(spark, sfDir)
     // K rows, consumed twice (assignment + probe-list selection);
     // recomputing would re-run the Lloyd round's corpus pass
     val cents = Caches.materialize(lloydCentroids(q))
-    val assigned = assignNearest(q, cents, keepQ = false)
-      .select(col("vec_id"), col("cid"))
-    val probeLists = q.filter(col("vec_id") === 0)
-      .crossJoin(broadcast(cents))
-      .select(col("cid"),
-        round(dot("q", "q") - lit(2.0) * dot("q", "c") + dot("c", "c"), 6)
-          .as("pdist"))
-      .orderBy(col("pdist").asc, col("cid"))
-      .limit(2)
-      .select(col("cid").as("probe_cid"))
-    val probeVec = e.filter(col("vec_id") === 0).select(col("v").as("p"))
-    assigned
-      .join(broadcast(probeLists), col("cid") === col("probe_cid"))
-      .filter(col("vec_id") =!= 0)
+    assignNearest(q, cents, keepQ = false).select(col("vec_id"), col("cid"))
+      .join(broadcast(probeLists(q, cents, probes)), Seq("cid"))
+      .filter(col("vec_id") =!= col("probe"))
       .join(e, Seq("vec_id"))
-      .crossJoin(broadcast(probeVec))
-      .select(col("vec_id"), col("cid"), round(cosine("v", "p"), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(5)
+      .join(broadcast(probeVecs(e, probes)), Seq("probe"))
+      .select(col("probe"), col("vec_id"), col("cid"), round(cosine("v", "p"), 6).as("cos"))
   }
+
+  /** Each probe's 2 nearest coarse lists by L2² in code space, cid
+    * ties — `(probe, cid)`. */
+  private def probeLists(q: DataFrame, cents: DataFrame, probes: Seq[Int]): DataFrame =
+    perProbe(
+      probeRows(q, probes).crossJoin(broadcast(cents))
+        .select(col("probe"), col("cid"), dist("q", "c").as("pdist")),
+      2, col("pdist").asc, col("cid"))
+      .select(col("probe"), col("cid"))
 
   /** K-means cluster count and the Lloyd-round budget (1 update +
     * reassignment). Both sides of the oracle are generated from these. */
@@ -1058,14 +981,14 @@ object SimilarityOps {
   private[graft] val PqSubDim = 16
   private[graft] val PqK = 8
 
-  /** Per-(vector, subspace) whole-number sub-codes: each 64-dim quantized
-    * code split into 4 contiguous 16-dim slices. One narrow projection +
-    * explode — 4 rows per vector, no shuffle. */
-  private def subCodes(q: DataFrame): DataFrame =
-    q.select(col("vec_id"),
-        explode(sequence(lit(0), lit(PqSubspaces - 1))).as("sub"), col("q"))
-      .select(col("vec_id"), col("sub"),
-        expr(s"slice(q, sub * $PqSubDim + 1, $PqSubDim)").as("sq"))
+  /** Per-(vector, subspace) whole-number sub-codes: each 64-dim code `q`
+    * split into 4 contiguous 16-dim slices, `q`'s other columns kept. One
+    * narrow projection + explode — 4 rows per vector, no shuffle. */
+  private def subCodes(q: DataFrame): DataFrame = {
+    val keys = q.columns.filterNot(_ == "q").map(col)
+    q.select(keys :+ explode(sequence(lit(0), lit(PqSubspaces - 1))).as("sub") :+ col("q"): _*)
+      .select(keys :+ col("sub") :+ expr(s"slice(q, sub * $PqSubDim + 1, $PqSubDim)").as("sq"): _*)
+  }
 
   /** One exact Lloyd round per sub-codebook (the k-means discipline at
     * subspace granularity): centroids seeded from the first [[PqK]]
@@ -1076,9 +999,7 @@ object SimilarityOps {
     val c0 = sc.filter(col("vec_id") < PqK)
       .select(col("sub"), col("vec_id").as("cid"), col("sq").as("c"))
     val assigned = sc.join(broadcast(c0), Seq("sub"))
-      .select(col("vec_id"), col("sub"), col("sq"), col("cid"),
-        round(dot("sq", "sq") - lit(2.0) * dot("sq", "c") + dot("c", "c"), 6)
-          .as("dist"))
+      .select(col("vec_id"), col("sub"), col("sq"), col("cid"), dist("sq", "c").as("dist"))
       .groupBy(col("vec_id"), col("sub"))
       .agg(min(struct(col("dist"), col("cid"), col("sq"))).as("s"))
       .select(col("sub"), col("s.cid").as("cid"), col("s.sq").as("sq"))
@@ -1091,18 +1012,17 @@ object SimilarityOps {
   }
 
   /** Nearest sub-centroid per (vector, subspace) under the once-updated
-    * codebooks — the PQ code assignment. Broadcast join + map-side-
-    * combined min-struct: one 4-row-per-vector shuffle, like
-    * [[assignNearest]]. */
-  private def pqAssign(sc: DataFrame, cents: DataFrame): DataFrame =
+    * codebooks — the PQ code assignment, `sc`'s columns but `sq` kept as
+    * keys + `(code, dist)`. Broadcast join + map-side-combined
+    * min-struct: one 4-row-per-vector shuffle, like [[assignNearest]]. */
+  private def pqAssign(sc: DataFrame, cents: DataFrame): DataFrame = {
+    val keys = sc.columns.filterNot(_ == "sq").map(col)
     sc.join(broadcast(cents), Seq("sub"))
-      .select(col("vec_id"), col("sub"), col("cid"),
-        round(dot("sq", "sq") - lit(2.0) * dot("sq", "c") + dot("c", "c"), 6)
-          .as("dist"))
-      .groupBy(col("vec_id"), col("sub"))
+      .select(keys ++ Seq(col("cid"), dist("sq", "c").as("dist")): _*)
+      .groupBy(keys: _*)
       .agg(min(struct(col("dist"), col("cid"))).as("s"))
-      .select(col("vec_id"), col("sub"), col("s.cid").as("code"),
-        col("s.dist").as("dist"))
+      .select(keys ++ Seq(col("s.cid").as("code"), col("s.dist").as("dist")): _*)
+  }
 
   /** Product quantization (Jégou et al., the IVF-PQ storage half): each
     * vector compressed to [[PqSubspaces]] sub-codebook ids, one row per
@@ -1133,37 +1053,19 @@ object SimilarityOps {
     * The per-sub distances are rounded to 6 dp and summed as
     * DECIMAL(18,6), so the 4-term sum is exact and shuffle-order
     * independent; the single decimal→double cast is correctly rounded in
-    * both engines. Scale shape: the LUT is 32 rows (broadcast); scoring
-    * is one equi-join on (sub, code) + a map-side-combined 4-row-per-key
-    * sum; top-k is TakeOrderedAndProject. */
-  def annPq(spark: SparkSession, sfDir: String): DataFrame = {
-    val sc = subCodes(quantCodes(spark, sfDir))
-      .transform(Caches.materialize)
-    // 32 rows, consumed twice (code assignment + probe LUT); recomputing
-    // would re-run the Lloyd round's corpus pass
-    val cents = Caches.materialize(pqCentroids(sc))
-    val lut = sc.filter(col("vec_id") === 0)
-      .join(broadcast(cents), Seq("sub"))
-      .select(col("sub"), col("cid").as("code"),
-        round(dot("sq", "sq") - lit(2.0) * dot("sq", "c") + dot("c", "c"), 6)
-          .cast(DecimalType(18, 6)).as("pd"))
-    pqAssign(sc, cents)
-      .filter(col("vec_id") =!= 0)
-      .join(broadcast(lut), Seq("sub", "code"))
-      .groupBy(col("vec_id"))
-      .agg(sum(col("pd")).as("sd"))
-      .select(col("vec_id"), col("sd").cast("double").as("adist"))
-      .orderBy(col("adist").asc, col("vec_id"))
-      .limit(5)
-  }
+    * both engines. Scale shape: the LUT is 32 rows per probe
+    * (broadcast); scoring is one equi-join on (sub, code) + a
+    * map-side-combined 4-row-per-key sum; top-k is
+    * TakeOrderedAndProject. */
+  def annPq(spark: SparkSession, sfDir: String): DataFrame =
+    top5(pqSearch(spark, sfDir, Probe0), col("adist").asc)
+      .select(col("vec_id"), col("adist"))
 
   /** The PQ family's quality gate, completing the recall triptych next
     * to [[annRecall]] (LSH) and [[ivfRecall]] (IVF): recall@5 of the
     * ADC ranking against the exact full-vector L2² top-5 — the metric
     * ADC approximates (the cosine gates compare against cosine; each
-    * gate scores its index against its own target metric). Like its
-    * siblings, every tie and rounding step is pinned, so even this
-    * quality metric is deterministic and oracle-checkable.
+    * gate scores its index against its own target metric).
     *
     * Expect a LOW number here on this corpus (0.2 at sf0.01): 4×8
     * codebooks give 4096 distinct representable points, and the
@@ -1171,25 +1073,49 @@ object SimilarityOps {
     * exploit — exactly the situation the gate exists to expose. A real
     * deployment raises K (256 per sub is standard), encodes RESIDUALS
     * against IVF centroids, and re-ranks ADC survivors with the exact
-    * floats ([[annIvf]]'s re-rank stage) — this gate is the measurement
-    * that tells you when those steps are needed. */
-  def pqRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = vecs(spark, sfDir)
-    val probe = e.filter(col("vec_id") === 0).select(col("v").as("p"))
-    val exact5 = e.crossJoin(broadcast(probe))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"),
-        round(dot("v", "v") - lit(2.0) * dot("v", "p") + dot("p", "p"), 6)
-          .as("d"))
-      .orderBy(col("d").asc, col("vec_id"))
-      .limit(5)
-      .select(col("vec_id"))
-    val adc5 = annPq(spark, sfDir).select(col("vec_id"))
-    exact5.join(adc5, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-      .select(lit(5).as("k"), col("hits"),
-        round(col("hits").cast("double") / 5.0, 6).as("recall"))
+    * floats ([[annIvfPqRes]]) — this gate is the measurement that tells
+    * you when those steps are needed. */
+  def pqRecall(spark: SparkSession, sfDir: String): DataFrame =
+    recallGate(spark, sfDir, L2, pqSearch(spark, sfDir, _), col("adist").asc)
+
+  /** 10-probe PQ (ADC) recall sweep: ONE code table and one shared
+    * codebook serve all probes; the only per-probe artifact is the LUT
+    * (probes × 4 × 8 = 320 broadcast rows). */
+  def pqProbeSweep(spark: SparkSession, sfDir: String): DataFrame =
+    recallSweep(spark, sfDir, L2, pqSearch(spark, sfDir, _), col("adist").asc)
+
+
+  /** The PQ search: every vector ADC-scored against each probe's LUT —
+    * `(probe, vec_id, adist)`. */
+  private def pqSearch(spark: SparkSession, sfDir: String, probes: Seq[Int]): DataFrame = {
+    val sc = subCodes(quantCodes(spark, sfDir))
+      .transform(Caches.materialize)
+    // 32 rows, consumed twice (code assignment + probe LUT); recomputing
+    // would re-run the Lloyd round's corpus pass
+    val cents = Caches.materialize(pqCentroids(sc))
+    adcScore(pqAssign(sc, cents), adcLut(probeRows(sc, probes), cents), Seq("sub", "code"))
   }
+
+  /** ADC lookup table: each probe-side sub-vector `sq`'s L2² to every
+    * sub-centroid of its subspace as DECIMAL(18,6), so every 4-term ADC
+    * sum is exact — `probeSub`'s keys (the probe, for residual codes also
+    * the list) + `(sub, code, pd)`. */
+  private def adcLut(probeSub: DataFrame, cents: DataFrame): DataFrame = {
+    val keys = probeSub.columns.filterNot(Set("sub", "sq")).map(col)
+    probeSub.join(broadcast(cents), Seq("sub"))
+      .select(keys ++ Seq(col("sub"), col("cid").as("code"),
+        dist("sq", "c").cast(DecimalType(18, 6)).as("pd")): _*)
+  }
+
+  /** ADC distances: each vector's code rows joined to the LUT on `keys`
+    * and summed per (probe, vector), the probe itself excluded —
+    * `(probe, vec_id, adist)`. */
+  private def adcScore(codes: DataFrame, lut: DataFrame, keys: Seq[String]): DataFrame =
+    codes.join(broadcast(lut), keys)
+      .filter(col("vec_id") =!= col("probe"))
+      .groupBy(col("probe"), col("vec_id"))
+      .agg(sum(col("pd")).as("sd"))
+      .select(col("probe"), col("vec_id"), col("sd").cast("double").as("adist"))
 
   /** IVF-ADC composite — the production ANN read path at 100 TB,
     * assembled from the pieces this file already proves out: the probe
@@ -1202,57 +1128,40 @@ object SimilarityOps {
     * CODE table, and exact distance is computed for exactly 10 vectors.
     *
     * This is Jégou et al.'s IVFADC minus residual encoding (codes here
-    * quantize the vectors themselves; encoding the residual against the
-    * list centroid — finer codes, same machinery — is the documented
-    * upgrade, per [[pqRecall]]'s scaladoc). Deterministic end-to-end:
+    * quantize the vectors themselves; [[annIvfPqRes]] encodes the
+    * residual against the list centroid). Deterministic end-to-end:
     * quantized assignment, round-6 decimal ADC sums, id tie-breaks.
     * The query key and its oracle pin probe vector 0. */
   def annIvfPq(spark: SparkSession, sfDir: String): DataFrame =
-    annIvfPqAt(spark, sfDir, 0)
+    top5(annIvfPqAt(spark, sfDir, Probe0), col("d").asc)
+      .select(col("vec_id"), col("d"))
 
-  /** [[annIvfPq]] for probe vector `probe` (the multi-probe recall sweep
-    * in OperatorSpec varies it). */
+  /** The IVF-ADC search over `probes` — `(probe, vec_id, d)` for each
+    * probe's re-ranked shortlist. */
   private[graft] def annIvfPqAt(spark: SparkSession, sfDir: String,
-      probe: Int): DataFrame = {
+      probes: Seq[Int]): DataFrame = {
     val q = quantCodes(spark, sfDir)
     val sc = Caches.materialize(subCodes(q))
     val cents = Caches.materialize(lloydCentroids(q))
     val pqc = Caches.materialize(pqCentroids(sc))
-    val probeLists = q.filter(col("vec_id") === probe)
-      .crossJoin(broadcast(cents))
-      .select(col("cid"),
-        round(dot("q", "q") - lit(2.0) * dot("q", "c") + dot("c", "c"), 6)
-          .as("pdist"))
-      .orderBy(col("pdist").asc, col("cid"))
-      .limit(2)
-      .select(col("cid").as("probe_cid"))
-    // members of the probed lists — the only vectors ADC ever scores
+    // members of each probe's lists — the only vectors ADC ever scores
     val probed = assignNearest(q, cents, keepQ = false)
-      .join(broadcast(probeLists), col("cid") === col("probe_cid"))
-      .select(col("vec_id"))
-    val lut = sc.filter(col("vec_id") === probe)
-      .join(broadcast(pqc), Seq("sub"))
-      .select(col("sub"), col("cid").as("code"),
-        round(dot("sq", "sq") - lit(2.0) * dot("sq", "c") + dot("c", "c"), 6)
-          .cast(DecimalType(18, 6)).as("pd"))
-    val shortlist = pqAssign(sc, pqc)
-      .filter(col("vec_id") =!= probe)
-      .join(probed, Seq("vec_id"), "left_semi")
-      .join(broadcast(lut), Seq("sub", "code"))
-      .groupBy(col("vec_id"))
-      .agg(sum(col("pd")).as("sd"))
-      .select(col("vec_id"), col("sd").cast("double").as("adist"))
-      .orderBy(col("adist").asc, col("vec_id"))
-      .limit(10)
+      .join(broadcast(probeLists(q, cents, probes)), Seq("cid"))
+      .select(col("vec_id"), col("probe"))
+    rerank(spark, sfDir, probes,
+      adcScore(pqAssign(sc, pqc).join(probed, Seq("vec_id")),
+        adcLut(probeRows(sc, probes), pqc), Seq("probe", "sub", "code")))
+  }
+
+  /** IVF-ADC's last two stages, per probe: the top-10 ADC shortlist,
+    * re-scored by exact full-vector L2² — `(probe, vec_id, d)`. */
+  private def rerank(spark: SparkSession, sfDir: String, probes: Seq[Int],
+      adc: DataFrame): DataFrame = {
     val e = vecs(spark, sfDir)
-    val probeVec = e.filter(col("vec_id") === probe).select(col("v").as("p"))
-    shortlist.join(e, Seq("vec_id"))
-      .crossJoin(broadcast(probeVec))
-      .select(col("vec_id"),
-        round(dot("v", "v") - lit(2.0) * dot("v", "p") + dot("p", "p"), 6)
-          .as("d"))
-      .orderBy(col("d").asc, col("vec_id"))
-      .limit(5)
+    perProbe(adc, 10, col("adist").asc, col("vec_id"))
+      .join(e, Seq("vec_id"))
+      .join(broadcast(probeVecs(e, probes)), Seq("probe"))
+      .select(col("probe"), col("vec_id"), dist("v", "p").as("d"))
   }
 
   /** Residuals (code − list centroid) are scaled by this and rounded to
@@ -1263,20 +1172,23 @@ object SimilarityOps {
     * magnitudes stay ≤ ~2^14 per dim, far inside double-exact range. */
   private[graft] val ResScale = 64
 
-  /** Whole-number scaled residual sub-codes: each vector's residual
-    * against ITS OWN IVF list centroid, split into [[PqSubspaces]]
-    * slices — (vec_id, cid = the vector's list, sub, sq). The input to
-    * residual codebook training and encoding. */
+  /** `df`'s whole-number scaled residual sub-codes: the code `q` minus
+    * the list centroid `c`, split into [[PqSubspaces]] slices — `df`'s
+    * other columns + `(sub, sq)`. */
+  private def residualSubs(df: DataFrame): DataFrame = {
+    val keys = df.columns.filterNot(Set("q", "c")).map(col)
+    subCodes(df.select(keys :+ expr(s"transform(arrays_zip(q, c), " +
+      s"s -> cast(floor((s.q - s.c) * $ResScale + 0.5) as double))").as("q"): _*))
+  }
+
+  /** Every vector's residual sub-codes against ITS OWN IVF list —
+    * `(plist, vec_id, sub, sq)`, the input to residual codebook
+    * training and encoding. */
   private def resSubCodes(q: DataFrame, cents: DataFrame): DataFrame =
-    assignNearest(q, cents, keepQ = true)
+    residualSubs(assignNearest(q, cents, keepQ = true)
+      .select(col("vec_id"), col("cid"), col("q"))
       .join(broadcast(cents), Seq("cid"))
-      .select(col("vec_id"), col("cid"),
-        expr(s"transform(arrays_zip(q, c), " +
-          s"s -> cast(floor((s.q - s.c) * $ResScale + 0.5) as double))").as("rq"))
-      .select(col("vec_id"), col("cid"),
-        explode(sequence(lit(0), lit(PqSubspaces - 1))).as("sub"), col("rq"))
-      .select(col("vec_id"), col("cid"), col("sub"),
-        expr(s"slice(rq, sub * $PqSubDim + 1, $PqSubDim)").as("sq"))
+      .withColumnRenamed("cid", "plist"))
 
   /** Residual-encoded IVF-ADC — the full Jégou et al. IVFADC, closing
     * [[annIvfPq]]'s documented gap: PQ codebooks are trained on and
@@ -1287,220 +1199,57 @@ object SimilarityOps {
     * is what FAISS-style production indexes ship. The probe computes one
     * LUT PER PROBED LIST (its residual differs per list) — 2×4×8 rows,
     * still broadcast-sized; members of the probed lists are the only
-    * vectors that get residual-encoded for scoring, the top-10 ADC
-    * shortlist re-ranks by exact full-vector L2² to a final top-5
-    * (identical read path to [[annIvfPq]], so the two recalls compare
-    * like for like — OperatorSpec asserts residual ≥ plain on this
-    * corpus).
+    * vectors that get residual-encoded for scoring, and the shortlist
+    * re-rank is [[annIvfPq]]'s, so the two recalls compare like for
+    * like (OperatorSpec asserts residual ≥ plain on this corpus).
     *
     * Determinism: whole-number residuals ([[ResScale]]) keep every sum
     * exact; distances are round-6; DECIMAL(18,6) ADC sums; id
-    * tie-breaks throughout. Scale shape: coarse centroids, residual
-    * codebooks, probe LUT and probe-list ids are all broadcast
-    * (8 + 32 + 64 + 2 rows); the corpus is scanned once for residual
-    * encoding, only ~probes/K of it reaches the ADC join; exact
-    * distance touches exactly 10 vectors. The query key and its oracle
-    * pin probe vector 0. */
+    * tie-breaks throughout. The query key and its oracle pin probe
+    * vector 0. */
   def annIvfPqRes(spark: SparkSession, sfDir: String): DataFrame =
-    annIvfPqResAt(spark, sfDir, 0)
+    top5(annIvfPqResAt(spark, sfDir, Probe0), col("d").asc)
+      .select(col("vec_id"), col("d"))
 
-  /** [[annIvfPqRes]] for probe vector `probe`. */
+  /** The residual IVF-ADC search over `probes` — `(probe, vec_id, d)`.
+    * Coarse centroids, residual sub-codes and residual codebooks are
+    * built once for all probes, and code assignment covers the UNION of
+    * probed lists once: a vector's code depends on its own list, never
+    * on the probe. */
   private[graft] def annIvfPqResAt(spark: SparkSession, sfDir: String,
-      probe: Int): DataFrame = {
+      probes: Seq[Int]): DataFrame = {
     val q = quantCodes(spark, sfDir)
     val cents = Caches.materialize(lloydCentroids(q))
     val rsc = Caches.materialize(resSubCodes(q, cents))
     // residual codebooks train on the FULL corpus's residual sub-codes
-    // (cid dropped — pqCentroids is list-agnostic; one codebook set
-    // shared across lists, the standard IVFADC memory/quality trade)
-    val rcents = pqCentroids(rsc.select(col("vec_id"), col("sub"), col("sq")))
-      .withColumnRenamed("cid", "rcid")
-      .transform(Caches.materialize)
-    val probeLists = q.filter(col("vec_id") === probe)
-      .crossJoin(broadcast(cents))
-      .select(col("cid"),
-        round(dot("q", "q") - lit(2.0) * dot("q", "c") + dot("c", "c"), 6)
-          .as("pdist"))
-      .orderBy(col("pdist").asc, col("cid"))
-      .limit(2)
-      .select(col("cid").as("probe_cid"))
-    // the probe's residual is PER LIST: one LUT row set per probed list
-    val plCents = cents.join(broadcast(probeLists), col("cid") === col("probe_cid"))
-      .select(col("cid").as("plist"), col("c"))
-    val probeSub = q.filter(col("vec_id") === probe)
-      .crossJoin(broadcast(plCents))
-      .select(col("plist"),
-        expr(s"transform(arrays_zip(q, c), " +
-          s"s -> cast(floor((s.q - s.c) * $ResScale + 0.5) as double))").as("rq"))
-      .select(col("plist"),
-        explode(sequence(lit(0), lit(PqSubspaces - 1))).as("sub"), col("rq"))
-      .select(col("plist"), col("sub"),
-        expr(s"slice(rq, sub * $PqSubDim + 1, $PqSubDim)").as("psq"))
-    val lut = probeSub.join(broadcast(rcents), Seq("sub"))
-      .select(col("plist"), col("sub"), col("rcid").as("code"),
-        round(dot("psq", "psq") - lit(2.0) * dot("psq", "c") + dot("c", "c"), 6)
-          .cast(DecimalType(18, 6)).as("pd"))
-    // encode ONLY the probed lists' members, carrying each vector's list
-    val codes = rsc
-      .join(broadcast(probeLists), col("cid") === col("probe_cid"))
-      .join(broadcast(rcents), Seq("sub"))
-      .select(col("vec_id"), col("cid").as("plist"), col("sub"), col("rcid"),
-        round(dot("sq", "sq") - lit(2.0) * dot("sq", "c") + dot("c", "c"), 6)
-          .as("dist"))
-      .groupBy(col("vec_id"), col("plist"), col("sub"))
-      .agg(min(struct(col("dist"), col("rcid"))).as("s"))
-      .select(col("vec_id"), col("plist"), col("sub"), col("s.rcid").as("code"))
-    val shortlist = codes
-      .filter(col("vec_id") =!= probe)
-      .join(broadcast(lut), Seq("plist", "sub", "code"))
-      .groupBy(col("vec_id"))
-      .agg(sum(col("pd")).as("sd"))
-      .select(col("vec_id"), col("sd").cast("double").as("adist"))
-      .orderBy(col("adist").asc, col("vec_id"))
-      .limit(10)
-    val e = vecs(spark, sfDir)
-    val probeVec = e.filter(col("vec_id") === probe).select(col("v").as("p"))
-    shortlist.join(e, Seq("vec_id"))
-      .crossJoin(broadcast(probeVec))
-      .select(col("vec_id"),
-        round(dot("v", "v") - lit(2.0) * dot("v", "p") + dot("p", "p"), 6)
-          .as("d"))
-      .orderBy(col("d").asc, col("vec_id"))
-      .limit(5)
+    // (list dropped — one codebook set shared across lists, the standard
+    // IVFADC memory/quality trade)
+    val rcents = Caches.materialize(pqCentroids(rsc.select(col("vec_id"), col("sub"), col("sq"))))
+    val lists = probeLists(q, cents, probes).withColumnRenamed("cid", "plist")
+    // the probe's residual is PER LIST: one LUT row set per (probe, list)
+    val probeSub = residualSubs(probeRows(q, probes)
+      .join(broadcast(lists), Seq("probe"))
+      .join(broadcast(cents.withColumnRenamed("cid", "plist")), Seq("plist")))
+    val codes = pqAssign(rsc.join(broadcast(lists), Seq("plist"), "left_semi"), rcents)
+    // a code row meets only the probes that probed its list
+    rerank(spark, sfDir, probes,
+      adcScore(codes, adcLut(probeSub, rcents), Seq("plist", "sub", "code")))
   }
 
   /** Recall@5 of the residual IVF-ADC composite against the exact
     * full-vector L2² top-5 — the quality gate that justifies residual
     * encoding (OperatorSpec additionally asserts it is ≥ the
-    * non-residual [[annIvfPq]] composite's recall on the same corpus,
-    * the verdict's acceptance bar). Deterministic like its siblings. */
-  def ivfpqResRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val probe = 0
-    val e = vecs(spark, sfDir)
-    val probeV = e.filter(col("vec_id") === probe).select(col("v").as("p"))
-    val exact5 = e.crossJoin(broadcast(probeV))
-      .filter(col("vec_id") =!= probe)
-      .select(col("vec_id"),
-        round(dot("v", "v") - lit(2.0) * dot("v", "p") + dot("p", "p"), 6)
-          .as("d"))
-      .orderBy(col("d").asc, col("vec_id"))
-      .limit(5)
-      .select(col("vec_id"))
-    val res5 = annIvfPqRes(spark, sfDir).select(col("vec_id"))
-    exact5.join(res5, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-      .select(lit(5).as("k"), col("hits"),
-        round(col("hits").cast("double") / 5.0, 6).as("recall"))
-  }
+    * non-residual [[annIvfPq]] composite's recall on the same corpus). */
+  def ivfpqResRecall(spark: SparkSession, sfDir: String): DataFrame =
+    recallGate(spark, sfDir, L2, annIvfPqResAt(spark, sfDir, _), col("d").asc)
 
-  /** Multi-probe recall sweep for the RESIDUAL IVF-ADC composite — the
-    * fourth and final member of the sweep family
-    * ([[annProbeSweep]]/[[ivfProbeSweep]]/[[pqProbeSweep]]), closing the
-    * round-12 gap: the index a deployer would actually ship
-    * ([[annIvfPqRes]]) now carries the same statistically honest
-    * 10-probe recall audit as its siblings. recall@5 per probe
-    * 0..[[SweepProbes]] of the full residual read path: per-probe
-    * 2-nearest coarse lists → per-(probe, list) residual LUT (the
-    * per-list LUT is residual encoding's defining intricacy — probes ×
-    * 2 × [[PqSubspaces]] × [[PqK]] = 640 broadcast rows) → ADC scan of
-    * probed-list members only → top-10 shortlist per probe → exact
-    * full-vector re-rank to top-5.
-    *
-    * Shared-work shape: coarse centroids, residual sub-codes, and the
-    * residual codebooks are computed ONCE for all probes; residual code
-    * assignment covers the UNION of probed lists once (a vector's code
-    * does not depend on the probe — only on its own list residual), so
-    * sweeping 10 probes costs one extra broadcast LUT join over the
-    * single-probe path, not 10 pipelines. The exact side is probes ×
-    * corpus — ground truth's price, run on a fixed eval slice at
-    * 100 TB. Deterministic like the siblings (whole-number residuals,
-    * round-6 distances, DECIMAL ADC sums, id ties); zero-hit probes
-    * report via LEFT-join completion; probe 0 reproduces
-    * [[ivfpqResRecall]] exactly (spec-pinned). */
-  def ivfpqResProbeSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Caches.materialize(vecs(spark, sfDir))
-    val q = quantCodes(spark, sfDir)
-    val cents = Caches.materialize(lloydCentroids(q))
-    val rsc = Caches.materialize(resSubCodes(q, cents))
-    val rcents = pqCentroids(rsc.select(col("vec_id"), col("sub"), col("sq")))
-      .withColumnRenamed("cid", "rcid")
-      .transform(Caches.materialize)
-    // per-probe 2 nearest coarse lists (rank window, the ivfProbeSweep move)
-    val pw = Window.partitionBy(col("probe")).orderBy(col("pdist").asc, col("cid"))
-    val probeLists = q.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"), col("q"))
-      .crossJoin(broadcast(cents))
-      .select(col("probe"), col("cid"),
-        round(dot("q", "q") - lit(2.0) * dot("q", "c") + dot("c", "c"), 6)
-          .as("pdist"))
-      .withColumn("rn", row_number().over(pw)).filter(col("rn") <= 2)
-      .select(col("probe"), col("cid").as("plist"))
-    // per-(probe, probed list) residual LUT — the probe's residual
-    // differs per list, so the LUT carries both keys
-    val plCents = cents.join(broadcast(probeLists), col("cid") === col("plist"))
-      .select(col("probe"), col("plist"), col("c"))
-    val probeSub = q.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"), col("q"))
-      .join(broadcast(plCents), Seq("probe"))
-      .select(col("probe"), col("plist"),
-        expr(s"transform(arrays_zip(q, c), " +
-          s"s -> cast(floor((s.q - s.c) * $ResScale + 0.5) as double))").as("rq"))
-      .select(col("probe"), col("plist"),
-        explode(sequence(lit(0), lit(PqSubspaces - 1))).as("sub"), col("rq"))
-      .select(col("probe"), col("plist"), col("sub"),
-        expr(s"slice(rq, sub * $PqSubDim + 1, $PqSubDim)").as("psq"))
-    val lut = probeSub.join(broadcast(rcents), Seq("sub"))
-      .select(col("probe"), col("plist"), col("sub"), col("rcid").as("code"),
-        round(dot("psq", "psq") - lit(2.0) * dot("psq", "c") + dot("c", "c"), 6)
-          .cast(DecimalType(18, 6)).as("pd"))
-    // residual-encode members of the UNION of probed lists, ONCE —
-    // code assignment is probe-independent
-    val probedLists = probeLists.select(col("plist")).distinct()
-    val codes = rsc
-      .join(broadcast(probedLists), col("cid") === col("plist"))
-      .join(broadcast(rcents), Seq("sub"))
-      .select(col("vec_id"), col("plist"), col("sub"), col("rcid"),
-        round(dot("sq", "sq") - lit(2.0) * dot("sq", "c") + dot("c", "c"), 6)
-          .as("dist"))
-      .groupBy(col("vec_id"), col("plist"), col("sub"))
-      .agg(min(struct(col("dist"), col("rcid"))).as("s"))
-      .select(col("vec_id"), col("plist"), col("sub"), col("s.rcid").as("code"))
-    // per-probe ADC shortlist (a code row meets only the probes that
-    // probed its list via the (plist, sub, code) join keys)
-    val sw = Window.partitionBy(col("probe")).orderBy(col("adist").asc, col("vec_id"))
-    val short10 = codes.join(broadcast(lut), Seq("plist", "sub", "code"))
-      .filter(col("vec_id") =!= col("probe"))
-      .groupBy(col("probe"), col("vec_id"))
-      .agg(sum(col("pd")).as("sd"))
-      .select(col("probe"), col("vec_id"), col("sd").cast("double").as("adist"))
-      .withColumn("rn", row_number().over(sw)).filter(col("rn") <= 10)
-      .select(col("probe"), col("vec_id"))
-    // exact full-vector re-rank of each probe's shortlist to top-5
-    val pvecs = e.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"), col("v").as("p"))
-    val we = Window.partitionBy(col("probe")).orderBy(col("d").asc, col("vec_id"))
-    val res5 = short10.join(e, Seq("vec_id")).join(broadcast(pvecs), Seq("probe"))
-      .select(col("probe"), col("vec_id"),
-        round(dot("v", "v") - lit(2.0) * dot("v", "p") + dot("p", "p"), 6)
-          .as("d"))
-      .withColumn("rn", row_number().over(we)).filter(col("rn") <= 5)
-      .select(col("probe"), col("vec_id"))
-    val ex5 = e.crossJoin(broadcast(pvecs))
-      .filter(col("vec_id") =!= col("probe"))
-      .select(col("probe"), col("vec_id"),
-        round(dot("v", "v") - lit(2.0) * dot("v", "p") + dot("p", "p"), 6)
-          .as("d"))
-      .withColumn("rn", row_number().over(we)).filter(col("rn") <= 5)
-      .select(col("probe"), col("vec_id"))
-    val hits = ex5.join(res5, Seq("probe", "vec_id"), "left_semi")
-      .groupBy("probe").agg(count(lit(1)).as("h"))
-    e.filter(col("vec_id") < SweepProbes)
-      .select(col("vec_id").as("probe"))
-      .join(hits, Seq("probe"), "left")
-      .select(col("probe"), coalesce(col("h"), lit(0L)).as("hits"),
-        round(coalesce(col("h"), lit(0L)).cast("double") / 5.0, 6).as("recall"))
-      .orderBy("probe")
-  }
+  /** 10-probe recall sweep for the RESIDUAL IVF-ADC composite — the
+    * index a deployer would actually ship carries the same audit as the
+    * LSH, IVF and PQ indexes. The per-(probe, list) LUT is probes × 2 ×
+    * [[PqSubspaces]] × [[PqK]] = 640 broadcast rows. */
+  def ivfpqResProbeSweep(spark: SparkSession, sfDir: String): DataFrame =
+    recallSweep(spark, sfDir, L2, annIvfPqResAt(spark, sfDir, _), col("d").asc)
+
 
   /** IVF index-build diagnostics: per-list member count, corpus share,
     * and mean assignment distance under the once-updated k-means
@@ -1602,9 +1351,7 @@ object SimilarityOps {
   private def assignNearest(q: DataFrame, cents: DataFrame,
       keepQ: Boolean): DataFrame = {
     val scored = q.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("q"), col("cid"),
-        round(dot("q", "q") - lit(2.0) * dot("q", "c") + dot("c", "c"), 6)
-          .as("dist"))
+      .select(col("vec_id"), col("q"), col("cid"), dist("q", "c").as("dist"))
     val key =
       if (keepQ) struct(col("dist"), col("cid"), col("q"))
       else struct(col("dist"), col("cid"))
@@ -1640,9 +1387,7 @@ object SimilarityOps {
     val q = quantCodes(spark, sfDir)
     val cents = lloydCentroids(q)
     val scored = q.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"),
-        round(dot("q", "q") - lit(2.0) * dot("q", "c") + dot("c", "c"), 6)
-          .as("dist"))
+      .select(col("vec_id"), col("cid"), dist("q", "c").as("dist"))
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist").asc, col("cid"))
     val per = scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 2)

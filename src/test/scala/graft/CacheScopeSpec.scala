@@ -180,7 +180,8 @@ class CacheScopeSpec extends AnyFunSuite with SparkTest {
     graft.api.Caches.release(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     // builders that drop their own transient persist leave nothing behind
-    // even unscoped; kCoreOf's per-round local checkpoints are not persists
+    // even unscoped; kCoreOf's per-round checkpoints wait for the harness
+    // release here (the scoped case below drops them with the scope)
     import spark.implicits._
     val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
     operators.GraphOps.kCoreOf(pairs)
@@ -193,5 +194,29 @@ class CacheScopeSpec extends AnyFunSuite with SparkTest {
     assert(kept.isEmpty, s"unscoped builders left ${kept.size} persist(s): " +
       kept.map(_.name).mkString(", "))
     graft.api.Caches.release(spark)
+  }
+
+  test("a scoped build's per-round checkpoints release with its scope") {
+    graft.api.Caches.release(spark)
+    // executor-local checkpoints are the ones that hold blocks; a suite
+    // sharing this context may have set a reliable checkpoint dir
+    val sc = spark.sparkContext
+    val reliableDir = sc.getCheckpointDir
+    sc.setCheckpointDir(null)
+    try {
+      import spark.implicits._
+      val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
+      val df = graft.api.Caches.scoped(spark)(operators.GraphOps.kCoreOf(pairs))
+      assert(sc.getPersistentRDDs.values.exists(_.isCheckpointed),
+        "kCoreOf checkpointed nothing — the test would be vacuous")
+      df.collect() // the terminal action — NO global sweep follows
+      // listener delivery is async: wait for the scope, then its removals
+      val deadline = System.currentTimeMillis() + 30000
+      while (graft.api.Caches.pendingScopes > 0 &&
+          System.currentTimeMillis() < deadline) Thread.sleep(25)
+      graft.api.Caches.drainSweeper()
+      val left = sc.getPersistentRDDs.values.filter(_.isCheckpointed)
+      assert(left.isEmpty, s"scoped kCoreOf left ${left.size} checkpoint RDD(s)")
+    } finally reliableDir.foreach(sc.setCheckpointDir)
   }
 }

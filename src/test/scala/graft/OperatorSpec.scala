@@ -340,17 +340,15 @@ class OperatorSpec extends AnyFunSuite with SparkTest {
   test("payload cache invalidates when documents are regenerated at the same path") {
     // ADVICE r9: a /tmp payload cache keyed on the sfDir path alone
     // silently served stale payloads after the driver regenerated test
-    // data. The cache dir now carries a (row count, max doc_id)
-    // fingerprint; a fresh JVM (simulated via the reset hook — the
-    // fingerprint is memoized per JVM by design) must rebuild.
+    // data. The cache dir carries the documents table's version key
+    // (total file length + newest mtime), so a rewrite at the same path
+    // rebuilds — in this JVM as in the next.
     val dir = tempDir("mm_fp")
     graft.model.Tables.documents(spark, sf).limit(20)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    MultimodalOps.resetPayloadFingerprints()
     assert(MultimodalOps.mediaTable(spark, dir).toDF().count() == 20)
     graft.model.Tables.documents(spark, sf).limit(35)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    MultimodalOps.resetPayloadFingerprints() // next driver run = next JVM
     assert(MultimodalOps.mediaTable(spark, dir).toDF().count() == 35,
       "stale payload cache served after the documents table changed")
   }
@@ -1231,32 +1229,35 @@ class OperatorSpec extends AnyFunSuite with SparkTest {
     // probe is far too noisy to compare index quality (probe 0 happens
     // to favor the plain path at sf0.01 while the 10-probe means favor
     // residual at BOTH SFs — measured during development), so the gate
-    // averages the composite recall@5 over 10 probes.
+    // averages the composite recall@5 over 10 probes, each index's ten
+    // probes coming from ONE probe-keyed search.
     import org.apache.spark.sql.functions._
     def dotE(a: String, b: String) =
       expr(s"aggregate(zip_with($a, $b, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
     val probes = 0 until 10
-    var plainSum = 0.0
-    var resSum = 0.0
-    for (p <- probes) {
-      val e = graft.model.Tables.embeddings(spark, sf)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("v"))
-      val pv = e.filter(col("vec_id") === p).select(col("v").as("p"))
-      val exact5 = e.crossJoin(broadcast(pv)).filter(col("vec_id") =!= p)
-        .select(col("vec_id"),
-          round(dotE("v", "v") - lit(2.0) * dotE("v", "p") + dotE("p", "p"), 6).as("d"))
-        .orderBy(col("d").asc, col("vec_id")).limit(5)
-        .collect().map(_.getLong(0)).toSet
-      val plain5 = SimilarityOps.annIvfPqAt(spark, sf, p)
-        .collect().map(_.getLong(0)).toSet
-      val res5 = SimilarityOps.annIvfPqResAt(spark, sf, p)
-        .collect().map(_.getLong(0)).toSet
-      plainSum += exact5.intersect(plain5).size / 5.0
-      resSum += exact5.intersect(res5).size / 5.0
-      graft.api.Caches.release(spark)
-    }
-    val (plainMean, resMean) = (plainSum / probes.size, resSum / probes.size)
+    // per-probe top-5 by (d, vec_id) of (probe, vec_id, d) rows, ranked
+    // on the driver
+    def top5(rows: Array[org.apache.spark.sql.Row]): Map[Long, Set[Long]] =
+      rows.map(r => (r.getAs[Long]("probe"), r.getAs[Long]("vec_id"), r.getAs[Double]("d")))
+        .groupBy(_._1).map { case (p, rs) =>
+          p -> rs.sortBy(r => (r._3, r._2)).take(5).map(_._2).toSet }
+    val e = graft.model.Tables.embeddings(spark, sf)
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> cast(x as double))").as("v"))
+    val pv = e.filter(col("vec_id") < probes.size)
+      .select(col("vec_id").as("probe"), col("v").as("p"))
+    val exact5 = top5(e.crossJoin(broadcast(pv)).filter(col("vec_id") =!= col("probe"))
+      .select(col("probe"), col("vec_id"),
+        round(dotE("v", "v") - lit(2.0) * dotE("v", "p") + dotE("p", "p"), 6).as("d"))
+      .collect())
+    assert(exact5.keySet == probes.map(_.toLong).toSet)
+    val plain5 = top5(SimilarityOps.annIvfPqAt(spark, sf, probes).collect())
+    val res5 = top5(SimilarityOps.annIvfPqResAt(spark, sf, probes).collect())
+    graft.api.Caches.release(spark)
+    def meanRecall(found: Map[Long, Set[Long]]): Double =
+      exact5.map { case (p, ex) => ex.intersect(found.getOrElse(p, Set.empty)).size / 5.0 }
+        .sum / probes.size
+    val (plainMean, resMean) = (meanRecall(plain5), meanRecall(res5))
     info(f"mean recall@5 over ${probes.size} probes: plain=$plainMean%.2f residual=$resMean%.2f")
     assert(resMean >= plainMean,
       f"residual encoding must not LOWER mean recall: residual=$resMean%.2f < plain=$plainMean%.2f")
@@ -1308,58 +1309,44 @@ class OperatorSpec extends AnyFunSuite with SparkTest {
     assert(pmis.zip(pmis.tail).forall { case (x, y) => x >= y }, "not pmi-ordered")
   }
 
-  test("ann_probe_sweep reports every probe and contains the single-probe recall") {
-    val rows = SimilarityOps.annProbeSweep(spark, sf).collect()
+  // the sweep contract shared by every *_probe_sweep key: probes 0..9,
+  // recall = hits/5, and probe 0's row IS the single-probe gate's value —
+  // the sweep subsumes it, the other nine rows are what de-noises it.
+  // Returns the mean sweep recall.
+  private def checkProbeSweep(
+      sweep: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
+      gate: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    val rows = sweep(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("probe")).toSeq == (0L until 10L))
     rows.foreach { r =>
       val (h, rec) = (r.getAs[Long]("hits"), r.getAs[Double]("recall"))
-      assert(h >= 0 && h <= 5 && math.abs(rec - h / 5.0) < 1e-9)
+      assert(h >= 0 && h <= 5 && math.abs(rec - h / 5.0) < 1e-9, s"$r")
     }
-    // probe 0's row IS the single-probe ann_recall value — the sweep
-    // subsumes it, the other nine rows are what de-noises it
-    val single = SimilarityOps.annRecall(spark, sf).head().getAs[Long]("hits")
+    val single = gate(spark, sf).head().getAs[Long]("hits")
     assert(rows.find(_.getAs[Long]("probe") == 0L).get.getAs[Long]("hits") == single)
+    rows.map(_.getAs[Double]("recall")).sum / rows.length
+  }
+
+  test("ann_probe_sweep reports every probe and contains the single-probe recall") {
+    val mean = checkProbeSweep(SimilarityOps.annProbeSweep, SimilarityOps.annRecall)
     // a 22-bucket multi-probe LSH at 6 planes should beat chance easily
     // ON AVERAGE even when individual probes hit 0 (the noise the sweep
     // exists to average out)
-    val mean = rows.map(_.getAs[Double]("recall")).sum / rows.length
     assert(mean > 0.2, s"mean sweep recall $mean suspiciously low")
   }
 
   test("ivf_probe_sweep mirrors the LSH sweep contract and its probe 0 matches ivf_recall") {
-    val rows = SimilarityOps.ivfProbeSweep(spark, sf).collect()
-    assert(rows.map(_.getAs[Long]("probe")).toSeq == (0L until 10L))
-    rows.foreach { r =>
-      val (h, rec) = (r.getAs[Long]("hits"), r.getAs[Double]("recall"))
-      assert(h >= 0 && h <= 5 && math.abs(rec - h / 5.0) < 1e-9)
-    }
-    val single = SimilarityOps.ivfRecall(spark, sf).head().getAs[Long]("hits")
-    assert(rows.find(_.getAs[Long]("probe") == 0L).get.getAs[Long]("hits") == single)
+    checkProbeSweep(SimilarityOps.ivfProbeSweep, SimilarityOps.ivfRecall)
   }
 
   test("pq_probe_sweep mirrors the sweep contract and its probe 0 matches pq_recall") {
-    val rows = SimilarityOps.pqProbeSweep(spark, sf).collect()
-    assert(rows.map(_.getAs[Long]("probe")).toSeq == (0L until 10L))
-    rows.foreach { r =>
-      val (h, rec) = (r.getAs[Long]("hits"), r.getAs[Double]("recall"))
-      assert(h >= 0 && h <= 5 && math.abs(rec - h / 5.0) < 1e-9)
-    }
-    val single = SimilarityOps.pqRecall(spark, sf).head().getAs[Long]("hits")
-    assert(rows.find(_.getAs[Long]("probe") == 0L).get.getAs[Long]("hits") == single)
+    checkProbeSweep(SimilarityOps.pqProbeSweep, SimilarityOps.pqRecall)
   }
 
   test("ivfpq_res_probe_sweep mirrors the sweep contract and probe 0 matches ivfpq_res_recall") {
-    val rows = SimilarityOps.ivfpqResProbeSweep(spark, sf).collect()
-    assert(rows.map(_.getAs[Long]("probe")).toSeq == (0L until 10L))
-    rows.foreach { r =>
-      val (h, rec) = (r.getAs[Long]("hits"), r.getAs[Double]("recall"))
-      assert(h >= 0 && h <= 5 && math.abs(rec - h / 5.0) < 1e-9)
-    }
-    // probe 0's row IS the single-probe ivfpq_res_recall value — the
-    // full residual read path (per-list LUTs, probed-list encode, exact
-    // re-rank) reproduced under the sweep's windowed form
-    val single = SimilarityOps.ivfpqResRecall(spark, sf).head().getAs[Long]("hits")
-    assert(rows.find(_.getAs[Long]("probe") == 0L).get.getAs[Long]("hits") == single)
+    // the full residual read path (per-list LUTs, probed-list encode,
+    // exact re-rank) reproduced under the sweep's windowed form
+    checkProbeSweep(SimilarityOps.ivfpqResProbeSweep, SimilarityOps.ivfpqResRecall)
   }
 
   test("embed_standardize and embed_outlier produce genuinely standardized scores") {

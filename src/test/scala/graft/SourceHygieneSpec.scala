@@ -96,9 +96,11 @@ class SourceHygieneSpec extends AnyFunSuite {
   }
 
   test("only api/Caches.scala persists or unpersists a frame") {
-    // Caches.persist / materialize / dropTransient are the library's cache
-    // calls; a direct one elsewhere skips scope release or the sweeper
-    val cacheCall = "(?<!Caches)\\.persist\\(|\\.cache\\(\\)|\\.unpersist\\(|Caches\\.tracked".r
+    // Caches.persist / materialize / checkpoint / dropTransient are the
+    // library's cache calls; a direct one elsewhere skips scope release
+    // or the sweeper
+    val cacheCall = ("(?<!Caches)\\.persist\\(|\\.cache\\(\\)|\\.unpersist\\(|Caches\\.tracked|" +
+      "(?<!Caches)\\.checkpoint\\(|\\.localCheckpoint\\(").r
     val callers = scalaFiles("src/main")
       .filterNot(_.endsWith(Paths.get("api", "Caches.scala")))
       .filter(f => cacheCall.findFirstIn(code(f)).nonEmpty)

@@ -11,9 +11,14 @@ named after the driver tables in <sfDir>, and compares:
   - values: hash over all cells with columns sorted by name, rows in
             result order, and a second order-insensitive hash (rows sorted)
 Exit non-zero if any query mismatches.
+
+With SPARK_GRAFT_ONLY set (the comma-separated allowlist graft.Verify
+reads), only the listed keys are linted and compared, so a subset dump
+checks exactly those keys; a listed key with no output still fails.
 """
 import json
 import math
+import os
 import sys
 from pathlib import Path
 
@@ -266,6 +271,10 @@ def main():
         print(f"ERROR: input tables missing from {sf_dir}: {missing}")
         sys.exit(2)
     oracle = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
+    only = os.environ.get("SPARK_GRAFT_ONLY")
+    only = {k.strip() for k in only.split(",")} if only is not None else None
+    if only is not None:
+        oracle = {k: v for k, v in oracle.items() if k in only}
     # base-table column names are passthrough for the double lint: both
     # engines read the identical parquet bits, no arithmetic to drift
     passthrough = set()
@@ -285,6 +294,8 @@ def main():
     for qdir in sorted(Path(out_dir).iterdir()):
         if not qdir.is_dir() or qdir.name in oracle:
             continue
+        if only is not None and qdir.name not in only:
+            continue
         try:
             n = con.execute(
                 f"SELECT count(*) FROM read_parquet('{qdir}/*.parquet')").fetchone()[0]
@@ -295,6 +306,12 @@ def main():
         except Exception as e:
             failures.append((qdir.name, f"rows-only read failed: {e}"))
             print(f"FAIL {qdir.name}: rows-only read failed: {e}")
+    # a listed key that is neither an oracle key nor a dumped query
+    unmatched = sorted(k for k in (only or set()) - set(oracle)
+                       if not (Path(out_dir) / k).is_dir())
+    for name in unmatched:
+        failures.append((name, "no spark output"))
+        print(f"FAIL {name}: spark output missing")
     for name, sql in sorted(oracle.items()):
         qdir = Path(out_dir) / name
         if not qdir.exists():
@@ -357,7 +374,8 @@ def main():
         else:
             print(f"ok   {name} ({len(s_rows)} rows)")
 
-    print(f"\n{len(oracle) - len(failures)}/{len(oracle)} queries match")
+    total = len(oracle) + len(unmatched)
+    print(f"\n{total - len(failures)}/{total} queries match")
     sys.exit(1 if failures else 0)
 
 
